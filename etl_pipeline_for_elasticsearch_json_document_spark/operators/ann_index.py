@@ -20,9 +20,8 @@ version V resolve LAST-WRITE-WINS per vec_id (max version) over the
 latest snapshot ≤ V plus later deltas — exactly the replace-upsert merge
 the r8 store applied eagerly. ``ivf_build`` commits v=0 as a snapshot;
 :func:`compact_ann_index` folds the delta tail into a new snapshot;
-:func:`prune_ann_versions` GCs behind the snapshot floor (the generic
-``index_maintenance.prune_versions`` is for full-snapshot stores and
-would delete load-bearing deltas here). Centroids are k rows, rewritten
+:func:`prune_ann_versions` GCs behind the snapshot floor (deltas above
+it stay load-bearing whatever their age). Centroids are k rows, rewritten
 per version (frozen within a lineage — refits go to a fresh path).
 Partitioning is by vec_id, NOT cid: a replace can move a vector between
 cells, and resolution must see every version of a vec_id in one
@@ -585,10 +584,7 @@ def write_ivf_layout(
     ).join(postings.select("vec_id", "cid"), "vec_id")
     laid.write.mode("overwrite").partitionBy("cid").parquet(layout_path)
     pin_file = os.path.join(layout_path, "_STORE_VERSION")
-    tmp = pin_file + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(v))
-    os.replace(tmp, pin_file)  # atomic, like the catch-up paths' pins
+    delta_store.atomic_write(pin_file, str(v))
     return v
 
 
@@ -781,10 +777,7 @@ def append_ivf_layout(
         laid.write.mode("append").partitionBy("cid").parquet(layout_path)
     finally:
         batch.unpersist()
-    tmp = pin_file + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(latest))
-    os.replace(tmp, pin_file)
+    delta_store.atomic_write(pin_file, str(latest))
     return latest
 
 
@@ -952,10 +945,7 @@ def upsert_ivf_layout(
     finally:
         batch.unpersist()
         shutil.rmtree(staging, ignore_errors=True)
-    tmp = pin_file + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(latest))
-    os.replace(tmp, pin_file)
+    delta_store.atomic_write(pin_file, str(latest))
     return latest
 
 
@@ -996,10 +986,7 @@ def repin_ivf_layout(index_path: str, layout_path: str) -> int:
     while advanced + 1 in versions and _is_snapshot(index_path, advanced + 1):
         advanced += 1
     if advanced != pinned:
-        tmp = pin_file + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(advanced))
-        os.replace(tmp, pin_file)
+        delta_store.atomic_write(pin_file, str(advanced))
     return advanced
 
 

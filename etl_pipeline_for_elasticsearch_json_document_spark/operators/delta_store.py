@@ -45,13 +45,15 @@ idempotent resolve makes that overlap harmless by construction.
 
 Local-FS note: directory listing stands in for the manifest a real
 object store would keep; the swap is mechanical (list → manifest read)
-and changes no protocol step.
+and changes no protocol step. Until then a URI-scheme path is refused
+at every entry point instead of reading as an empty store.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 from typing import Callable
 
@@ -65,6 +67,29 @@ DEFAULT_PARTITIONS = 64
 _META = "_META"
 _COMMITTED = "_COMMITTED"
 _SNAPSHOT = "_SNAPSHOT"
+_LEDGER = "_ledger"
+
+
+def _local(path: str) -> str:
+    """``path`` if it names the local filesystem; a URI-scheme path
+    (``s3a://``, ``hdfs://``, ``file:/``) raises. Every store step is a
+    POSIX call, so such a path would otherwise list as an empty store
+    and commit into a local ``s3a:/...`` directory."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.\-]*:/", os.fspath(path)):
+        raise ValueError(
+            f"{path!r} is not a local path: delta stores run on the local "
+            "filesystem only"
+        )
+    return path
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` via tmp + rename, so a torn write
+    is never visible."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def load_or_init_meta(path: str, n_partitions: int) -> dict:
@@ -74,29 +99,18 @@ def load_or_init_meta(path: str, n_partitions: int) -> dict:
     ONE sanctioned way to change P is :func:`compact`'s re-shard (every
     retained row lands in the new snapshot, so no old-P dir is ever read
     under the new hash)."""
-    mp = os.path.join(path, _META)
+    mp = os.path.join(_local(path), _META)
     if os.path.exists(mp):
         with open(mp) as f:
             return json.load(f)
     os.makedirs(path, exist_ok=True)
     meta = {"n_partitions": int(n_partitions)}
-    tmp = mp + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, mp)
+    atomic_write(mp, json.dumps(meta))
     return meta
 
 
-def _store_meta(path: str, n_partitions: int) -> None:
-    mp = os.path.join(path, _META)
-    tmp = mp + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"n_partitions": int(n_partitions)}, f)
-    os.replace(tmp, mp)
-
-
 def committed_versions(path: str) -> list[int]:
-    if not os.path.isdir(path):
+    if not os.path.isdir(_local(path)):
         return []
     out = []
     for name in os.listdir(path):
@@ -105,6 +119,27 @@ def committed_versions(path: str) -> list[int]:
         ):
             out.append(int(name[2:]))
     return sorted(out)
+
+
+def pin_base(path: str, lineage: str, batch_id: int) -> tuple[str, int]:
+    """The marker-first ledger step every store stream takes before any
+    store write: the marker ``_ledger/<lineage>-<batch_id>`` pins the
+    BASE version the micro-batch reads (the latest committed version, -1
+    for an empty store), written atomically. A replay finds the marker
+    and gets the same base back, so it re-reads the same resolution.
+    Returns ``(marker, base_v)``; pass the marker to
+    :func:`commit_pinned_delta`. Scoping by checkpoint lineage matters
+    because epoch ids restart at 0 under a fresh checkpoint."""
+    ledger = os.path.join(_local(path), _LEDGER)
+    os.makedirs(ledger, exist_ok=True)
+    marker = os.path.join(ledger, f"{lineage}-{batch_id}")
+    if os.path.exists(marker):
+        with open(marker) as f:
+            return marker, int(f.read())
+    versions = committed_versions(path)
+    base_v = versions[-1] if versions else -1
+    atomic_write(marker, str(base_v))
+    return marker, base_v
 
 
 def is_snapshot(path: str, version: int) -> bool:
@@ -371,15 +406,9 @@ def commit_pinned_delta(path: str, marker_path: str, base_v: int, write) -> int:
             # the version: re-pin past the tail (recorded FIRST so a
             # second replay re-uses the same recovery version)
             target = committed[-1] + 1
-            tmp = rec + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(target))
-            os.replace(tmp, rec)
+            atomic_write(rec, str(target))
             continue
-        tmp = att + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(target))
-        os.replace(tmp, att)  # ownership intent BEFORE the commit
+        atomic_write(att, str(target))  # ownership intent BEFORE the commit
         write(target)
         return target
 
@@ -432,7 +461,7 @@ def compact(
     # new-P snapshot under an old-P meta, so every pruned read falls
     # back to whole-snapshot scans SILENTLY until an operator notices.
     if n_partitions is not None and P != meta["n_partitions"]:
-        _store_meta(path, P)
+        atomic_write(os.path.join(path, _META), json.dumps({"n_partitions": P}))
     try:
         write_version(resolved, path, next_v, key_cols, P, snapshot=True)
     finally:
@@ -443,7 +472,7 @@ def compact(
 def pending_pins(path: str) -> list[int]:
     """Base versions a crash replay may still re-read, from the ledger
     markers under ``path/_ledger/`` (the marker-first exactly-once
-    protocol all four stream clients share).
+    protocol all four stream clients share through :func:`pin_base`).
 
     Micro-batches within one checkpoint lineage commit SEQUENTIALLY —
     batch N+1 only starts after batch N's epoch committed to the
@@ -456,7 +485,7 @@ def pending_pins(path: str) -> list[int]:
     re-classify). The pin clears when the lineage's next batch writes
     its marker, or when a decommissioned lineage's markers are removed
     via :func:`gc_ledger`."""
-    ledger = os.path.join(path, "_ledger")
+    ledger = os.path.join(path, _LEDGER)
     if not os.path.isdir(ledger):
         return []
     latest: dict[str, tuple[int, int]] = {}  # lineage -> (batch_id, base_v)
@@ -486,7 +515,7 @@ def gc_ledger(path: str, lineage: str | None = None) -> list[str]:
     Without: remove only SPENT markers (every non-highest batch per
     lineage — sequential epochs make them unreplayable), bounding ledger
     growth while keeping every live pin. Returns removed filenames."""
-    ledger = os.path.join(path, "_ledger")
+    ledger = os.path.join(path, _LEDGER)
     if not os.path.isdir(ledger):
         return []
     by_lineage: dict[str, list[tuple[int, str]]] = {}

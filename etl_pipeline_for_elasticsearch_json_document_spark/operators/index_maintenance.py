@@ -20,11 +20,7 @@ idempotent-resolve contract delta_store documents. Classification
 prunes its index read to the hash partitions the batch's fingerprints
 touch, so the read side is batch-bounded too. :func:`compact_fingerprint_index`
 folds the tail into a snapshot; :func:`prune_fingerprint_versions` GCs
-behind the snapshot floor (the generic :func:`prune_versions` below is
-for FULL-snapshot-per-version stores — since the r10 rollup migration
-every maintenance store here is a delta store, so it remains only as
-the generic utility for self-contained version dirs — and would corrupt
-a delta store by deleting load-bearing deltas).
+behind the snapshot floor (deltas above it stay load-bearing).
 
 Scale: the index is (16-byte fp, first_doc_id) — orders of magnitude
 smaller than the corpus; the update is one pruned left join of the
@@ -32,8 +28,6 @@ batch against it plus an O(|batch|) delta commit.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,45 +40,6 @@ _KEYS = ["fp"]
 
 #: shared delta-store default; production stores size P explicitly
 DEFAULT_PARTITIONS = delta_store.DEFAULT_PARTITIONS
-
-
-def _committed_versions(index_path: str, marker: str = "_COMMITTED") -> list[int]:
-    if not os.path.isdir(index_path):
-        return []
-    out = []
-    for name in os.listdir(index_path):
-        if name.startswith("v=") and os.path.exists(
-            os.path.join(index_path, name, marker)
-        ):
-            out.append(int(name[2:]))
-    return sorted(out)
-
-
-def prune_versions(path: str, keep_last: int = 2, marker: str = "_SUCCESS") -> list[int]:
-    """Garbage-collect old committed versions of a FULL-SNAPSHOT ``v=N/``
-    store (one whose every version is self-contained, e.g. an exported
-    model/manifest dir), keeping the newest ``keep_last`` — oldest-first
-    deletion is safe only then. Do NOT point this at a delta store
-    (the fingerprint index, the LSH bucket index, the ANN postings, and
-    since r10 the rollups) — their old versions are load-bearing for
-    later resolutions; use the per-store snapshot-floor GCs
-    (:func:`prune_fingerprint_versions`, ``lsh_ingest.prune_lsh_versions``,
-    ``ann_index.prune_ann_versions``, ``rollup_maintenance.prune_rollup_versions``).
-
-    ``keep_last`` must be >= 2 for streams: a crash-replayed micro-batch
-    re-reads its BASE version, which is one behind the latest. Dangling
-    uncommitted dirs are untouched (the next writer overwrites them).
-    Returns the removed version numbers.
-    """
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    versions = _committed_versions(path, marker)
-    doomed = versions[:-keep_last]
-    for v in doomed:
-        shutil.rmtree(os.path.join(path, f"v={v}"))
-    return doomed
 
 
 def _resolve(union: DataFrame) -> DataFrame:

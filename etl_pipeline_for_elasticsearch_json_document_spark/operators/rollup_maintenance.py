@@ -28,10 +28,8 @@ LSH store had one family earlier).
   amplification.
 - **GC** — :func:`prune_rollup_versions` is the SNAPSHOT-FLOOR rule
   (:func:`delta_store.prune`): deltas newer than the floor are
-  load-bearing regardless of age. The generic full-snapshot
-  ``prune_versions`` this module re-exported through r9 would delete
-  load-bearing deltas and silently corrupt totals — it no longer
-  applies here.
+  load-bearing regardless of age; deleting them would silently corrupt
+  totals.
 - **Exactly-once** — merge-aggregate resolution is NOT idempotent
   under row duplication (a sum double-counts where the fingerprint
   store's min-resolve would shrug), so the rollup leans on the
@@ -80,10 +78,6 @@ _ROLLUP_META = "_ROLLUP"
 
 #: shared delta-store default; production stores size P explicitly
 DEFAULT_PARTITIONS = delta_store.DEFAULT_PARTITIONS
-
-
-def _committed_versions(rollup_path: str) -> list[int]:
-    return delta_store.committed_versions(rollup_path)
 
 
 def _validate_measures(measures: dict[str, tuple]) -> None:
@@ -230,7 +224,7 @@ def read_rollup(
     """The rollup resolved AS OF ``version`` (latest by default), or
     None before the first update. One merge-aggregate over the latest
     snapshot + delta tail — compact to bound the tail."""
-    versions = _committed_versions(rollup_path)
+    versions = delta_store.committed_versions(rollup_path)
     if not versions:
         _guard_pre_protocol_layout(rollup_path)
         return None
@@ -268,7 +262,7 @@ def update_rollup(
     # validate BEFORE the sidecar persists: a bad kind must not create a
     # definition the first CORRECT caller is then refused against
     _validate_measures(measures)
-    versions = _committed_versions(rollup_path)
+    versions = delta_store.committed_versions(rollup_path)
     if not versions:
         _guard_pre_protocol_layout(rollup_path)
     _load_or_init_rollup_meta(rollup_path, keys, measures)

@@ -142,29 +142,6 @@ def _sig(path: Path) -> tuple:
     return tuple("*" if isinstance(s, int) else s for s in path)
 
 
-def _expr_for_path(schema: StructType, path: Path) -> tuple[Column, DataType]:
-    """Resolve a path of steps to a Column expression + its DataType."""
-    expr: Optional[Column] = None
-    dt: DataType = schema
-    for step in path:
-        if isinstance(step, int):
-            assert isinstance(dt, ArrayType)
-            # F.get (not [i]): NULL for out-of-range indices — ragged arrays
-            # must yield the '' default, and ANSI mode makes [i] throw.
-            expr = F.get(expr, step)
-            dt = dt.elementType
-        elif isinstance(dt, StructType):
-            expr = F.col(f"`{step}`") if expr is None else expr.getField(step)
-            dt = dt[step].dataType
-        elif isinstance(dt, MapType):
-            expr = expr.getItem(step)
-            dt = dt.valueType
-        else:  # pragma: no cover - resolution never walks past a leaf
-            raise ValueError(f"cannot walk into {dt} at {step!r} in {path}")
-    assert expr is not None
-    return expr, dt
-
-
 def _walk_struct(st: StructType, path: Path, prefix: str, depth: int, ctx: _Ctx) -> None:
     for f in st.fields:
         seg = to_pascal_case(f.name)

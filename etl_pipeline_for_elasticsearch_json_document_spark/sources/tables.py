@@ -99,10 +99,6 @@ def fan_out_undersplit_scan(df: DataFrame, min_rows_per_file: int = 1_000_000) -
     return df.repartition(target)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
     """Register each table as a temp view (for the spark.sql query surface)."""
     for name in TABLES:

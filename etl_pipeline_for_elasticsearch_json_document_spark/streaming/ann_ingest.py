@@ -7,13 +7,13 @@ version — the streaming twin of :func:`ann_index.ivf_upsert`, running
 forever, completing the maintenance triad (fingerprint index q158 /
 rollup / ANN) on one shared protocol.
 
-Exactly-once under foreachBatch's at-least-once (the
-streaming/index_ingest.py ledger, verbatim): a marker-first ledger under
-``index_path/_ledger/`` pins, per (checkpoint-lineage, batch), the BASE
-store version, before any store write. On replay the marker already
-exists, so the batch re-assigns against the SAME retained base version,
-skips the version commit if it already landed, and overwrites its own
-deterministic output dir. The codebook NEVER changes inside the stream —
+Exactly-once under foreachBatch's at-least-once: the marker-first
+ledger all four store streams share (:func:`delta_store.pin_base`) pins,
+per (checkpoint-lineage, batch), the BASE store version, before any
+store write. On replay the marker already exists, so the batch
+re-assigns against the SAME retained base version, skips the version
+commit if it already landed, and overwrites its own deterministic output
+dir. The codebook NEVER changes inside the stream —
 upserts only append postings (r9: as O(|batch|) DELTA versions —
 see the ann_index store docs); :func:`ann_index.ivf_health` is the
 scheduled measurement that decides when to stop the stream, refit
@@ -40,15 +40,8 @@ from etl_pipeline_for_elasticsearch_json_document_spark.operators.ann_index impo
     _write_version,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
-    checkpoint_identity,
+    start_foreach_batch,
 )
-
-
-def _write_marker(path: str, base_v: int) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(base_v))
-    os.replace(tmp, path)
 
 
 def _ann_batch_processor(
@@ -66,26 +59,16 @@ def _ann_batch_processor(
     inline an O(k·dim) expression at exactly the cell counts the Arrow
     path exists to make plannable."""
 
-    ledger = os.path.join(index_path, "_ledger")
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        os.makedirs(ledger, exist_ok=True)
-        marker = os.path.join(ledger, f"{ckpt_id}-{batch_id}")
-        if os.path.exists(marker):
-            with open(marker) as f:
-                base_v = int(f.read())
-        else:
-            versions = _committed_versions(index_path)
-            if not versions:
-                raise ValueError(
-                    f"no committed ANN index at {index_path}; run ivf_build "
-                    "before attaching the stream (the codebook is fitted "
-                    "offline, never inside a micro-batch)"
-                )
-            base_v = versions[-1]
-            _write_marker(marker, base_v)
-
+        # refuse before pinning: an empty store must leave no marker
+        if not _committed_versions(index_path):
+            raise ValueError(
+                f"no committed ANN index at {index_path}; run ivf_build "
+                "before attaching the stream (the codebook is fitted "
+                "offline, never inside a micro-batch)"
+            )
+        marker, base_v = delta_store.pin_base(index_path, ckpt_id, batch_id)
         vdir = os.path.join(index_path, f"v={base_v}")
         cents = spark.read.schema(CENTROIDS_SCHEMA).parquet(
             os.path.join(vdir, "centroids")
@@ -150,16 +133,11 @@ def run_ann_ingest_stream(
     """Attach IVF-store maintenance to a streaming DataFrame of vectors.
     Returns the StreamingQuery (caller awaits termination). ``assign``
     must match the store's build method — see :func:`_ann_batch_processor`."""
-    ckpt_id = checkpoint_identity(checkpoint_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            _ann_batch_processor(
-                index_path, out_path, ckpt_id, id_col, vec_col, assign
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda ckpt_id: _ann_batch_processor(
+            index_path, out_path, ckpt_id, id_col, vec_col, assign
+        ),
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -32,7 +32,7 @@ from etl_pipeline_for_elasticsearch_json_document_spark.sinks.elasticsearch impo
     write_bulk_files,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
-    checkpoint_identity,
+    start_foreach_batch,
 )
 
 
@@ -48,21 +48,21 @@ def run_es_export_stream(
 ):
     """Stream → per-epoch bulk NDJSON dirs (→ optional live ``_bulk``
     replay when ``base_url`` is given). Returns the StreamingQuery."""
-    ckpt_id = checkpoint_identity(checkpoint_dir)
 
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        path = os.path.join(output_dir, f"bulk_epoch{batch_id:06d}_{ckpt_id}")
-        write_bulk_files(
-            batch_df, path, index, id_col=id_col, max_docs_per_file=max_docs_per_file
-        )
-        if base_url:
-            replay_bulk_files(path, base_url)
+    def make_body(ckpt_id: str):
+        def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            path = os.path.join(output_dir, f"bulk_epoch{batch_id:06d}_{ckpt_id}")
+            write_bulk_files(
+                batch_df, path, index, id_col=id_col,
+                max_docs_per_file=max_docs_per_file,
+            )
+            if base_url:
+                replay_bulk_files(path, base_url)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
+        return on_batch
+
+    return start_foreach_batch(
+        stream, checkpoint_dir, make_body, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -29,11 +29,12 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_for_elasticsearch_json_document_spark.operators import delta_store
 from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten
 from etl_pipeline_for_elasticsearch_json_document_spark.sinks.audit import AuditLog
 from etl_pipeline_for_elasticsearch_json_document_spark.sinks.tsv import batch_tsv_path, write_tsv
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
-    checkpoint_identity,
+    start_foreach_batch,
 )
 
 
@@ -94,20 +95,15 @@ def run_export_stream(
     # a same-lineage replay (crash between write and commit) is skipped /
     # overwritten; a new lineage's batch 0 is new data and must be written,
     # never silently dropped by a stale "epoch 0 already done" row.
-    ckpt_id = checkpoint_identity(checkpoint_dir)
-    process_batch = _export_batch_processor(
-        output_dir, audit, ckpt_id, id_col, bug_compat, exactly_once,
-        watch_dir=watch_dir,
+    return start_foreach_batch(
+        src,
+        checkpoint_dir,
+        lambda ckpt_id: _export_batch_processor(
+            output_dir, audit, ckpt_id, id_col, bug_compat, exactly_once,
+            watch_dir=watch_dir,
+        ),
+        trigger_available_now,
     )
-
-    writer = (
-        src.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _watch_flags(
@@ -195,9 +191,9 @@ def _watch_flags(
     if advance:
         recent = (base.get("recent_docs", []) if base else []) + [n_docs]
         os.makedirs(watch_dir, exist_ok=True)
-        tmp = state_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
+        delta_store.atomic_write(
+            state_file,
+            json.dumps(
                 {
                     "prev": base,
                     "cur": {
@@ -206,10 +202,9 @@ def _watch_flags(
                         "kinds": kinds,
                         "recent_docs": recent[-trailing:],
                     },
-                },
-                f,
-            )
-        os.replace(tmp, state_file)
+                }
+            ),
+        )
     return widened, kind_changed, volume_dropped, volume_surged
 
 
@@ -381,16 +376,12 @@ def run_es_tail_export_stream(
         return batch_df.sparkSession.read.json(strs)
 
     audit = AuditLog(spark, audit_path)
-    ckpt_id = checkpoint_identity(checkpoint_dir)
-    process_batch = _export_batch_processor(
-        output_dir, audit, ckpt_id, id_col, bug_compat, exactly_once,
-        parse_batch=parse_batch, watch_dir=watch_dir,
+    return start_foreach_batch(
+        src,
+        checkpoint_dir,
+        lambda ckpt_id: _export_batch_processor(
+            output_dir, audit, ckpt_id, id_col, bug_compat, exactly_once,
+            parse_batch=parse_batch, watch_dir=watch_dir,
+        ),
+        trigger_available_now,
     )
-    writer = (
-        src.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -11,17 +11,18 @@ partitions the batch's fingerprints touch — per-batch cost is bounded
 by the batch on both ends; ``compact_fingerprint_index`` /
 ``prune_fingerprint_versions`` are the scheduled roll-up and GC.
 
-Exactly-once protocol (foreachBatch is at-least-once): a marker-first
-ledger under ``index_path/_ledger/`` pins, per (checkpoint-lineage,
-batch), the BASE index version the batch classifies against, before any
-index write happens. On replay the marker already exists, so the batch
-re-classifies against the SAME base resolution (old versions are
-retained — that is why the index is versioned rather than updated in
-place), skips the version commit if it already landed, and overwrites
-its own deterministic output dir. Every step is idempotent:
+Exactly-once protocol (foreachBatch is at-least-once): the marker-first
+ledger of :func:`operators.delta_store.pin_base`, shared by all four store
+streams, pins per (checkpoint-lineage, batch) the BASE index version the
+batch classifies against, before any index write happens. On replay the
+marker already exists, so the batch re-classifies against the SAME base
+resolution (old versions are retained — that is why the index is
+versioned rather than updated in place), skips the version commit if it
+already landed, and overwrites its own deterministic output dir. Every
+step is idempotent:
 
-1. marker exists? read base_v : record base_v = latest committed version
-   (atomic tmp+rename, so a torn write is invisible);
+1. ``pin_base``: read the marker's base_v, or record base_v = latest
+   committed version (atomic tmp+rename, so a torn write is invisible);
 2. classify the batch against the resolution of ``v<=base_v`` (empty
    index for base_v=-1);
 3. commit delta ``v=base_v+1`` via ``delta_store.commit_pinned_delta``:
@@ -56,15 +57,8 @@ from etl_pipeline_for_elasticsearch_json_document_spark.operators.index_maintena
     _commit_delta,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
-    checkpoint_identity,
+    start_foreach_batch,
 )
-
-
-def _write_marker(path: str, base_v: int) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(base_v))
-    os.replace(tmp, path)  # atomic: a torn write never becomes visible
 
 
 def _index_batch_processor(
@@ -79,20 +73,9 @@ def _index_batch_processor(
     ``n_partitions`` applies only when this batch CREATES the store (the
     persisted _META wins)."""
 
-    ledger = os.path.join(index_path, "_ledger")
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        os.makedirs(ledger, exist_ok=True)
-        marker = os.path.join(ledger, f"{ckpt_id}-{batch_id}")
-        if os.path.exists(marker):
-            with open(marker) as f:
-                base_v = int(f.read())
-        else:
-            versions = delta_store.committed_versions(index_path)
-            base_v = versions[-1] if versions else -1
-            _write_marker(marker, base_v)
-
+        marker, base_v = delta_store.pin_base(index_path, ckpt_id, batch_id)
         result = _classify(
             spark, index_path, batch_df, base_v, id_col, text_col, n_partitions
         )
@@ -130,16 +113,11 @@ def run_index_ingest_stream(
 ):
     """Attach the fingerprint-index ingest to a streaming DataFrame of
     documents. Returns the StreamingQuery (caller awaits termination)."""
-    ckpt_id = checkpoint_identity(checkpoint_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            _index_batch_processor(
-                index_path, out_path, ckpt_id, id_col, text_col, n_partitions
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda ckpt_id: _index_batch_processor(
+            index_path, out_path, ckpt_id, id_col, text_col, n_partitions
+        ),
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -49,15 +49,14 @@ Each micro-batch:
    version is atomic-or-absent, the ann_index discipline).
 
 Exactly-once under foreachBatch's at-least-once: the marker-first ledger
-of streaming/index_ingest.py verbatim — the marker pins the BASE version
-per (checkpoint-lineage, batch) before any write; replays re-classify
-against the SAME retained resolution, skip the commit if it landed, and
-overwrite their own deterministic output dirs.
+all four store streams share (:func:`delta_store.pin_base`) — the marker
+pins the BASE version per (checkpoint-lineage, batch) before any write;
+replays re-classify against the SAME retained resolution, skip the
+commit if it landed, and overwrite their own deterministic output dirs.
 
-GC: :func:`prune_lsh_versions` (NOT the generic
-``index_maintenance.prune_versions`` — deltas after the latest snapshot
-are load-bearing for every later version's resolution, so blind
-oldest-first deletion would corrupt reads). Deletable = versions older
+GC: :func:`prune_lsh_versions` — deltas after the latest snapshot are
+load-bearing for every later version's resolution, so blind
+oldest-first deletion would corrupt reads. Deletable = versions older
 than the latest snapshot at-or-before the oldest retained version;
 compaction cadence therefore bounds both read amplification and
 retained-version disk. Keep ``keep_last >= 2`` so a crash-replayed batch
@@ -81,10 +80,7 @@ from etl_pipeline_for_elasticsearch_json_document_spark.operators.dedup import (
     lsh_band_buckets,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
-    checkpoint_identity,
-)
-from etl_pipeline_for_elasticsearch_json_document_spark.streaming.index_ingest import (
-    _write_marker,
+    start_foreach_batch,
 )
 
 BUCKET_SCHEMA = "band int, bucket long, anchor_id long"
@@ -129,14 +125,10 @@ def _check_hash_family(index_path: str) -> None:
             "store from the corpus."
         )
     os.makedirs(index_path, exist_ok=True)
-    tmp = fp + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(HASH_FAMILY)
-    os.replace(tmp, fp)
+    delta_store.atomic_write(fp, HASH_FAMILY)
 
 
-def _committed_versions(index_path: str) -> list[int]:
-    return delta_store.committed_versions(index_path)
+_committed_versions = delta_store.committed_versions
 
 
 def _resolve(union: DataFrame) -> DataFrame:
@@ -212,22 +204,13 @@ def _lsh_batch_processor(
             f"({bands}) — validated at setup so a misconfigured stream "
             "fails before its first micro-batch, not inside it"
         )
-    ledger = os.path.join(index_path, "_ledger")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         _check_hash_family(index_path)
         meta = delta_store.load_or_init_meta(index_path, n_partitions)
         P = meta["n_partitions"]
-        os.makedirs(ledger, exist_ok=True)
-        marker = os.path.join(ledger, f"{ckpt_id}-{batch_id}")
-        if os.path.exists(marker):
-            with open(marker) as f:
-                base_v = int(f.read())
-        else:
-            versions = _committed_versions(index_path)
-            base_v = versions[-1] if versions else -1
-            _write_marker(marker, base_v)
+        marker, base_v = delta_store.pin_base(index_path, ckpt_id, batch_id)
 
         # ONE materialization of the banding (the minhash cost): buckets,
         # batch minima, touched partitions, classification, and the delta
@@ -351,23 +334,18 @@ def run_lsh_ingest_stream(
 ):
     """Attach the near-dup bucket index to a streaming DataFrame of
     documents. Returns the StreamingQuery (caller awaits termination)."""
-    ckpt_id = checkpoint_identity(checkpoint_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            _lsh_batch_processor(
-                index_path,
-                out_path,
-                ckpt_id,
-                id_col,
-                text_col,
-                num_hashes,
-                bands,
-                n_partitions,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda ckpt_id: _lsh_batch_processor(
+            index_path,
+            out_path,
+            ckpt_id,
+            id_col,
+            text_col,
+            num_hashes,
+            bands,
+            n_partitions,
+        ),
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

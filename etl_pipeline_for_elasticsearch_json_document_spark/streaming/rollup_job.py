@@ -9,8 +9,9 @@ snapshot + deltas at read time.
 Exactly-once matters MORE here than for the other stores: sum/count
 merge-aggregation is not idempotent under row duplication, so a
 double-committed batch double-counts instead of resolving away. The
-protocol is therefore marker-first (the ledger pins the base version
-before any store write) and the commit goes through
+protocol is therefore marker-first (:func:`delta_store.pin_base`, the
+ledger all four store streams share, pins the base version before any
+store write) and the commit goes through
 ``delta_store.commit_pinned_delta``: a replay skips only when its
 pinned version is committed AND is a delta; when a compact() stole the
 version with its snapshot, the batch re-pins past the tail and commits
@@ -20,19 +21,16 @@ before the commit, so further replays reuse it).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from etl_pipeline_for_elasticsearch_json_document_spark.operators import delta_store
 from etl_pipeline_for_elasticsearch_json_document_spark.operators.rollup_maintenance import (
     DEFAULT_PARTITIONS,
     _aggregate,
-    _committed_versions,
     _load_or_init_rollup_meta,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
-    checkpoint_identity,
+    start_foreach_batch,
 )
 
 
@@ -45,21 +43,9 @@ def _rollup_batch_processor(
 ):
     """Per-batch body, exposed for direct replay testing.
     ``n_partitions`` applies only when this batch CREATES the store."""
-    ledger = os.path.join(rollup_path, "_ledger")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(ledger, exist_ok=True)
-        marker = os.path.join(ledger, f"{ckpt_id}-{batch_id}")
-        if os.path.exists(marker):
-            with open(marker) as f:
-                base_v = int(f.read())
-        else:
-            versions = _committed_versions(rollup_path)
-            base_v = versions[-1] if versions else -1
-            tmp = marker + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(base_v))
-            os.replace(tmp, marker)
+        marker, base_v = delta_store.pin_base(rollup_path, ckpt_id, batch_id)
         _load_or_init_rollup_meta(rollup_path, keys, measures)
         store_meta = delta_store.load_or_init_meta(rollup_path, n_partitions)
         delta = _aggregate(batch_df, keys, measures)
@@ -87,14 +73,11 @@ def run_rollup_stream(
 ):
     """Attach the incremental rollup to a streaming DataFrame. Returns
     the StreamingQuery (caller awaits termination)."""
-    ckpt_id = checkpoint_identity(checkpoint_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            _rollup_batch_processor(rollup_path, ckpt_id, keys, measures, n_partitions)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda ckpt_id: _rollup_batch_processor(
+            rollup_path, ckpt_id, keys, measures, n_partitions
+        ),
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

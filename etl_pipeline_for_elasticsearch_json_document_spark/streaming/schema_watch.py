@@ -34,7 +34,7 @@ from etl_pipeline_for_elasticsearch_json_document_spark.operators.schema_report 
     schema_evolution_report,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
-    checkpoint_identity,
+    start_foreach_batch,
 )
 
 
@@ -80,19 +80,14 @@ def run_schema_watch_stream(
     profiles FULL leaf paths (nested objects/arrays to ``max_depth``,
     :func:`json_schema_profile_deep`) instead of top-level keys — the
     per-batch append stays O(leaf paths), still corpus-independent."""
-    ckpt_id = checkpoint_identity(checkpoint_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            _schema_watch_processor(
-                profiles_path, ckpt_id, batch_col, json_col, deep, max_depth
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda ckpt_id: _schema_watch_processor(
+            profiles_path, ckpt_id, batch_col, json_col, deep, max_depth
+        ),
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _committed_profile_dirs(profiles_path: str) -> list[str]:
@@ -184,17 +179,14 @@ def run_volume_watch_stream(
     back at any time with :func:`read_volume_report`. Stream-side work is
     batch-bounded (one map-side count/sum aggregate); the report is a
     cheap batch query over the accumulated batch-domain relation."""
-    ckpt_id = checkpoint_identity(checkpoint_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            _volume_watch_processor(profiles_path, ckpt_id, batch_col, json_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda ckpt_id: _volume_watch_processor(
+            profiles_path, ckpt_id, batch_col, json_col
+        ),
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_volume_report(

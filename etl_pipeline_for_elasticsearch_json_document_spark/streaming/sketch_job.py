@@ -44,7 +44,7 @@ from etl_pipeline_for_elasticsearch_json_document_spark.operators.sketches impor
     count_min_build,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
-    checkpoint_identity,
+    start_foreach_batch,
 )
 
 
@@ -113,41 +113,42 @@ def run_cms_stream(
     StreamingQuery.
     """
     spark = stream.sparkSession
-    ckpt_id = checkpoint_identity(checkpoint_dir)
 
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        prev = read_sketch(spark, state_path)
-        ledger = _read_ledger(prev)
-        # Skip ONLY replays from the SAME checkpoint lineage: a fresh
-        # checkpoint restarts epochs at 0 and its batch 0 is new data.
-        done = ledger.get(ckpt_id)
-        if done is not None and done >= batch_id:
-            return  # replay of an already-merged batch: skip, don't double-count
-        batch_sketch = count_min_build(
-            batch_df.select(item_col), item_col, depth=depth, width=width
-        )
-        merged = batch_sketch if prev is None else merge_sketches(prev, batch_sketch)
-        ledger[ckpt_id] = batch_id
-        merged = merged.withColumn("ledger", F.lit(json.dumps(ledger)))
-        staging = state_path + ".__next__"
-        if os.path.exists(staging):  # stale staging from a crashed attempt
-            shutil.rmtree(staging)
-        # materialize BEFORE touching state_path (merged reads from it)
-        merged.coalesce(1).write.mode("overwrite").parquet(staging)
-        old = state_path + ".__old__"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(state_path):
-            os.rename(state_path, old)
-        os.rename(staging, state_path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+    def make_body(ckpt_id: str):
+        def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            prev = read_sketch(spark, state_path)
+            ledger = _read_ledger(prev)
+            # Skip ONLY replays from the SAME checkpoint lineage: a fresh
+            # checkpoint restarts epochs at 0 and its batch 0 is new data.
+            done = ledger.get(ckpt_id)
+            if done is not None and done >= batch_id:
+                return  # replay of a merged batch: skip, don't double-count
+            batch_sketch = count_min_build(
+                batch_df.select(item_col), item_col, depth=depth, width=width
+            )
+            merged = (
+                batch_sketch if prev is None else merge_sketches(prev, batch_sketch)
+            )
+            ledger[ckpt_id] = batch_id
+            merged = merged.withColumn("ledger", F.lit(json.dumps(ledger)))
+            staging = state_path + ".__next__"
+            if os.path.exists(staging):  # stale staging from a crashed attempt
+                shutil.rmtree(staging)
+            # materialize BEFORE touching state_path (merged reads from it)
+            merged.coalesce(1).write.mode("overwrite").parquet(staging)
+            old = state_path + ".__old__"
+            if os.path.exists(old):
+                shutil.rmtree(old)
+            if os.path.exists(state_path):
+                os.rename(state_path, old)
+            os.rename(staging, state_path)
+            if os.path.exists(old):
+                shutil.rmtree(old)
 
-    writer = stream.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
+        return on_batch
+
+    return start_foreach_batch(
+        stream, checkpoint_dir, make_body, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

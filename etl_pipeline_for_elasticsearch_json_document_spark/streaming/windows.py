@@ -1,5 +1,5 @@
-"""Streaming window aggregations over the events stream: tumbling /
-sliding / session windows with watermark-based late-data handling, and
+"""Streaming window aggregations over the events stream: tumbling and
+session windows with watermark-based late-data handling, and
 watermarked streaming dedup.
 
 These are the Structured-Streaming counterparts of the batch q29 window
@@ -35,22 +35,6 @@ def tumbling_counts(
             "n",
             "total_value",
         )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window: str = "6 hours",
-    slide: str = "3 hours",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"), F.col(key_col))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), key_col, "n")
     )
 
 

@@ -99,6 +99,7 @@ def test_stream_without_build_fails_fast(spark, sf_dir, tmp_path):
         raise AssertionError("expected ValueError")
     except ValueError as e:
         assert "ivf_build" in str(e)
+    assert not os.path.exists(str(tmp_path / "missing" / "_ledger" / "x-0"))
 
 
 def test_pandas_store_stream_uses_pandas_assignment(spark, sf_dir, tmp_path):

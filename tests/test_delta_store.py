@@ -228,6 +228,36 @@ def test_commit_pinned_delta_normal_path(spark, tmp_path):
     assert calls == []
 
 
+def test_pin_base_replays_its_base_and_clears_with_gc_ledger(spark, tmp_path):
+    """The ledger step every store stream shares: the first call pins the
+    latest committed version, a replay of the same (lineage, batch) gets
+    that base back after the store advanced, pending_pins reports it and
+    gc_ledger(lineage=) clears it."""
+    path = str(tmp_path / "store")
+    ds.load_or_init_meta(path, 4)
+    ds.write_version(_df(spark, [(1, 1)]), path, 0, ["k"], 4, snapshot=True)
+    marker, base_v = ds.pin_base(path, "lin", 3)
+    assert base_v == 0 and os.path.exists(marker)
+    ds.write_version(_df(spark, [(2, 2)]), path, 1, ["k"], 4)
+    assert ds.pin_base(path, "lin", 3) == (marker, 0)
+    assert ds.pending_pins(path) == [0]
+    assert ds.gc_ledger(path, lineage="lin") == [os.path.basename(marker)]
+    assert ds.pending_pins(path) == []
+
+
+@pytest.mark.parametrize("path", ["s3a://bucket/idx", "hdfs://nn/idx", "file:/tmp/idx"])
+def test_non_local_paths_are_refused(path, tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    for call in (
+        lambda: ds.committed_versions(path),
+        lambda: ds.load_or_init_meta(path, 4),
+        lambda: ds.pin_base(path, "lin", 0),
+    ):
+        with pytest.raises(ValueError, match="not a local path"):
+            call()
+    assert os.listdir(tmp_path) == []
+
+
 def test_prune_respects_pending_ledger_pins(spark, tmp_path):
     """The compact-crash-replay GC hole: each lineage's LAST marker pins
     its base unconditionally (even a committed target delta does not

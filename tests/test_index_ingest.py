@@ -251,3 +251,14 @@ def test_es_tail_feeds_index_ingest(spark, tmp_path):
     finally:
         server.shutdown()
         server.server_close()
+
+
+def test_non_local_index_path_is_refused(spark, tmp_path, monkeypatch):
+    """An s3a:// store path used to list as an empty store, and the batch
+    then committed into a local ``s3a:/`` directory; now it raises before
+    any file is written."""
+    monkeypatch.chdir(tmp_path)
+    proc = _index_batch_processor("s3a://bucket/idx", str(tmp_path / "out"), "lin")
+    with pytest.raises(ValueError, match="not a local path"):
+        proc(spark.createDataFrame([(1, "alpha")], SCHEMA), 0)
+    assert not os.path.exists(tmp_path / "s3a:")

@@ -132,15 +132,6 @@ def test_compact_and_prune_fingerprint_versions(spark, tmp_path):
     }
     assert r == {9: "duplicate_corpus", 10: "ingested"}
 
-    import pytest
-
-    from etl_pipeline_for_elasticsearch_json_document_spark.operators.index_maintenance import (
-        prune_versions,
-    )
-
-    with pytest.raises(ValueError):
-        prune_versions(idx_path, keep_last=0)
-
 
 def test_null_text_docs_surface_as_no_text(spark, tmp_path):
     """r10 review: a NULL-text doc produces a NULL fingerprint — it must
