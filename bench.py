@@ -82,8 +82,8 @@ planning+serde for 5k expressions. The scale answer is still
 codegen-able). Plan GENERATION (flatten_plan_gen) now issues ONE
 explode+groupBy discovery job for ALL array-nesting levels (was one job
 per level, ~0.25 s each) + ~0.4 s driver expression building ⇒ ~0.7 s
-(was 1.75); schema-pure plans (explicit array_lengths) are memoized and
-cost ~0 on repeat.
+(was 1.75); every call re-runs that discovery job, since the column set
+follows the data.
 """
 
 from __future__ import annotations
@@ -378,10 +378,9 @@ def bench_flatten(spark) -> dict[str, float]:
     plan = flatten_plan(src, bug_compat=False)
     # First call in the fresh JVM pays class-loading + the first discovery
     # job's scheduler warm-up — reported separately as the cold number.
-    # The headline entry is steady-state plan gen (median of 3; the golden
-    # schema has arrays so nothing is memoized — each call re-runs the
-    # discovery job), comparable to the warm in-main-JVM figure tracked
-    # through r5.
+    # The headline entry is steady-state plan gen (median of 3; each call
+    # re-runs the discovery job), comparable to the warm in-main-JVM figure
+    # tracked through r5.
     out["flatten_plan_gen_cold"] = round(time.time() - t0, 3)
     out["flatten_plan_gen"] = timed_median(
         lambda: flatten_plan(src, bug_compat=False)

@@ -41,14 +41,15 @@ Known deviations (inherent to typed schema inference, pinned in tests):
 
 Scale notes (100 TB posture):
 
-- Array index ranges and map key sets are discovered with one aggregation
-  job per *array-nesting level* (not per path, not per row) — each job
-  computes every pending ``max(size(...))``/``min(size(...))``/key-union in
-  a single pass. On very large inputs pass ``array_lengths`` explicitly or
-  derive them from a sample to skip the discovery scans entirely.
-- The generated plan is a single wide projection; Spark's whole-stage
-  codegen falls back gracefully above ``spark.sql.codegen.maxFields``
-  columns, which is expected and still vectorized at the scan.
+- Array index ranges are discovered from the data with one explode+groupBy
+  job covering every nesting level; schemas with MapType fall back to one
+  aggregation job per *array-nesting level* (not per path, not per row),
+  each computing every pending ``max(size(...))``/``min(size(...))``/
+  key-union in a single pass.
+- The generated plan is one projection, run as an anchor cascade
+  (:func:`flatten_stages`); Spark's whole-stage codegen falls back
+  gracefully above ``spark.sql.codegen.maxFields`` columns, which is
+  expected and still vectorized at the scan.
 """
 
 from __future__ import annotations
@@ -56,7 +57,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -274,10 +275,13 @@ def _discover_data(df: DataFrame) -> _DataShape:
 REDUMP_UDF_NAME = "__etl_pipeline_json_redump"
 
 
-def _register_redump_udf(spark) -> None:
-    """Pandas UDF re-spacing Spark's compact ``to_json`` output to match
-    ``json.dumps`` (``', '``/``': '`` separators). bug_compat only — never in
-    the non-compat hot path."""
+def _register_redump_if_used(df: DataFrame, exprs: list[str]) -> None:
+    """Register the Pandas UDF re-spacing Spark's compact ``to_json`` output
+    to match ``json.dumps`` (``', '``/``': '`` separators) when some of
+    ``exprs`` calls it. Only bug_compat struct-cell / truncated-subtree
+    serialization does, so other plans pay zero UDF setup."""
+    if not any(REDUMP_UDF_NAME in e for e in exprs):
+        return
 
     @F.pandas_udf("string")
     def _json_redump(s):
@@ -285,7 +289,7 @@ def _register_redump_udf(spark) -> None:
 
         return s.map(lambda v: v if v is None else _json.dumps(_json.loads(v)))
 
-    spark.udf.register(REDUMP_UDF_NAME, _json_redump)
+    df.sparkSession.udf.register(REDUMP_UDF_NAME, _json_redump)
 
 
 def _qid(name: str) -> str:
@@ -320,11 +324,6 @@ def _sql_from(base_dt: DataType, base_sql: Optional[str], steps) -> tuple[str, D
     return sql, dt
 
 
-def _sql_for_path(schema: StructType, path: Path) -> tuple[str, DataType]:
-    """Resolve a path of steps to a SQL expression string + its DataType."""
-    return _sql_from(schema, None, path)
-
-
 def _compat_json_array_sql(e: str) -> str:
     """Serialize a primitive array exactly like ``json.dumps(list)`` —
     elements joined with ``', '``. Each element is serialized by wrapping it
@@ -332,10 +331,6 @@ def _compat_json_array_sql(e: str) -> str:
     string escaping for free, JVM-side, no UDF)."""
     elem = "substring(to_json(array(x)), 2, length(to_json(array(x))) - 2)"
     return f"concat('[', array_join(transform({e}, x -> {elem}), ', '), ']')"
-
-
-def _value_sql(schema: StructType, path: Path, bug_compat: bool) -> str:
-    return _value_sql_from(schema, None, path, bug_compat)
 
 
 def _value_sql_from(
@@ -532,41 +527,21 @@ def _resolve_tree_path_to_schema_path(
 # ---------------------------------------------------------------------------
 
 
-#: Memo for SCHEMA-PURE plans: entries are stored only when planning issued
-#: zero data-dependent queries (every array length / map key either came
-#: from the caller or the schema has none), so a hit can never serve stale
-#: data-derived shape. Data-dependent plans (bug_compat discovery, or
-#: lengths resolved by aggregation) are deliberately NOT cached: per-batch
-#: dynamic schema is reference semantics (a later batch with the same
-#: schema but longer arrays must widen), so freezing the first batch's plan
-#: would be a silent correctness change. Streaming jobs that want plan
-#: reuse pass explicit ``array_lengths`` and get cache hits for free.
-_SCHEMA_PURE_PLAN_CACHE: dict[tuple, list[str]] = {}
-_PLAN_CACHE_MAX = 64
-
-
 def _plan_specs(
-    df: DataFrame,
-    max_depth: int,
-    sep: str,
-    bug_compat: bool,
-    array_lengths: Optional[dict[str, tuple[int, int]]],
-) -> tuple[list[tuple[str, Optional[Path]]], bool]:
-    """Shared front half of :func:`flatten_plan` / :func:`flatten_stages`:
-    discovery + schema walk + bug-compat path resolution. Returns the
-    name-sorted ``(column_name, value_path)`` specs (``None`` path =
-    constant ``''`` — the reference's parser-miss quirks) and whether any
-    data was inspected (False ⇒ the result is schema-pure and cacheable)."""
+    df: DataFrame, max_depth: int, sep: str, bug_compat: bool
+) -> list[tuple[str, Optional[Path]]]:
+    """Shared front half of :func:`flatten_plan`, :func:`flatten_stages` and
+    :func:`flatten_families`: discovery + schema walk + bug-compat path
+    resolution. Returns the name-sorted ``(column_name, value_path)`` specs
+    (``None`` path = constant ``''`` — the reference's parser-miss quirks)."""
     schema = df.schema
-    queried_data = False
-    lengths: dict[str, Optional[tuple[int, int]]] = dict(array_lengths or {})
+    lengths: dict[str, Optional[tuple[int, int]]] = {}
     map_keys: dict[tuple, list[str]] = {}
 
     if bug_compat:
         # One distributed pass gives presence + array sizes + map keys all
         # at once (see _discover_data) — no iterative aggregation levels and
         # no per-column existence queries.
-        queried_data = True
         shape = _discover_data(df)
         ctx = _Ctx(
             sep=sep, max_depth=max_depth, lengths=lengths, map_keys=map_keys, data=shape
@@ -584,7 +559,6 @@ def _plan_specs(
             if not ctx.pending_lengths:
                 break
             if probe is None:
-                queried_data = True
                 probe = _probe_lengths(df, max_depth)
             for name, path in ctx.pending_lengths.items():
                 # absent from the probe ⇒ array never present ⇒ no columns;
@@ -602,16 +576,15 @@ def _plan_specs(
                 break
             aggs = []
             for name, path in ctx.pending_lengths.items():
-                e, _ = _sql_for_path(schema, path)
+                e, _ = _sql_from(schema, None, path)
                 aggs.append(f"min(size({e})) AS {_qid('min' + name)}")
                 aggs.append(f"max(size({e})) AS {_qid('max' + name)}")
             key_sigs = list(ctx.pending_keys)
             for j, sig in enumerate(key_sigs):
-                e, _ = _sql_for_path(schema, ctx.pending_keys[sig])
+                e, _ = _sql_from(schema, None, ctx.pending_keys[sig])
                 aggs.append(
                     f"array_distinct(flatten(collect_list(map_keys({e})))) AS {_qid(f'keys{j}')}"
                 )
-            queried_data = True
             row = df.selectExpr(*aggs).first()
             for name in ctx.pending_lengths:
                 mn = row[f"min{name}"]
@@ -629,29 +602,26 @@ def _plan_specs(
     for name, path in ctx.entries:
         by_name.setdefault(name, path)
 
-    if bug_compat:
-        # Per-index existence pruning: a column under an array index exists
-        # only if some document populates it there (presence known from the
-        # discovery pass; explicit JSON null under an index is
-        # indistinguishable from absence and is pruned — see docstring).
-        for n in [n for n, p in by_name.items() if any(isinstance(s, int) for s in p)]:
-            if by_name[n] not in shape.paths:
-                del by_name[n]
+    if not bug_compat:
+        return sorted(by_name.items())
 
-    tree = _build_tree(schema, (), map_keys) if bug_compat else None
+    # Per-index existence pruning: a column under an array index exists
+    # only if some document populates it there (presence known from the
+    # discovery pass; explicit JSON null under an index is
+    # indistinguishable from absence and is pruned — see docstring).
+    for n in [n for n, p in by_name.items() if any(isinstance(s, int) for s in p)]:
+        if by_name[n] not in shape.paths:
+            del by_name[n]
 
+    tree = _build_tree(schema, (), map_keys)
     specs: list[tuple[str, Optional[Path]]] = []
     for name in sorted(by_name):
-        path = by_name[name]
-        if bug_compat:
-            steps = resolve_reference_path(tree, name, sep)
-            resolved = (
-                _resolve_tree_path_to_schema_path(schema, steps) if steps is not None else None
-            )
-            specs.append((name, resolved))  # None ⇒ quirks Q1/Q2 ⇒ ''
-        else:
-            specs.append((name, path))
-    return specs, queried_data
+        steps = resolve_reference_path(tree, name, sep)
+        resolved = (
+            _resolve_tree_path_to_schema_path(schema, steps) if steps is not None else None
+        )
+        specs.append((name, resolved))  # None ⇒ quirks Q1/Q2 ⇒ ''
+    return specs
 
 
 def _wide_select(
@@ -659,7 +629,7 @@ def _wide_select(
 ) -> list[str]:
     select = []
     for name, path in specs:
-        value = "''" if path is None else _value_sql(schema, path, bug_compat)
+        value = "''" if path is None else _value_sql_from(schema, None, path, bug_compat)
         select.append(f"{value} AS {_qid(name)}")
     return select
 
@@ -669,15 +639,13 @@ def flatten_plan(
     max_depth: int = 20,
     sep: str = "_",
     bug_compat: bool = False,
-    array_lengths: Optional[dict[str, tuple[int, int]]] = None,
 ) -> list[str]:
-    """Build the list of aliased SQL expressions that flattens ``df``
-    (pass to ``df.selectExpr``).
+    """Build the list of aliased SQL expressions that flattens ``df`` as one
+    wide select (pass to ``df.selectExpr``).
 
-    Array index ranges are discovered with ONE explode+groupBy job covering
-    all nesting levels (map-bearing schemas: one aggregation per nesting
-    level) unless supplied via ``array_lengths`` (mapping flattened array
-    path name → ``(min_size, max_size)``).
+    Array index ranges are discovered from the data with ONE explode+groupBy
+    job covering all nesting levels (map-bearing schemas: one aggregation
+    per nesting level), so every call re-reads the current data shape.
 
     With ``bug_compat`` an extra single-pass existence check prunes
     index-path columns no document actually populates — the reference's
@@ -686,36 +654,9 @@ def flatten_plan(
     instance produce columns). Limitation: an explicit JSON ``null`` under
     an array index is indistinguishable from an absent key in Spark, so such
     columns are pruned where the reference would keep them holding ``''``.
-
-    Plans that required NO data inspection (schema-pure: no arrays/maps, or
-    every range supplied via ``array_lengths``) are memoized per
-    (schema, options) — repeat flattens of a pinned-shape source skip the
-    whole generation pass (see :data:`_SCHEMA_PURE_PLAN_CACHE`).
     """
-    schema = df.schema
-    cache_key = (
-        schema.json(),
-        max_depth,
-        sep,
-        bug_compat,
-        tuple(sorted((array_lengths or {}).items())),
-    )
-    cached = _SCHEMA_PURE_PLAN_CACHE.get(cache_key)
-    if cached is not None:
-        if bug_compat and any(REDUMP_UDF_NAME in s for s in cached):
-            _register_redump_udf(df.sparkSession)  # new session may lack it
-        return list(cached)
-    specs, queried_data = _plan_specs(df, max_depth, sep, bug_compat, array_lengths)
-    select = _wide_select(schema, specs, bug_compat)
-    if bug_compat and any(REDUMP_UDF_NAME in s for s in select):
-        # Register the re-spacing UDF only when some column actually calls
-        # it (truncated-subtree / struct-cell serialization) — a bug-compat
-        # document whose plan never hits those cases pays zero UDF setup.
-        _register_redump_udf(df.sparkSession)
-    if not queried_data:
-        if len(_SCHEMA_PURE_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-            _SCHEMA_PURE_PLAN_CACHE.pop(next(iter(_SCHEMA_PURE_PLAN_CACHE)))
-        _SCHEMA_PURE_PLAN_CACHE[cache_key] = list(select)
+    select = _wide_select(df.schema, _plan_specs(df, max_depth, sep, bug_compat), bug_compat)
+    _register_redump_if_used(df, select)
     return select
 
 
@@ -723,27 +664,19 @@ def flatten_plan(
 # Staged (cascade-of-projects) execution form
 # ---------------------------------------------------------------------------
 
-#: Below this many output columns the wide single select is already cheap
-#: to plan/serialize, so :func:`flatten` skips anchor extraction.
-STAGED_MIN_COLUMNS = 512
 
-
-def _dtype_at(schema: StructType, path: Path) -> DataType:
-    dt: DataType = schema
-    for step in path:
-        if isinstance(step, int):
-            dt = dt.elementType
-        elif isinstance(dt, StructType):
-            dt = dt[step].dataType
-        else:
-            dt = dt.valueType
-    return dt
+def _anchor_of(path: Path, end: int) -> Optional[Path]:
+    """The longest prefix of ``path[:end]`` that ends at an array index —
+    the anchor a step past it reads from — or None."""
+    for j in range(end - 1, -1, -1):
+        if isinstance(path[j], int):
+            return path[: j + 1]
+    return None
 
 
 def _build_stages(
     schema: StructType,
     specs: list[tuple[str, Optional[Path]]],
-    sep: str,
     bug_compat: bool,
 ) -> list[list[str]]:
     """Cascade form of the wide select: every array-element subtree
@@ -763,58 +696,38 @@ def _build_stages(
     """
     anchors: dict[Path, str] = {}
     for _, path in specs:
-        if path is None:
-            continue
-        for k, s in enumerate(path):
+        for k, s in enumerate(path or ()):
             if isinstance(s, int):
-                p = path[: k + 1]
-                if p not in anchors:
-                    anchors[p] = ""
-    if not anchors:
-        return [_wide_select(schema, specs, bug_compat)]
+                anchors.setdefault(path[: k + 1], "")
     prefix = "__etl_pipeline_a"
     while any(c.startswith(prefix) for c in schema.fieldNames()):
         prefix += "x"
     for i, p in enumerate(anchors):
         anchors[p] = f"{prefix}{i}"
 
-    def parent_anchor(p: Path) -> Optional[Path]:
-        for j in range(len(p) - 2, -1, -1):
-            if isinstance(p[j], int):
-                return p[: j + 1]
-        return None
-
     levels: dict[int, list[tuple[Path, str]]] = {}
     for p, cn in anchors.items():
         levels.setdefault(sum(1 for s in p if isinstance(s, int)), []).append((p, cn))
+    # (DataType, SQL) each expression walks from: the row itself, or an
+    # anchor column once its stage has resolved it (parents come a level up)
+    bases: dict[Optional[Path], tuple[DataType, Optional[str]]] = {None: (schema, None)}
+
+    def rebase(path: Path, end: int) -> tuple[DataType, Optional[str], Path]:
+        par = _anchor_of(path, end)
+        return (*bases[par], path[len(par or ()):])
+
     stages: list[list[str]] = []
     for lvl in sorted(levels):
         exprs = []
         for p, cn in levels[lvl]:
-            par = parent_anchor(p)
-            if par is None:
-                e, _ = _sql_from(schema, None, p)
-            else:
-                e, _ = _sql_from(_dtype_at(schema, par), _qid(anchors[par]), p[len(par):])
+            e, dt = _sql_from(*rebase(p, len(p) - 1))
+            bases[p] = (dt, _qid(cn))
             exprs.append(f"{e} AS {cn}")
         stages.append(exprs)
 
     final: list[str] = []
     for name, path in specs:
-        if path is None:
-            v = "''"
-        else:
-            par = None
-            for j in range(len(path) - 1, -1, -1):
-                if isinstance(path[j], int):
-                    par = path[: j + 1]
-                    break
-            if par is None:
-                v = _value_sql(schema, path, bug_compat)
-            else:
-                v = _value_sql_from(
-                    _dtype_at(schema, par), _qid(anchors[par]), path[len(par):], bug_compat
-                )
+        v = "''" if path is None else _value_sql_from(*rebase(path, len(path)), bug_compat)
         final.append(f"{v} AS {_qid(name)}")
     return stages + [final]
 
@@ -824,39 +737,13 @@ def flatten_stages(
     max_depth: int = 20,
     sep: str = "_",
     bug_compat: bool = False,
-    array_lengths: Optional[dict[str, tuple[int, int]]] = None,
-    min_columns: int = STAGED_MIN_COLUMNS,
 ) -> list[list[str]]:
-    """Like :func:`flatten_plan` but returns the CASCADE form: a list of
-    selectExpr argument lists — apply with :func:`apply_flatten_stages`.
-    Plans under ``min_columns`` output columns (or with no array anchors)
-    come back as a single-stage cascade ``[wide_plan]``."""
-    schema = df.schema
-    cache_key = (
-        "stages",
-        min_columns,
-        schema.json(),
-        max_depth,
-        sep,
-        bug_compat,
-        tuple(sorted((array_lengths or {}).items())),
-    )
-    cached = _SCHEMA_PURE_PLAN_CACHE.get(cache_key)
-    if cached is not None:
-        if bug_compat and any(REDUMP_UDF_NAME in s for st in cached for s in st):
-            _register_redump_udf(df.sparkSession)
-        return [list(st) for st in cached]
-    specs, queried_data = _plan_specs(df, max_depth, sep, bug_compat, array_lengths)
-    if len(specs) >= min_columns:
-        stages = _build_stages(schema, specs, sep, bug_compat)
-    else:
-        stages = [_wide_select(schema, specs, bug_compat)]
-    if bug_compat and any(REDUMP_UDF_NAME in s for s in stages[-1]):
-        _register_redump_udf(df.sparkSession)
-    if not queried_data:
-        if len(_SCHEMA_PURE_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-            _SCHEMA_PURE_PLAN_CACHE.pop(next(iter(_SCHEMA_PURE_PLAN_CACHE)))
-        _SCHEMA_PURE_PLAN_CACHE[cache_key] = [list(st) for st in stages]
+    """Like :func:`flatten_plan` but returns the CASCADE form that
+    :func:`flatten` runs: a list of selectExpr argument lists — apply with
+    :func:`apply_flatten_stages`. A plan with no array anchors comes back
+    as a single-stage cascade ``[wide_plan]``."""
+    stages = _build_stages(df.schema, _plan_specs(df, max_depth, sep, bug_compat), bug_compat)
+    _register_redump_if_used(df, stages[-1])
     return stages
 
 
@@ -958,11 +845,11 @@ def flatten_families(
     jobs, and each family's scan prunes the parquet ``ReadSchema`` to just
     its subtree (verified in tests).
 
-    Families = output columns grouped by top-level path segment, contiguous
-    groups (the plan is lexicographically sorted) bin-packed into
-    ≈``families`` even bins, so each family holds whole subtrees and the
-    concatenation of all families minus keys is exactly the wide flatten's
-    column set.
+    Families = output columns grouped by top-level path segment (over the
+    whole column list: ``A``, ``AB``, ``A_0_X`` give groups ``A`` and
+    ``AB``), groups bin-packed in first-column order into ≈``families``
+    even bins, so each family holds whole subtrees and the concatenation of
+    all families minus keys is exactly the wide flatten's column set.
 
     ``key_exprs`` are SQL expressions prepended to every family (the join
     key tying families back together). Alias them to names outside the
@@ -970,32 +857,27 @@ def flatten_families(
     fields flatten to PascalCase columns that may collide otherwise.
     """
     df = unwrap_envelope(df)
-    plan = flatten_plan(df, max_depth=max_depth, sep=sep, bug_compat=bug_compat)
-    groups: list[tuple[str, list[str]]] = []
-    for e in plan:
-        # the alias is the LAST " AS " operand (values may contain casts)
-        name = e.rsplit(" AS ", 1)[1].strip("`").replace("``", "`")
-        top = name.split(sep, 1)[0]
-        if groups and groups[-1][0] == top:
-            groups[-1][1].append(e)
-        else:
-            groups.append((top, [e]))
-    target = max(1, -(-len(plan) // families))  # ceil division
-    bins: list[list[tuple[str, list[str]]]] = []
-    cur: list[tuple[str, list[str]]] = []
+    specs = _plan_specs(df, max_depth, sep, bug_compat)
+    groups: dict[str, list[tuple[str, Optional[Path]]]] = {}
+    for name, path in specs:
+        groups.setdefault(name.split(sep, 1)[0], []).append((name, path))
+    target = max(1, -(-len(specs) // families))  # ceil division
+    bins: list[list[str]] = []
+    cur: list[str] = []
     cur_n = 0
-    for top, es in groups:
-        if cur and cur_n + len(es) > target:
+    for top, group in groups.items():
+        if cur and cur_n + len(group) > target:
             bins.append(cur)
             cur, cur_n = [], 0
-        cur.append((top, es))
-        cur_n += len(es)
+        cur.append(top)
+        cur_n += len(group)
     if cur:
         bins.append(cur)
     out: dict[str, DataFrame] = {}
-    for b in bins:
-        fname = b[0][0] if len(b) == 1 else f"{b[0][0]}__{b[-1][0]}"
-        exprs = [e for _, es in b for e in es]
+    for tops in bins:
+        fname = tops[0] if len(tops) == 1 else f"{tops[0]}__{tops[-1]}"
+        exprs = _wide_select(df.schema, [s for t in tops for s in groups[t]], bug_compat)
+        _register_redump_if_used(df, exprs)
         out[fname] = df.selectExpr(*key_exprs, *exprs)
     return out
 
@@ -1035,32 +917,16 @@ def flatten(
     max_depth: int = 20,
     sep: str = "_",
     bug_compat: bool = False,
-    array_lengths: Optional[dict[str, tuple[int, int]]] = None,
-    staged: bool = True,
 ) -> DataFrame:
     """Flatten nested documents into one wide all-string row per document.
 
     Spark-first rebuild of the reference's ``json_to_tsv_in_memory``
     (``ElasticSearch ETL.py:154-195``): ES envelopes are unwrapped, then the
-    entire flatten executes as one generated projection. Wide plans
-    (≥ :data:`STAGED_MIN_COLUMNS` columns) run as an anchor cascade
-    (:func:`flatten_stages`) — same bytes out, ~1 s less per-action
-    plan/serde overhead on the 5k-column golden document; ``staged=False``
-    forces the single wide select."""
+    entire flatten executes as one generated projection in its anchor
+    cascade form (:func:`flatten_stages`) — the same bytes as the wide
+    select of :func:`flatten_plan`, with ~1 s less per-action plan/serde
+    overhead on the 5k-column golden document."""
     df = unwrap_envelope(df)
-    if staged:
-        return apply_flatten_stages(
-            df,
-            flatten_stages(
-                df,
-                max_depth=max_depth,
-                sep=sep,
-                bug_compat=bug_compat,
-                array_lengths=array_lengths,
-            ),
-        )
-    return df.selectExpr(
-        *flatten_plan(
-            df, max_depth=max_depth, sep=sep, bug_compat=bug_compat, array_lengths=array_lengths
-        )
+    return apply_flatten_stages(
+        df, flatten_stages(df, max_depth=max_depth, sep=sep, bug_compat=bug_compat)
     )

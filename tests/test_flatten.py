@@ -264,6 +264,26 @@ def test_flatten_families_scan_is_pruned(spark, tmp_path):
     assert "medicareConfig" not in read_schema, name
 
 
+def test_flatten_families_keep_every_column(spark):
+    """Every flattened column lands in exactly one family: an alias holding
+    " AS " is not re-parsed into a clashing family name, and a top-level
+    segment the sort splits (``A``, ``AB``, ``A_0_X``) stays one group."""
+    from collections import Counter
+
+    from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import (
+        flatten_families,
+    )
+
+    for docs in (
+        [{"a AS r": 1, "m": 1, "z": [{"q AS r": 1}]}],
+        [{"a": [], "aB": 1}, {"a": [{"x": 1}], "aB": 2}],
+    ):
+        df = spark.read.json(spark.sparkContext.parallelize([json.dumps(d) for d in docs], 1))
+        fams = flatten_families(df, key_exprs=("0 AS __key",))
+        fam_cols = [c for d in fams.values() for c in d.columns[1:]]
+        assert Counter(fam_cols) == Counter(flatten(df).columns), fams
+
+
 def test_write_families_concurrent_round_trip(spark, tmp_path):
     """write_families materializes every family table concurrently; read
     back, the union of family columns (minus keys) must equal the wide
@@ -303,10 +323,14 @@ def test_write_families_concurrent_round_trip(spark, tmp_path):
 
 
 def test_staged_equals_wide(spark):
-    """flatten(staged=True) and the wide single select are the same bytes —
-    the cascade is an execution form, not a semantic variant."""
+    """flatten() (the anchor cascade) and the wide single select of
+    flatten_plan are the same bytes — the cascade is an execution form, not
+    a semantic variant. Checked in default and bug_compat mode, and on an
+    explicit MapType schema (the per-level discovery branch)."""
+    from pyspark.sql import Row
+
     from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import (
-        apply_flatten_stages,
+        flatten_plan,
         flatten_stages,
     )
 
@@ -315,22 +339,21 @@ def test_staged_equals_wide(spark):
          "e": {"f": [1, 2]}, "g": None},
         {"a": [{"b": [{"c": 3}]}], "e": {"f": []}, "g": "x"},
     ]
-    cols_w, rows_w = spark_flatten_dicts(spark, docs, staged=False)
-    cols_s, rows_s = spark_flatten_dicts(spark, docs, staged=True)
-    assert cols_w == cols_s
-    key = lambda r: tuple(sorted((k, str(v)) for k, v in r.items()))
-    assert sorted(map(key, rows_w)) == sorted(map(key, rows_s))
-    # min_columns=0 forces anchor extraction even on this small plan; same rows
-    import json as _json
-
-    rdd = spark.sparkContext.parallelize([_json.dumps(d) for d in docs], 2)
-    df = spark.read.json(rdd)
-    stages = flatten_stages(df, min_columns=0)
-    assert len(stages) > 1  # anchors extracted into at least one pre-stage
-    staged = apply_flatten_stages(df, stages)
-    assert sorted(map(key, (r.asDict() for r in staged.collect()))) == sorted(
-        map(key, rows_w)
+    nested = spark.read.json(spark.sparkContext.parallelize([json.dumps(d) for d in docs], 2))
+    mapped = spark.createDataFrame(
+        [
+            Row(id=1, attrs={"unitPrice": 9.5, "qty": 2.0}),
+            Row(id=2, attrs={"qty": 1.0, "colorCode": 3.0}),
+        ],
+        schema="id bigint, attrs map<string,double>",
     )
+    assert len(flatten_stages(nested)) > 1  # anchors extracted into at least one pre-stage
+    key = lambda r: tuple(sorted((k, str(v)) for k, v in r.asDict().items()))
+    for df, bug_compat in ((nested, False), (nested, True), (mapped, False)):
+        wide = df.selectExpr(*flatten_plan(df, bug_compat=bug_compat))
+        staged = flatten(df, bug_compat=bug_compat)
+        assert staged.columns == wide.columns
+        assert sorted(map(key, staged.collect())) == sorted(map(key, wide.collect()))
 
 
 def test_wide_flatten_conf_scoped_and_parity(spark):
