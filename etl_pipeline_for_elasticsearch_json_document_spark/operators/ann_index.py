@@ -7,22 +7,28 @@ this module is that store, the ANN sibling of
 :mod:`index_maintenance` (fingerprints) and
 :mod:`rollup_maintenance` (aggregates).
 
-Layout (r9 revision — delta commits, the :mod:`operators.delta_store`
-protocol adapted to a two-relation version): ``index_path/v=N/
-{centroids, postings/p=X}`` plus a ``v=N/_COMMITTED`` marker written
-LAST — a version exists only once both relations landed, so a crash
-mid-write leaves a dangling dir that readers skip and the next writer
-overwrites. Postings are hash-partitioned on ``pmod(xxhash64(vec_id),
-P)`` (P in ``_META``) and each non-snapshot version is a DELTA holding
-only that upsert's assignments — O(|batch|) written per commit (through
-r8 every upsert rewrote the full postings relation). The postings AS OF
-version V resolve LAST-WRITE-WINS per vec_id (max version) over the
-latest snapshot ≤ V plus later deltas — exactly the replace-upsert merge
-the r8 store applied eagerly. ``ivf_build`` commits v=0 as a snapshot;
-:func:`compact_ann_index` folds the delta tail into a new snapshot;
-:func:`prune_ann_versions` GCs behind the snapshot floor (deltas above
-it stay load-bearing whatever their age). Centroids are k rows, rewritten
-per version (frozen within a lineage — refits go to a fresh path).
+Layout — the :mod:`operators.delta_store` protocol, exactly as the
+fingerprint, LSH-bucket and rollup stores use it: postings live at
+``index_path/v=N/p=X/`` and are committed, read, compacted and pruned
+by ``delta_store`` alone; this module knows no version-directory or
+marker format. Postings are hash-partitioned on
+``pmod(xxhash64(vec_id), P)`` and each stored row ``(vec_id, cid, dist,
+v)`` carries the version ``v`` that committed it. Each non-snapshot
+version is a DELTA holding only that upsert's assignments — O(|batch|)
+written per commit. The postings AS OF version V resolve
+LAST-WRITE-WINS per vec_id (the row of max ``v``, :func:`_resolve`) over
+the latest snapshot ≤ V plus later deltas; a compaction snapshot keeps
+each row's ``v``, so later deltas still outrank it. ``ivf_build``
+commits v=0 as a snapshot; :func:`compact_ann_index` folds the delta
+tail into a new snapshot; :func:`prune_ann_versions` GCs behind the
+snapshot floor (deltas above it stay load-bearing whatever their age).
+
+The codebook is fixed for a store's life (``ivf_build`` refuses a live
+path; upserts, ingest and compaction all reuse the existing centroids),
+so its k rows are stored ONCE, at ``index_path/centroids/``, claimed
+with ``os.mkdir`` and written before the v=0 commit. Refits go to a
+fresh path.
+
 Partitioning is by vec_id, NOT cid: a replace can move a vector between
 cells, and resolution must see every version of a vec_id in one
 partition to retract the stale row; the cid-pruned read lives in the
@@ -44,11 +50,12 @@ The maintenance contract (pinned in tests/test_ann_index.py):
 Scale: centroids are k×dim doubles (broadcast-sized, ride the task
 closure exactly as :func:`similarity.kmeans_assign` does); an upsert is
 a map-only assignment of the batch plus an O(|batch|) delta commit.
-Postings are (id, cid, dist) — 24 bytes/vector, independent of dim. Serving at scale
-goes through the cid-partitioned corpus layout
+Postings are (id, cid, dist, v) — 32 bytes/vector, independent of dim.
+Serving at scale goes through the cid-partitioned corpus layout
 (:func:`write_ivf_layout` → :func:`ivf_query_layout`): probes become
 partition pruning at the scan, reading ~nprobe/n_cells of the corpus
-bytes per query batch with zero corpus shuffle.
+bytes per query batch with zero corpus shuffle. Like the stores, a
+serving layout must be a local path.
 """
 
 from __future__ import annotations
@@ -80,51 +87,66 @@ def _assign_fn(method: str):
 
 POSTINGS_SCHEMA = "vec_id long, cid long, dist double"
 CENTROIDS_SCHEMA = "cid long, centroid array<double>"
-
-# Version bookkeeping delegates to the shared protocol (the ANN store's
-# v=N/_COMMITTED/_SNAPSHOT layout IS delta_store's — only the payload
-# inside a version differs). Private aliases retained for call-site
-# stability; re-implementing them here is the drift channel that let the
-# r10 prune fixes (pending-pin guard, de-commit-first) bypass this module.
-_committed_versions = delta_store.committed_versions
-_is_snapshot = delta_store.is_snapshot
+# stored postings rows also carry the version that committed them
+_STORED_SCHEMA = POSTINGS_SCHEMA + ", v long"
+_LAYOUT_SCHEMA = "vec_id long, embedding array<double>, cid int"
 
 
-def _write_version(
+def _latest(index_path: str) -> int:
+    """The latest committed version. Raises when nothing is committed,
+    and when the store is in the older per-version layout (committed
+    ``v=N/{centroids,postings}`` but no ``centroids/``): the shared reads
+    find no ``p=`` dirs there, so serving it would return nothing and
+    compacting it would commit an empty snapshot."""
+    versions = delta_store.committed_versions(index_path)
+    if not versions:
+        raise ValueError(f"no committed index at {index_path}; run ivf_build first")
+    if not os.path.isdir(os.path.join(index_path, "centroids")):
+        raise ValueError(
+            f"{index_path} has committed versions but no centroids/: it is "
+            "in the older per-version layout; rebuild it with ivf_build "
+            "to a fresh path"
+        )
+    return versions[-1]
+
+
+def _read_centroids(spark: SparkSession, index_path: str) -> DataFrame:
+    return spark.read.schema(CENTROIDS_SCHEMA).parquet(
+        os.path.join(index_path, "centroids")
+    )
+
+
+def _write_postings(
     index_path: str,
-    version: int,
-    centroids: DataFrame,
-    postings: DataFrame,
+    v: int,
+    df: DataFrame,
     snapshot: bool = False,
     reclaim_torn: bool = False,
 ) -> None:
-    """Commit one version: atomic single-writer claim (the shared
-    :func:`delta_store.claim_version` lock — two committers racing to the
-    same version fail loudly, never interleave), then centroids (k rows,
-    full), postings (delta or snapshot) hash-partitioned on vec_id,
-    ``_SNAPSHOT`` (if any) before the ``_COMMITTED`` marker —
-    atomic-or-absent, kind never ambiguous."""
-    meta = delta_store.load_or_init_meta(index_path, delta_store.DEFAULT_PARTITIONS)
-    P = meta["n_partitions"]
-    vdir = delta_store.claim_version(index_path, version, reclaim_torn)
-    centroids.write.mode("overwrite").parquet(os.path.join(vdir, "centroids"))
-    (
-        postings.withColumn("p", delta_store.partition_expr(["vec_id"], P))
-        .repartition(min(32, P), "p")
-        .write.mode("overwrite")
-        .partitionBy("p")
-        .parquet(os.path.join(vdir, "postings"))
+    """Commit ``df``'s postings as version ``v`` through
+    :func:`delta_store.write_version`, each row tagged with ``v``."""
+    P = delta_store.load_or_init_meta(index_path, delta_store.DEFAULT_PARTITIONS)[
+        "n_partitions"
+    ]
+    delta_store.write_version(
+        df.withColumn("v", F.lit(v).cast("long")),
+        index_path,
+        v,
+        ["vec_id"],
+        P,
+        snapshot,
+        reclaim_torn,
     )
-    with open(os.path.join(vdir, "_P"), "w") as f:
-        f.write(str(P))  # pruning safety if the store is ever re-sharded
-    if snapshot:
-        with open(os.path.join(vdir, "_SNAPSHOT"), "w"):
-            pass
-    with open(os.path.join(vdir, "_COMMITTED"), "w"):
-        pass  # marker LAST: a version is atomic-or-absent
 
 
-_postings_sources = delta_store.source_versions
+def _resolve(union: DataFrame) -> DataFrame:
+    """Last-write-wins per vec_id: the row with the highest ``v``.
+    Keeps ``v``, so a compaction snapshot's rows still lose to later
+    deltas; idempotent over duplicated rows, as delta_store requires."""
+    b = F.max_by(F.struct("cid", "dist", "v"), F.col("v")).alias("b")
+    return union.groupBy("vec_id").agg(b).select(
+        "vec_id", "b.cid", "b.dist", "b.v"
+    )
 
 
 def _read_postings(
@@ -134,66 +156,39 @@ def _read_postings(
     touched_p: list[int] | None = None,
 ) -> DataFrame:
     """Postings AS OF ``version``, resolved LAST-WRITE-WINS per vec_id
-    (``max_by`` over the version tag — replace-upserts retract their
-    stale row by construction). ``touched_p`` prunes the union to those
-    vec_id hash partitions — exact for id-probe reads (every version of
-    one vec_id hashes to the same partition)."""
-    sources = _postings_sources(index_path, version)
-    # Fast path: a single-snapshot chain (fresh build, or just compacted)
-    # needs no version tagging and no resolution aggregate — the snapshot
-    # IS the resolved relation. This keeps the common read (one snapshot,
-    # zero deltas) as cheap as the r8 monolith's.
-    if len(sources) == 1 and _is_snapshot(index_path, sources[0]):
-        meta_p = delta_store.load_or_init_meta(
-            index_path, delta_store.DEFAULT_PARTITIONS
-        )["n_partitions"]
-        prune_this = (
-            touched_p is not None
-            and delta_store.version_partitions(index_path, sources[0]) == meta_p
-        )
-        pdir = os.path.join(index_path, f"v={sources[0]}", "postings")
-        paths = [
-            os.path.join(pdir, d)
-            for d in os.listdir(pdir)
-            if d.startswith("p=")
-            and (not prune_this or int(d[2:]) in touched_p)
-        ]
-        if not paths:
-            return spark.createDataFrame([], POSTINGS_SCHEMA)
-        return spark.read.schema(POSTINGS_SCHEMA).parquet(*paths)
-    meta_p = delta_store.load_or_init_meta(
-        index_path, delta_store.DEFAULT_PARTITIONS
-    )["n_partitions"]
-    parts = []
-    for v in sources:
-        pdir = os.path.join(index_path, f"v={v}", "postings")
-        # prune only versions written under the probe set's hash (the _P
-        # sidecar; a version from before a re-shard reads whole)
-        prune_this = (
-            touched_p is not None
-            and delta_store.version_partitions(index_path, v) == meta_p
-        )
-        paths = [
-            os.path.join(pdir, d)
-            for d in os.listdir(pdir)
-            if d.startswith("p=")
-            and (not prune_this or int(d[2:]) in touched_p)
-        ]
-        if paths:
-            parts.append(
-                spark.read.schema(POSTINGS_SCHEMA)
-                .parquet(*paths)
-                .withColumn("__v", F.lit(v))
-            )
-    if not parts:
-        return spark.createDataFrame([], POSTINGS_SCHEMA)
-    union = parts[0]
-    for x in parts[1:]:
-        union = union.unionByName(x)
-    latest = union.groupBy("vec_id").agg(
-        F.max_by(F.struct("cid", "dist"), F.col("__v")).alias("b")
+    (replace-upserts retract their stale row by construction).
+    ``touched_p`` prunes the union to those vec_id hash partitions —
+    exact for id-probe reads (every version of one vec_id hashes to the
+    same partition)."""
+    P = delta_store.load_or_init_meta(index_path, delta_store.DEFAULT_PARTITIONS)[
+        "n_partitions"
+    ]
+    union = delta_store.read_union(
+        spark, index_path, version, _STORED_SCHEMA, touched_p, P
     )
-    return latest.select("vec_id", F.col("b.cid").alias("cid"), F.col("b.dist").alias("dist"))
+    # a single snapshot (fresh build, or just compacted) IS the resolved relation
+    sources = delta_store.source_versions(index_path, version)
+    if len(sources) > 1 or not delta_store.is_snapshot(index_path, sources[0]):
+        union = _resolve(union)
+    return union.select("vec_id", "cid", "dist")
+
+
+def _pin_file(layout_path: str) -> str:
+    """The layout's ``_STORE_VERSION`` pin file. A non-local layout
+    raises here, before anything is read or written."""
+    return os.path.join(delta_store._local(layout_path), "_STORE_VERSION")
+
+
+def _read_layout_pin(layout_path: str, action: str) -> int:
+    """The store version a serving layout was derived from."""
+    pin_file = _pin_file(layout_path)
+    if not os.path.exists(pin_file):
+        raise ValueError(
+            f"{layout_path} has no _STORE_VERSION pin; build it with "
+            f"write_ivf_layout before {action}"
+        )
+    with open(pin_file) as f:
+        return int(f.read())
 
 
 def _read_layout_cells(
@@ -215,17 +210,19 @@ def _read_layout_cells(
 
     A missing directory (a probed or newly-assigned cell with no layout
     rows yet) contributes zero rows, exactly like the root-read +
-    ``isin`` filter it replaces."""
-    paths = [
-        os.path.join(layout_path, f"cid={int(c)}")
-        for c in cids
-        if os.path.isdir(os.path.join(layout_path, f"cid={int(c)}"))
-    ]
+    ``isin`` filter it replaces. The read declares its schema, so a
+    ``cid=`` directory holding no parquet files reads as zero rows too,
+    and no schema-inference job runs. A non-local layout raises."""
+    root = delta_store._local(layout_path)
+    paths = [os.path.join(root, f"cid={int(c)}") for c in cids]
+    paths = [p for p in paths if os.path.isdir(p)]
     if not paths:
-        return spark.createDataFrame(
-            [], "vec_id long, embedding array<double>, cid int"
-        )
-    return spark.read.option("basePath", layout_path).parquet(*paths)
+        return spark.createDataFrame([], _LAYOUT_SCHEMA)
+    return (
+        spark.read.schema(_LAYOUT_SCHEMA)
+        .option("basePath", layout_path)
+        .parquet(*paths)
+    )
 
 
 def read_ann_index(
@@ -239,25 +236,15 @@ def read_ann_index(
     (:func:`prune_ann_versions`) raises instead of silently serving a
     neighbor. Empty relations with the right schemas if nothing
     is committed and no version was requested."""
-    versions = _committed_versions(index_path)
-    if version is not None:
-        if version not in versions:
-            raise ValueError(
-                f"version {version} is not committed at {index_path} "
-                f"(committed: {versions}) — it may have been GC'd by "
-                "prune_ann_versions"
-            )
-    elif not versions:
+    if version is None and not delta_store.committed_versions(index_path):
         return (
             spark.createDataFrame([], CENTROIDS_SCHEMA),
             spark.createDataFrame([], POSTINGS_SCHEMA),
         )
-    else:
-        version = versions[-1]
-    vdir = os.path.join(index_path, f"v={version}")
+    latest = _latest(index_path)
     return (
-        spark.read.schema(CENTROIDS_SCHEMA).parquet(os.path.join(vdir, "centroids")),
-        _read_postings(spark, index_path, version),
+        _read_centroids(spark, index_path),
+        _read_postings(spark, index_path, latest if version is None else version),
     )
 
 
@@ -282,7 +269,7 @@ def ivf_build(
     silently invisible (and orphan the old lineage). The documented refit
     runbook is ``ivf_build`` to a FRESH path, then re-point queries
     (see :func:`ivf_health` / streaming/ann_ingest.py)."""
-    existing = _committed_versions(index_path)
+    existing = delta_store.committed_versions(index_path)
     if existing:
         raise ValueError(
             f"{index_path} already holds committed versions {existing}; "
@@ -299,7 +286,13 @@ def ivf_build(
         id_col,
         vec_col,
     ).select(F.col(id_col).cast("long").alias("vec_id"), "cid", "dist")
-    _write_version(index_path, 0, cents, asg, snapshot=True)
+    # the codebook is written once, before the v=0 commit; os.mkdir claims
+    # it, so a racing build (or a crashed one's leftovers) raises here
+    os.makedirs(index_path, exist_ok=True)
+    cdir = os.path.join(index_path, "centroids")
+    os.mkdir(cdir)
+    cents.write.mode("append").parquet(cdir)
+    _write_postings(index_path, 0, asg, snapshot=True)
     return asg
 
 
@@ -318,9 +311,8 @@ def ivf_upsert(
     semantic the r8 store applied eagerly with a full-relation rewrite.
     Returns the batch assignment. ``assign`` must match the method the
     store was built with (see :func:`_assign_fn`)."""
-    cents, _ = read_ann_index(spark, index_path)
-    if cents.isEmpty():
-        raise ValueError(f"no committed index at {index_path}; run ivf_build first")
+    version = _latest(index_path) + 1
+    cents = _read_centroids(spark, index_path)
     asg = _assign_fn(assign)(
         new_vectors,
         cents.select(F.col("cid").alias(id_col), F.col("centroid").alias(vec_col)),
@@ -331,14 +323,13 @@ def ivf_upsert(
     # class the r11 LSH root-cause established: checkpointed blocks wait
     # on the lazy ContextCleaner, so repeated upserts in one JVM
     # accumulate executor storage). Recompute of the RETURNED frame is
-    # version-safe — the centroids scan pins the pre-upsert version's
-    # files at plan time, so a post-unpersist re-derivation yields the
-    # same assignment even after the store advances.
+    # version-safe — the codebook never changes, so a post-unpersist
+    # re-derivation yields the same assignment even after the store
+    # advances.
     asg = asg.persist()
     try:
         asg.count()  # materialize the one assignment pass eagerly
-        version = _committed_versions(index_path)[-1] + 1
-        _write_version(index_path, version, cents, asg)
+        _write_postings(index_path, version, asg)
     finally:
         asg.unpersist()
     return asg
@@ -376,17 +367,18 @@ def ivf_health(
     report runs on postings + centroids only (24-byte rows, k-row dim
     table); raw vectors are never touched.
     """
-    versions = _committed_versions(index_path)
-    if not versions:
-        raise ValueError(f"no committed index at {index_path}")
-    cents, postings = read_ann_index(spark, index_path)
+    latest = _latest(index_path)
+    cents = _read_centroids(spark, index_path)
+    postings = _read_postings(spark, index_path, latest)
     # Changed = rows NOT identical to the earliest retained version: new
     # ids, plus re-upserted ids whose distance moved (dist is the
     # deterministic 6-dp rounded assignment, so an untouched row carries
     # the exact same double through snapshots). A re-upserted id reflects
     # TODAY's distribution and must count toward drift — an id-only test
     # would mask a fully drifted same-id corpus as base.
-    base = _read_postings(spark, index_path, versions[0]).select(
+    base = _read_postings(
+        spark, index_path, delta_store.committed_versions(index_path)[0]
+    ).select(
         "vec_id", F.col("dist").alias("__bdist")
     )
     changed = (
@@ -424,7 +416,7 @@ def ivf_health(
     return (
         occ.crossJoin(F.broadcast(drift))
         .select(
-            F.lit(versions[-1]).alias("version"),
+            F.lit(latest).alias("version"),
             "n_vectors",
             "n_cells",
             "max_cell",
@@ -511,9 +503,9 @@ def ivf_query(
         _l2sq,
     )
 
-    cents, postings = read_ann_index(spark, index_path)
-    if cents.isEmpty():
-        raise ValueError(f"no committed index at {index_path}; run ivf_build first")
+    latest = _latest(index_path)
+    cents = _read_centroids(spark, index_path)
+    postings = _read_postings(spark, index_path, latest)
     probes = _probe_cells(queries, cents, id_col, vec_col, nprobe)
     cand = probes.join(postings.select("vec_id", "cid"), "cid").select(
         "q_id", "qv", F.col("vec_id").alias("n_id")
@@ -569,21 +561,18 @@ def write_ivf_layout(
     replaced ids (rewrites only the touched ``cid=`` partitions).
     Returns the pinned version.
     """
-    versions = _committed_versions(index_path)
-    if not versions:
-        raise ValueError(f"no committed index at {index_path}; run ivf_build first")
-    v = versions[-1]
+    pin_file = _pin_file(layout_path)
+    v = _latest(index_path)
     # Read AS OF the pinned version, not "latest again": an upsert landing
     # between the two listings would put v+1 rows into a layout pinned as
     # v, and the follow-up append_ivf_layout would append those same rows
     # a second time (duplicate vec_ids displace true top-k neighbors).
-    _, postings = read_ann_index(spark, index_path, version=v)
+    postings = _read_postings(spark, index_path, v)
     laid = corpus.select(
         F.col(id_col).cast("long").alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("embedding"),
     ).join(postings.select("vec_id", "cid"), "vec_id")
     laid.write.mode("overwrite").partitionBy("cid").parquet(layout_path)
-    pin_file = os.path.join(layout_path, "_STORE_VERSION")
     delta_store.atomic_write(pin_file, str(v))
     return v
 
@@ -619,25 +608,16 @@ def ivf_query_layout(
         _l2sq,
     )
 
-    versions = _committed_versions(index_path)
-    if not versions:
-        raise ValueError(f"no committed index at {index_path}; run ivf_build first")
-    pin_file = os.path.join(layout_path, "_STORE_VERSION")
-    if not os.path.exists(pin_file):
-        raise ValueError(
-            f"{layout_path} has no _STORE_VERSION pin; write it with "
-            "write_ivf_layout"
-        )
-    with open(pin_file) as f:
-        pinned = int(f.read())
-    if pinned != versions[-1]:
+    latest = _latest(index_path)
+    pinned = _read_layout_pin(layout_path, "querying")
+    if pinned != latest:
         raise ValueError(
             f"layout at {layout_path} was derived from store version "
-            f"{pinned} but the store is at {versions[-1]} — re-run "
+            f"{pinned} but the store is at {latest} — re-run "
             "write_ivf_layout (pruning with a stale cell assignment "
             "returns wrong neighbors, so this is refused, not served)"
         )
-    cents, _ = read_ann_index(spark, index_path)
+    cents = _read_centroids(spark, index_path)
     probes = _probe_cells(queries, cents, id_col, vec_col, nprobe)
     # probe once, reuse twice WITHOUT a pin (r13; was a one-shot
     # localCheckpoint — the storage-accumulation class the r11/r12 store
@@ -702,18 +682,8 @@ def append_ivf_layout(
     step between stream drains, or rewrite on re-point (the refit
     runbook in tests/test_ann_stream.py).
     """
-    versions = _committed_versions(index_path)
-    if not versions:
-        raise ValueError(f"no committed index at {index_path}; run ivf_build first")
-    latest = versions[-1]
-    pin_file = os.path.join(layout_path, "_STORE_VERSION")
-    if not os.path.exists(pin_file):
-        raise ValueError(
-            f"{layout_path} has no _STORE_VERSION pin; build it with "
-            "write_ivf_layout before appending"
-        )
-    with open(pin_file) as f:
-        pinned = int(f.read())
+    latest = _latest(index_path)
+    pinned = _read_layout_pin(layout_path, "appending")
     if pinned != latest - 1:
         raise ValueError(
             f"layout pin is {pinned} but the store is at {latest}; append "
@@ -777,7 +747,7 @@ def append_ivf_layout(
         laid.write.mode("append").partitionBy("cid").parquet(layout_path)
     finally:
         batch.unpersist()
-    delta_store.atomic_write(pin_file, str(latest))
+    delta_store.atomic_write(_pin_file(layout_path), str(latest))
     return latest
 
 
@@ -810,18 +780,8 @@ def upsert_ivf_layout(
     behind pin contract as :func:`append_ivf_layout`; advances the pin
     and returns it.
     """
-    versions = _committed_versions(index_path)
-    if not versions:
-        raise ValueError(f"no committed index at {index_path}; run ivf_build first")
-    latest = versions[-1]
-    pin_file = os.path.join(layout_path, "_STORE_VERSION")
-    if not os.path.exists(pin_file):
-        raise ValueError(
-            f"{layout_path} has no _STORE_VERSION pin; build it with "
-            "write_ivf_layout before upserting"
-        )
-    with open(pin_file) as f:
-        pinned = int(f.read())
+    latest = _latest(index_path)
+    pinned = _read_layout_pin(layout_path, "upserting")
     if pinned != latest - 1:
         raise ValueError(
             f"layout pin is {pinned} but the store is at {latest}; upsert "
@@ -945,7 +905,7 @@ def upsert_ivf_layout(
     finally:
         batch.unpersist()
         shutil.rmtree(staging, ignore_errors=True)
-    delta_store.atomic_write(pin_file, str(latest))
+    delta_store.atomic_write(_pin_file(layout_path), str(latest))
     return latest
 
 
@@ -973,49 +933,30 @@ def repin_ivf_layout(index_path: str, layout_path: str) -> int:
     up with :func:`upsert_ivf_layout`/:func:`append_ivf_layout`, or
     rewrite). Returns the new pinned version (unchanged if no snapshot
     follows the pin)."""
-    pin_file = os.path.join(layout_path, "_STORE_VERSION")
-    if not os.path.exists(pin_file):
-        raise ValueError(
-            f"{layout_path} has no _STORE_VERSION pin; build it with "
-            "write_ivf_layout before repinning"
-        )
-    with open(pin_file) as f:
-        pinned = int(f.read())
-    versions = set(_committed_versions(index_path))
+    pinned = _read_layout_pin(layout_path, "repinning")
+    versions = set(delta_store.committed_versions(index_path))
     advanced = pinned
-    while advanced + 1 in versions and _is_snapshot(index_path, advanced + 1):
+    while advanced + 1 in versions and delta_store.is_snapshot(
+        index_path, advanced + 1
+    ):
         advanced += 1
     if advanced != pinned:
-        delta_store.atomic_write(pin_file, str(advanced))
+        delta_store.atomic_write(_pin_file(layout_path), str(advanced))
     return advanced
 
 
 def compact_ann_index(spark: SparkSession, index_path: str) -> int:
     """Fold the latest snapshot + delta tail into ONE new snapshot
-    version (returned): the resolved postings written whole, centroids
-    carried over. O(live index) by design — scheduled maintenance that
-    bounds read amplification and unlocks :func:`prune_ann_versions`.
-    Single writer: run between stream drains (the ann_ingest ledger
-    pins base versions, so a replay still resolves through the
-    snapshot)."""
-    versions = _committed_versions(index_path)
-    if not versions:
-        raise ValueError(f"no committed index at {index_path}; nothing to compact")
-    latest = versions[-1]
-    cents, postings = read_ann_index(spark, index_path)
-    # persist + explicit unpersist (r11; was localCheckpoint): repeated
-    # compacts in one long-lived JVM accumulated each snapshot-sized
-    # checkpoint until the lazy ContextCleaner got to it (the lsh_ingest
-    # finding). Recompute-safe: the postings read pins version dirs at
-    # plan time and the snapshot writes to a NEW dir.
-    resolved = postings.persist()
-    resolved.count()
-    next_v = latest + 1
-    try:
-        _write_version(index_path, next_v, cents, resolved, snapshot=True)
-    finally:
-        resolved.unpersist()
-    return next_v
+    version (returned) — :func:`delta_store.compact` with the
+    last-write-wins :func:`_resolve`; the codebook is untouched. O(live
+    index) by design — scheduled maintenance that bounds read
+    amplification and unlocks :func:`prune_ann_versions`. Single writer:
+    run between stream drains (the ann_ingest ledger pins base versions,
+    so a replay still resolves through the snapshot)."""
+    _latest(index_path)
+    return delta_store.compact(
+        spark, index_path, _STORED_SCHEMA, ["vec_id"], _resolve
+    )
 
 
 def prune_ann_versions(index_path: str, keep_last: int = 2) -> list[int]:

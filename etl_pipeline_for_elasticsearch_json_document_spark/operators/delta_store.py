@@ -469,6 +469,21 @@ def compact(
     return next_v
 
 
+def _ledger_marker(name: str) -> tuple[str, str, int] | None:
+    """``(marker, lineage, batch_id)`` for a ledger file name, or None
+    if it parses to no marker. Sidecar suffixes are stripped repeatedly:
+    a crash between a tmp write and its ``os.replace`` leaves
+    double-suffixed leftovers such as ``'.recovered.tmp'``, which a
+    single strip would never tie back to their marker."""
+    marker = name
+    while marker.endswith((".recovered", ".tmp", ".attempt")):
+        marker = marker[: marker.rindex(".")]
+    lineage, sep, bid = marker.rpartition("-")
+    if not sep or not bid.isdigit():
+        return None
+    return marker, lineage, int(bid)
+
+
 def pending_pins(path: str) -> list[int]:
     """Base versions a crash replay may still re-read, from the ledger
     markers under ``path/_ledger/`` (the marker-first exactly-once
@@ -490,20 +505,18 @@ def pending_pins(path: str) -> list[int]:
         return []
     latest: dict[str, tuple[int, int]] = {}  # lineage -> (batch_id, base_v)
     for name in os.listdir(ledger):
-        if name.endswith((".recovered", ".tmp", ".attempt")):
-            continue
-        lineage, sep, bid = name.rpartition("-")
-        if not sep or not bid.isdigit():
-            continue
-        mp = os.path.join(ledger, name)
+        parsed = _ledger_marker(name)
+        if parsed is None or parsed[0] != name:
+            continue  # unparseable, or a sidecar
+        _, lineage, bid = parsed
         try:
-            with open(mp) as f:
+            with open(os.path.join(ledger, name)) as f:
                 base_v = int(f.read())
         except (OSError, ValueError):
             continue
         cur = latest.get(lineage)
-        if cur is None or int(bid) > cur[0]:
-            latest[lineage] = (int(bid), base_v)
+        if cur is None or bid > cur[0]:
+            latest[lineage] = (bid, base_v)
     return sorted({base for _, base in latest.values()})
 
 
@@ -521,25 +534,14 @@ def gc_ledger(path: str, lineage: str | None = None) -> list[str]:
     by_lineage: dict[str, list[tuple[int, str]]] = {}
     sidecars: dict[str, list[str]] = {}
     for name in os.listdir(ledger):
-        # strip sidecar suffixes ITERATIVELY: a crash between the tmp
-        # write and os.replace leaves double-suffixed leftovers like
-        # '.recovered.tmp' / '.attempt.tmp' that a single-pass strip
-        # never parses, orphaning them forever (ADVICE r10 #4)
-        base_name = name
-        stripped = True
-        while stripped:
-            stripped = False
-            for suf in (".recovered", ".tmp", ".attempt"):
-                if base_name.endswith(suf):
-                    base_name = base_name[: -len(suf)]
-                    stripped = True
-        lin, sep, bid = base_name.rpartition("-")
-        if not sep or not bid.isdigit():
+        parsed = _ledger_marker(name)
+        if parsed is None:
             continue
-        if base_name != name:
-            sidecars.setdefault(base_name, []).append(name)
+        marker, lin, bid = parsed
+        if marker != name:
+            sidecars.setdefault(marker, []).append(name)
         else:
-            by_lineage.setdefault(lin, []).append((int(bid), name))
+            by_lineage.setdefault(lin, []).append((bid, name))
     removed = []
     for lin, markers in by_lineage.items():
         if lineage is not None and lin != lineage:

@@ -11,9 +11,9 @@ Exactly-once under foreachBatch's at-least-once: the marker-first
 ledger all four store streams share (:func:`delta_store.pin_base`) pins,
 per (checkpoint-lineage, batch), the BASE store version, before any
 store write. On replay the marker already exists, so the batch
-re-assigns against the SAME retained base version, skips the version
-commit if it already landed, and overwrites its own deterministic output
-dir. The codebook NEVER changes inside the stream —
+re-assigns against the same codebook, skips the version commit if it
+already landed, and overwrites its own deterministic output dir. The
+codebook NEVER changes inside the stream (it is stored once per store) —
 upserts only append postings (r9: as O(|batch|) DELTA versions —
 see the ann_index store docs); :func:`ann_index.ivf_health` is the
 scheduled measurement that decides when to stop the stream, refit
@@ -34,10 +34,10 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_for_elasticsearch_json_document_spark.operators import delta_store
 from etl_pipeline_for_elasticsearch_json_document_spark.operators.ann_index import (
-    CENTROIDS_SCHEMA,
     _assign_fn,
-    _committed_versions,
-    _write_version,
+    _latest,
+    _read_centroids,
+    _write_postings,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
     start_foreach_batch,
@@ -61,18 +61,11 @@ def _ann_batch_processor(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # refuse before pinning: an empty store must leave no marker
-        if not _committed_versions(index_path):
-            raise ValueError(
-                f"no committed ANN index at {index_path}; run ivf_build "
-                "before attaching the stream (the codebook is fitted "
-                "offline, never inside a micro-batch)"
-            )
+        # refuse before pinning: an empty store must leave no marker (the
+        # codebook is fitted offline by ivf_build, never in a micro-batch)
+        _latest(index_path)
         marker, base_v = delta_store.pin_base(index_path, ckpt_id, batch_id)
-        vdir = os.path.join(index_path, f"v={base_v}")
-        cents = spark.read.schema(CENTROIDS_SCHEMA).parquet(
-            os.path.join(vdir, "centroids")
-        )
+        cents = _read_centroids(spark, index_path)
         asg = _assign_fn(assign)(
             batch_df,
             cents.select(
@@ -87,9 +80,9 @@ def _ann_batch_processor(
         # ANN ingest stream accumulated every batch's blocks in executor
         # storage exactly like the LSH store did (build 3.2 s → 12.2 s
         # across cycles before the lsh_ingest fix). Recompute is
-        # version-safe: the centroids read pins v={base_v} directories at
-        # plan time, so a lost block re-derives the SAME assignment even
-        # after the store advances.
+        # version-safe: the codebook is stored once and never changes, so
+        # a lost block re-derives the SAME assignment even after the
+        # store advances.
         asg = asg.persist()
         try:
             asg.count()  # materialize the one assignment pass eagerly
@@ -104,9 +97,7 @@ def _ann_batch_processor(
                 index_path,
                 marker,
                 base_v,
-                lambda v: _write_version(
-                    index_path, v, cents, asg, reclaim_torn=True
-                ),
+                lambda v: _write_postings(index_path, v, asg, reclaim_torn=True),
             )
             # deterministic per-(lineage, batch) dir + overwrite = idempotent
             asg.write.mode("overwrite").parquet(

@@ -128,9 +128,6 @@ def _check_hash_family(index_path: str) -> None:
     delta_store.atomic_write(fp, HASH_FAMILY)
 
 
-_committed_versions = delta_store.committed_versions
-
-
 def _resolve(union: DataFrame) -> DataFrame:
     """Anchor resolution: min doc id per bucket over snapshot+deltas —
     exactly the eagerly-merged relation (min is associative, commutative,

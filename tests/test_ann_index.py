@@ -749,7 +749,7 @@ def test_upsert_commit_is_batch_sized(spark, emb, tmp_path):
     ivf_build(spark, path, build, k=4)
     one = emb.filter(F.col("vec_id") >= 120).limit(1)
     ivf_upsert(spark, path, one)
-    pdir = os.path.join(path, "v=1", "postings")
+    pdir = os.path.join(path, "v=1")
     paths = [os.path.join(pdir, d) for d in os.listdir(pdir) if d.startswith("p=")]
     assert (
         spark.read.schema("vec_id long, cid long, dist double")
@@ -932,3 +932,76 @@ def test_read_layout_cells_lists_only_requested_dirs(spark, tmp_path):
     empty = _read_layout_cells(spark, layout, [missing, missing + 1])
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] == ["vec_id", "embedding", "cid"]
+
+
+def test_read_layout_cells_reads_debris_empty_and_refuses_remote(spark, tmp_path):
+    """A cid= directory holding no parquet files (a crashed write's
+    debris) reads as zero rows with the layout schema instead of failing
+    schema inference, and a non-local layout raises instead of reading
+    as an empty layout."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.ann_index import (
+        _read_layout_cells,
+    )
+
+    layout = str(tmp_path / "layout")
+    os.makedirs(os.path.join(layout, "cid=3"))
+    open(os.path.join(layout, "cid=3", "_SUCCESS"), "w").close()
+    debris = _read_layout_cells(spark, layout, [3])
+    assert debris.count() == 0
+    assert [f.name for f in debris.schema.fields] == ["vec_id", "embedding", "cid"]
+    with pytest.raises(ValueError, match="not a local path"):
+        _read_layout_cells(spark, "s3a://bucket/layout", [3])
+
+
+def test_layout_pin_refuses_non_local_layout(spark, emb, tmp_path):
+    """The serving-layout pin is a local file like every store marker: a
+    URI-scheme layout is refused before anything is read or written."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.ann_index import (
+        ivf_query_layout,
+        repin_ivf_layout,
+    )
+
+    path = str(tmp_path / "ivf")
+    ivf_build(spark, path, emb.filter(F.col("vec_id") < 30), k=2)
+    remote = "s3a://bucket/layout"
+    with pytest.raises(ValueError, match="not a local path"):
+        ivf_query_layout(spark, path, remote, emb.limit(2))
+    with pytest.raises(ValueError, match="not a local path"):
+        repin_ivf_layout(path, remote)
+
+
+def test_older_layout_store_is_refused(spark, tmp_path):
+    """A store in the older per-version layout (committed
+    v=0/{centroids,postings}, no centroids/ at the root) is refused, not
+    read as empty: the shared union read finds no p= dirs in it, so an
+    upsert would build on nothing and a compaction would commit an empty
+    snapshot. No new version is written."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.ann_index import (
+        CENTROIDS_SCHEMA,
+        POSTINGS_SCHEMA,
+        compact_ann_index,
+        upsert_ivf_layout,
+    )
+
+    path = str(tmp_path / "ivf")
+    v0 = os.path.join(path, "v=0")
+    spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 1.0])], CENTROIDS_SCHEMA
+    ).write.parquet(os.path.join(v0, "centroids"))
+    spark.createDataFrame([(5, 0, 0.0)], POSTINGS_SCHEMA).write.parquet(
+        os.path.join(v0, "postings", "p=0")
+    )
+    for marker in ("_SNAPSHOT", "_COMMITTED"):
+        open(os.path.join(v0, marker), "w").close()
+    vecs = spark.createDataFrame(
+        [(7, [0.5, 0.5])], "vec_id long, embedding array<double>"
+    )
+    calls = [
+        lambda: ivf_upsert(spark, path, vecs),
+        lambda: compact_ann_index(spark, path),
+        lambda: upsert_ivf_layout(spark, path, vecs, str(tmp_path / "layout")),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="older per-version layout"):
+            call()
+    assert sorted(d for d in os.listdir(path) if d.startswith("v=")) == ["v=0"]

@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 from etl_pipeline_for_elasticsearch_json_document_spark.operators.ann_index import (
     ivf_build,
     read_ann_index,
-    _committed_versions,
+)
+from etl_pipeline_for_elasticsearch_json_document_spark.operators.delta_store import (
+    committed_versions as _committed_versions,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.operators.similarity import (
     kmeans_assign,

@@ -416,6 +416,7 @@ def test_gc_ledger_strips_double_suffixed_leftovers(tmp_path):
     ]:
         with open(os.path.join(ledger, name), "w") as f:
             f.write(body)
+    assert ds.pending_pins(path) == [2]  # the leftovers pin nothing
     removed = ds.gc_ledger(path)  # spent = everything but the last batch
     assert set(removed) == {"ckpt-0", "ckpt-0.recovered.tmp", "ckpt-0.attempt.tmp"}
     assert sorted(os.listdir(ledger)) == ["ckpt-1"]

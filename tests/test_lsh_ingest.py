@@ -11,8 +11,10 @@ import os
 from pyspark.sql import functions as F
 
 from etl_pipeline_for_elasticsearch_json_document_spark.operators import dedup, graph
+from etl_pipeline_for_elasticsearch_json_document_spark.operators.delta_store import (
+    committed_versions as _committed_versions,
+)
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.lsh_ingest import (
-    _committed_versions,
     _lsh_batch_processor,
     run_lsh_ingest_stream,
 )
@@ -198,8 +200,8 @@ def test_compact_is_resolution_invariant(spark, sf_dir, tmp_path):
     comp(b2, 1)
 
     def resolved(idx):
-        from etl_pipeline_for_elasticsearch_json_document_spark.streaming.lsh_ingest import (
-            _committed_versions as cv,
+        from etl_pipeline_for_elasticsearch_json_document_spark.operators.delta_store import (
+            committed_versions as cv,
         )
 
         return {

@@ -1,6 +1,7 @@
-"""Structural guard: the delta-store ledger, the atomic file write and
-the foreachBatch starter each live in one place, so a new store stream
-reuses them instead of copying the protocol."""
+"""Structural guard: the delta-store ledger, its version directories and
+snapshot marker, the atomic file write and the foreachBatch starter each
+live in one place, so a new store or store stream reuses them instead of
+copying the protocol."""
 
 from __future__ import annotations
 
@@ -19,6 +20,8 @@ PKG = (
     [
         ('"_ledger"', "operators/delta_store.py"),
         ("os.replace(", "operators/delta_store.py"),
+        ('f"v={', "operators/delta_store.py"),
+        ('"_SNAPSHOT"', "operators/delta_store.py"),
         ("writeStream.foreachBatch", "streaming/identity.py"),
     ],
 )
