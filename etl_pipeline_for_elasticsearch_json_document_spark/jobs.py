@@ -2,28 +2,80 @@
 (``ElasticSearch ETL.py:201-300``) as a Spark batch pipeline.
 
 Differences by design (documented, not accidental):
-- the pagination loop pages a DataFrame with a keyset cursor predicate
-  instead of HTTP calls (sources/keyset.py); at cluster scale you usually
-  skip paging entirely and let one distributed write handle the whole
-  batch — pagination survives for byte-level parity with the reference's
-  file layout and for bounded-memory single-node runs;
-- per-batch TSV naming and SUCCESS/FAILED audit rows match A16-A21;
-- the flatten plan is generated once and reused across pages (same
-  within-run schema union as the reference's per-call discovery, but paid
-  once).
+- the keyset pager (sources/keyset.py) only finds the page boundaries:
+  each page brings its sort keys and ids to the driver, never its
+  documents, and the first page's scan yields the A1 count;
+- every row is then tagged with its page's A17 directory name, and the
+  whole export is flattened once and written by ONE partitioned TSV job
+  (one part file per page, rows in sort order) into a staging directory;
+  the page directories are moved into ``output_dir`` only after that
+  write commits and its row count matches the A1 count, so a failed
+  export leaves no partial pages (one write per page left the pages
+  written before a failure behind);
+- per-batch TSV naming and SUCCESS/FAILED audit rows match A16-A21; a
+  row tied with a page's last sort key joins that page, which may then
+  hold more than ``batch_size`` rows;
+- the flatten plan is generated once for the whole export (the same
+  within-run schema union as the reference's per-call discovery, but
+  paid once).
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime
+import os
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import apply_flatten_stages, flatten_stages, unwrap_envelope
+from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import (
+    apply_flatten_stages,
+    flatten_stages,
+    unwrap_envelope,
+    wide_flatten_conf,
+)
 from etl_pipeline_for_elasticsearch_json_document_spark.sinks.audit import AuditLog
 from etl_pipeline_for_elasticsearch_json_document_spark.sinks.tsv import batch_tsv_path, write_tsv
-from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import paginate
+from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Page, after_predicate, paginate
+
+#: partition column of the one write: the A17 directory name of a row's page
+_PAGE = "_page"
+
+
+def _page_labels(pages: list[Page], sort_cols, id_col: str) -> Column:
+    """Each row's A17 directory name: that of the first page whose cursor
+    the row does not sort after — the pager's own predicate."""
+    names = []
+    for p in pages:
+        last_id = max((r[id_col] for r in p.rows if r[id_col] is not None), default=None)
+        names.append(batch_tsv_path("", last_id))  # the name only
+    label = None
+    for p, name in zip(pages[:-1], names):
+        on_or_before = ~after_predicate(sort_cols, p.cursor)
+        label = F.when(on_or_before, name) if label is None else label.when(on_or_before, name)
+    return F.lit(names[-1]) if label is None else label.otherwise(names[-1])
+
+
+def _publish(spark: SparkSession, fs, staging: str, output_dir: str, placed: list) -> None:
+    """Move each committed ``_page=<name>`` directory to ``output_dir/<name>``
+    with a ``_SUCCESS`` marker, replacing a same-named directory, then
+    delete the staging directory. Hadoop ``FileSystem`` calls, so any
+    scheme the TSV writer accepts works here too."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    unescape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+    for status in fs.listStatus(Path(staging)):
+        name = status.getPath().getName()
+        if not name.startswith(_PAGE + "="):
+            continue
+        dest = Path(output_dir, unescape(name[len(_PAGE) + 1 :]))
+        fs.delete(dest, True)
+        if not fs.rename(status.getPath(), dest):
+            raise OSError(f"could not move {status.getPath()} to {dest}")
+        placed.append(dest)
+        fs.create(Path(dest, "_SUCCESS"), True).close()
+    fs.delete(Path(staging), True)
 
 
 def fetch_and_export_documents(
@@ -41,23 +93,37 @@ def fetch_and_export_documents(
     start_ts = datetime.datetime.now(datetime.timezone.utc)
     batch_id = start_ts.strftime("%Y%m%d%H%M%S")  # A21 run-id scheme
     audit = AuditLog(spark, audit_path)
+    staging = os.path.join(output_dir, f"_staging_{uuid.uuid4().hex}")
+    fs, placed = None, []
     try:
         docs = unwrap_envelope(source)
-        total = docs.count()  # A1 count
-        # Staged cascade (r5): one plan generation for the whole export,
-        # ~1 s less per-batch action overhead on 5k-column documents
-        stages = flatten_stages(docs, bug_compat=bug_compat)
-        exported = 0
-        for page, cursor in paginate(docs, sort_cols, batch_size):
-            flat = apply_flatten_stages(page, stages)
-            n = page.count()
-            if n == 0:  # A18 guard
-                continue
-            last_id = page.agg(F.max(id_col)).first()[0]
-            write_tsv(flat, batch_tsv_path(output_dir, last_id), coalesce=1)
-            exported += n
+        pages = list(paginate(docs, sort_cols, batch_size, key_cols=(id_col,)))
+        total = pages[0].total if pages else 0  # A1 count
+        written = 0
+        if pages:  # an empty source writes nothing
+            stages = flatten_stages(docs, bug_compat=bug_compat)
+            # the shuffle moves the raw documents, not the wide flattened
+            # rows; each page lands whole in one task, so one part file
+            tagged = (
+                docs.withColumn(_PAGE, _page_labels(pages, sort_cols, id_col))
+                .repartition(_PAGE)
+                .sortWithinPartitions(_PAGE, *sort_cols)
+            )
+            flat = apply_flatten_stages(tagged, [*stages[:-1], [*stages[-1], _PAGE]])
+            counted = Observation()
+            fs = spark._jvm.org.apache.hadoop.fs.Path(staging).getFileSystem(spark._jsc.hadoopConfiguration())
+            with wide_flatten_conf(spark):  # one 600+-column projection
+                write_tsv(flat.observe(counted, F.count(F.lit(1)).alias("n")), staging, partition_by=_PAGE)
+            written = counted.get["n"]
+            if written != total:
+                raise RuntimeError(f"export wrote {written} rows but counted {total} source documents")
+            _publish(spark, fs, staging, output_dir, placed)
         audit.success(start_ts, batch_id=batch_id, record_count=total)
-        return exported
+        return written
     except Exception as e:
+        if fs is not None:
+            with contextlib.suppress(Exception):
+                for p in [*placed, spark._jvm.org.apache.hadoop.fs.Path(staging)]:
+                    fs.delete(p, True)
         audit.failure(start_ts, batch_id=batch_id, error=e)
         raise

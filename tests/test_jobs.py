@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import dataclasses
+import datetime
 import glob
 import json
 import os
+import random
 import shutil
 import tempfile
 
@@ -32,10 +35,12 @@ def tmpdir():
 def test_keyset_pagination_covers_everything_once(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
     seen = []
-    for page, cursor in paginate(events, ["ts", "event_id"], 300):
-        ids = [r["event_id"] for r in page.select("event_id").collect()]
+    pages = list(paginate(events, ["ts", "event_id"], 300))
+    for page in pages:
+        ids = [r["event_id"] for r in page.rows]
         seen.extend(ids)
         assert len(ids) <= 300
+        assert page.total == events.count()
     assert len(seen) == events.count()
     assert len(set(seen)) == len(seen)  # no page overlap
 
@@ -43,10 +48,11 @@ def test_keyset_pagination_covers_everything_once(spark, sf_dir):
 def test_keyset_resume_from_cursor(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
     pages = paginate(events, ["ts", "event_id"], 400)
-    _, c1 = next(pages)
+    c1 = next(pages).cursor
     resumed = list(paginate(events, ["ts", "event_id"], 400, start=c1))
-    n_after = sum(p.count() for p, _ in resumed)
+    n_after = sum(len(p.rows) for p in resumed)
     assert n_after == events.count() - 400
+    assert resumed[0].total == n_after
 
 
 def test_batch_export_job(spark, tmpdir):
@@ -93,6 +99,162 @@ def test_batch_export_failure_audit(spark, tmpdir):
     assert [r["job_status"] for r in audit] == ["FAILED"]
     assert audit[0]["record_count_loaded"] is None  # omitted on failure (A20)
     assert "no_such_column" in audit[0]["error_desc"]
+
+
+def _source(spark, docs, partitions=4):
+    """``docs`` in shuffled order, spread over ``partitions`` partitions."""
+    docs = list(docs)
+    random.Random(7).shuffle(docs)
+    rdd = spark.sparkContext.parallelize([json.dumps(d) for d in docs], partitions)
+    src = spark.read.json(rdd)
+    assert src.rdd.getNumPartitions() >= partitions
+    return src
+
+
+def _doc(i, ts=True):
+    d = {"claimRequestId": i, "lines": [{"lineNumber": 1, "charge": float(i)}]}
+    if ts:
+        d["auditProcessedDateTimeUtc"] = f"2025-06-01T11:30:{i:02d}Z"
+    return d
+
+
+def _page_dirs(out):
+    """{page dir: rows as dicts}, checking that each page dir holds one
+    header-bearing part file plus ``_SUCCESS`` and nothing else is left."""
+    pages = {}
+    for name in sorted(os.listdir(out)):
+        assert name.startswith("rta_claim_headers_") and name.endswith(".tsv"), name
+        files = sorted(f for f in os.listdir(os.path.join(out, name)) if not f.startswith("."))
+        assert len(files) == 2 and files[0] == "_SUCCESS" and files[1].startswith("part-"), files
+        with open(os.path.join(out, name, files[1])) as f:
+            header, *lines = f.read().splitlines()
+        assert "ClaimRequestId" in header.split("\t")
+        pages[name] = [dict(zip(header.split("\t"), line.split("\t"))) for line in lines]
+    return pages
+
+
+def _key(row):
+    ts = row["AuditProcessedDateTimeUtc"]
+    return (ts != "", ts, int(row["ClaimRequestId"]))  # nulls first, as orderBy
+
+
+def _audit(spark, tmpdir):
+    return AuditLog(spark, os.path.join(tmpdir, "audit")).read().collect()
+
+
+def test_export_writes_one_sorted_part_file_per_page(spark, tmpdir):
+    out = os.path.join(tmpdir, "out")
+    n = fetch_and_export_documents(
+        spark, _source(spark, [_doc(i) for i in range(23)]), out, os.path.join(tmpdir, "audit"), batch_size=5
+    )
+    assert n == 23
+    pages = sorted(_page_dirs(out).items(), key=lambda kv: _key(kv[1][0]))
+    assert [len(rows) for _, rows in pages] == [5, 5, 5, 5, 3]
+    flat = [_key(r) for _, rows in pages for r in rows]
+    assert flat == sorted(flat) and len(set(flat)) == 23  # in order, each once
+    for name, rows in pages:  # A17: named by the page's last claim id
+        assert name.startswith(f"rta_claim_headers_{max(int(r['ClaimRequestId']) for r in rows)}_")
+    assert [(r["job_status"], r["record_count_loaded"]) for r in _audit(spark, tmpdir)] == [("SUCCESS", 23)]
+
+
+def test_export_pages_null_sort_values_first(spark, tmpdir):
+    """A null sort value sorts first; the cursor after it must not compare
+    NULL and lose the rows behind it."""
+    docs = [_doc(i, ts=False) for i in range(3)] + [_doc(i) for i in range(3, 6)]
+    out = os.path.join(tmpdir, "out")
+    assert fetch_and_export_documents(spark, _source(spark, docs), out, os.path.join(tmpdir, "audit"), batch_size=2) == 6
+    pages = _page_dirs(out)
+    assert len(pages) == 3 and all(len(rows) <= 2 for rows in pages.values())
+    flat = sorted(_key(r) for rows in pages.values() for r in rows)
+    assert [k[2] for k in flat] == list(range(6))
+    assert [(r["job_status"], r["record_count_loaded"]) for r in _audit(spark, tmpdir)] == [("SUCCESS", 6)]
+
+
+def test_export_keeps_rows_tied_at_a_page_boundary(spark, tmpdir):
+    """Rows tied on every sort column at a page's end join that page."""
+    docs = [_doc(1), _doc(2), _doc(2), _doc(3)]
+    out = os.path.join(tmpdir, "out")
+    assert fetch_and_export_documents(spark, _source(spark, docs), out, os.path.join(tmpdir, "audit"), batch_size=2) == 4
+    pages = _page_dirs(out)
+    assert sorted(int(r["ClaimRequestId"]) for rows in pages.values() for r in rows) == [1, 2, 2, 3]
+    assert sorted(len(rows) for rows in pages.values()) == [1, 3]
+    assert [(r["job_status"], r["record_count_loaded"]) for r in _audit(spark, tmpdir)] == [("SUCCESS", 4)]
+
+
+def test_export_refuses_a_write_that_misses_the_count(spark, tmpdir, monkeypatch):
+    from etl_pipeline_for_elasticsearch_json_document_spark import jobs
+
+    real = jobs.paginate
+
+    def overcounted(*args, **kwargs):
+        for page in real(*args, **kwargs):
+            yield dataclasses.replace(page, total=page.total + 1)
+
+    monkeypatch.setattr(jobs, "paginate", overcounted)
+    out = os.path.join(tmpdir, "out")
+    with pytest.raises(RuntimeError, match="wrote 10 rows but counted 11"):
+        fetch_and_export_documents(
+            spark, _source(spark, [_doc(i) for i in range(10)]), out, os.path.join(tmpdir, "audit"), batch_size=5
+        )
+    assert os.listdir(out) == []
+    assert [r["job_status"] for r in _audit(spark, tmpdir)] == ["FAILED"]
+
+
+def test_second_export_keeps_the_first_runs_pages(spark, tmpdir):
+    out = os.path.join(tmpdir, "out")
+    audit = os.path.join(tmpdir, "audit")
+    fetch_and_export_documents(spark, _source(spark, [_doc(i) for i in range(10)]), out, audit, batch_size=5)
+    fetch_and_export_documents(spark, _source(spark, [_doc(i) for i in range(10, 20)]), out, audit, batch_size=5)
+    pages = _page_dirs(out)
+    assert len(pages) == 4
+    assert sorted(int(r["ClaimRequestId"]) for rows in pages.values() for r in rows) == list(range(20))
+
+
+def test_same_named_page_is_replaced(spark, tmpdir, monkeypatch):
+    from etl_pipeline_for_elasticsearch_json_document_spark import jobs
+    from etl_pipeline_for_elasticsearch_json_document_spark.sinks import tsv
+
+    fixed = datetime.datetime(2025, 6, 1, 12, 0, 0)
+    monkeypatch.setattr(jobs, "batch_tsv_path", lambda d, last_id: tsv.batch_tsv_path(d, last_id, now=fixed))
+    out = os.path.join(tmpdir, "out")
+    audit = os.path.join(tmpdir, "audit")
+    docs = [_doc(i) for i in range(10)]
+    fetch_and_export_documents(spark, _source(spark, docs), out, audit, batch_size=5)
+    first = sorted(os.listdir(out))
+    with open(os.path.join(out, first[0], "stale.csv"), "w") as f:
+        f.write("x\n")
+    fetch_and_export_documents(spark, _source(spark, docs), out, audit, batch_size=5)
+    assert sorted(os.listdir(out)) == first
+    pages = _page_dirs(out)  # one part file each: the stale file is gone
+    assert sorted(int(r["ClaimRequestId"]) for rows in pages.values() for r in rows) == list(range(10))
+
+
+def test_empty_source_exports_nothing(spark, tmpdir):
+    src = spark.createDataFrame([], "claimRequestId long, auditProcessedDateTimeUtc string, v string")
+    out = os.path.join(tmpdir, "out")
+    assert fetch_and_export_documents(spark, src, out, os.path.join(tmpdir, "audit"), batch_size=5) == 0
+    assert not os.path.exists(out)
+    assert [(r["job_status"], r["record_count_loaded"]) for r in _audit(spark, tmpdir)] == [("SUCCESS", 0)]
+
+
+def test_failed_write_leaves_no_pages(spark, tmpdir, monkeypatch):
+    from etl_pipeline_for_elasticsearch_json_document_spark import jobs
+
+    real = jobs.write_tsv
+
+    def write_then_fail(*args, **kwargs):
+        real(*args, **kwargs)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(jobs, "write_tsv", write_then_fail)
+    out = os.path.join(tmpdir, "out")
+    with pytest.raises(OSError, match="disk full"):
+        fetch_and_export_documents(
+            spark, _source(spark, [_doc(i) for i in range(10)]), out, os.path.join(tmpdir, "audit"), batch_size=5
+        )
+    assert os.listdir(out) == []
+    audit = _audit(spark, tmpdir)
+    assert [r["job_status"] for r in audit] == ["FAILED"] and "disk full" in audit[0]["error_desc"]
 
 
 def test_column_search_a23(spark):

@@ -1,0 +1,60 @@
+"""Counted work per call: Spark jobs run by the batch export, pinned as
+equalities so a regression reads as a failure, not as noise.
+
+A lower count updates the pin (and is recorded in CHANGES.md); a higher
+count fails the test.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import os
+
+from perfbench import gen_docs
+
+from etl_pipeline_for_elasticsearch_json_document_spark import jobs
+
+
+@contextlib.contextmanager
+def job_group(spark, name: str):
+    """Run the block in Spark job group ``name``; yields a list that holds
+    the group's job count once the block ends."""
+    sc = spark.sparkContext
+    counted: list[int] = []
+    sc.setJobGroup(name, name)
+    try:
+        yield counted
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        counted.append(len(sc.statusTracker().getJobIdsForGroup(name)))
+
+
+def _export_jobs(spark, tmp_path, batch_size: int, name: str) -> int:
+    path = tmp_path / f"{name}.json"
+    path.write_bytes(gen_docs.dumps_lines(gen_docs.make_documents(1, 10, max_lines=1)))
+    src = spark.read.json(str(path))  # schema inference stays outside the group
+    with job_group(spark, name) as jobs_run:
+        n = jobs.fetch_and_export_documents(
+            spark, src, os.fspath(tmp_path / f"{name}-out"), os.fspath(tmp_path / f"{name}-audit"), batch_size=batch_size
+        )
+    assert n == 10
+    return jobs_run[0]
+
+
+def test_export_job_count(spark, tmp_path, monkeypatch):
+    """10 documents in 2 pages: 2 key collects, 2 flatten discovery jobs,
+    the one write (shuffle map + result) and the audit append. Extra
+    pages add only their key collects, and the TSV write runs once per
+    export whatever the page count."""
+    writes = []
+    real = jobs.write_tsv
+
+    def counting_write(*args, **kwargs):
+        writes.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(jobs, "write_tsv", counting_write)
+    two_pages = _export_jobs(spark, tmp_path, 5, "two-pages")
+    assert two_pages == 7
+    assert _export_jobs(spark, tmp_path, 2, "five-pages") == two_pages + 3
+    assert len(writes) == 2
