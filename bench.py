@@ -79,11 +79,10 @@ on this plan shape (~0.35 s/action of pure tree walks). Net
 flatten_1docs ~2.0 s (was 3.8); the remaining floor is irreducible
 planning+serde for 5k expressions. The scale answer is still
 `flatten_10000docs_families` (narrow per-subtree plans, each fully
-codegen-able). Plan GENERATION (flatten_plan_gen) now issues ONE
-explode+groupBy discovery job for ALL array-nesting levels (was one job
-per level, ~0.25 s each) + ~0.4 s driver expression building ⇒ ~0.7 s
-(was 1.75); every call re-runs that discovery job, since the column set
-follows the data.
+codegen-able). Plan GENERATION (flatten_plan_gen) issues ONE
+discovery job for ALL array-nesting levels (was one job per level,
+~0.25 s each) + ~0.4 s driver expression building; every call re-runs
+that discovery job, since the column set follows the data.
 """
 
 from __future__ import annotations

@@ -6,9 +6,10 @@ document (or ES search envelope) and returns a pandas DataFrame of strings.
 Re-expressing a one-document call as a Spark job pays ~2.5 s of fixed job
 overhead (task-binary broadcast + 5k-expression plan deserialization), which
 is the wrong tool for a single in-memory dict. This module provides the same
-API driver-locally; ``plans.flatten`` (the distributed path) and this one are
-cross-checked against each other — and against the reference itself — in
-``tests/test_local_flatten.py``.
+API driver-locally. ``tests/test_flatten_local_oracle.py`` checks
+``plans.flatten`` (the distributed path, with ``bug_compat``) against this one
+cell for cell; ``tests/test_local_flatten.py`` checks this one against the
+reference itself when its checkout is present.
 
 Use ``plans.flatten`` for DataFrames/datasets; use this for small in-memory
 batches, exactly the regime the reference's users call E2 in.

@@ -41,11 +41,12 @@ Known deviations (inherent to typed schema inference, pinned in tests):
 
 Scale notes (100 TB posture):
 
-- Array index ranges are discovered from the data with one explode+groupBy
-  job covering every nesting level; schemas with MapType fall back to one
-  aggregation job per *array-nesting level* (not per path, not per row),
-  each computing every pending ``max(size(...))``/``min(size(...))``/
-  key-union in a single pass.
+- Discovery is ONE Spark job in every mode, covering every nesting level:
+  by default a generated probe lists each present array size and map key
+  per row and one observed ``collect_set`` (over a ``noop`` write, no
+  shuffle) gathers them, so its result is bounded by the schema, not the
+  rows; ``bug_compat`` runs one ``to_json`` presence pass instead
+  (:func:`_discover_data`), which also knows per-index presence.
 - The generated plan is one projection, run as an anchor cascade
   (:func:`flatten_stages`); Spark's whole-stage codegen falls back
   gracefully above ``spark.sql.codegen.maxFields`` columns, which is
@@ -54,10 +55,11 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Optional
+from typing import Any, Callable, Iterator, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -114,28 +116,36 @@ def unwrap_envelope(df: DataFrame) -> DataFrame:
 
 @dataclass
 class _DataShape:
-    """Result of the single-pass data discovery (bug_compat mode): the set
-    of concrete paths present in ≥1 document (to_json omits null fields, so
-    presence == non-null), and per concrete array path the (min, max)
-    observed size over documents where the array exists."""
+    """What discovery saw in the data, keyed by concrete value path (field
+    names, raw map keys and int array indices):
 
-    paths: set
-    lengths: dict
+    - ``lengths``: per array-of-struct path, the (min, max) size over the
+      rows where the array is non-null; an absent path gets no columns;
+    - ``children``: per path, the steps seen directly under it — for a map
+      path, its raw keys."""
+
+    lengths: dict = dc_field(default_factory=dict)
+    children: dict = dc_field(default_factory=dict)
+
+    def add(self, path: Path, size_range: Optional[tuple[int, int]] = None) -> None:
+        self.children.setdefault(path[:-1], set()).add(path[-1])
+        if size_range is not None:
+            mn, mx = self.lengths.get(path, size_range)
+            self.lengths[path] = (min(mn, size_range[0]), max(mx, size_range[1]))
+
+    def has(self, path: Path) -> bool:
+        return path[-1] in self.children.get(path[:-1], ())
 
 
 @dataclass
 class _Ctx:
     sep: str
     max_depth: int
-    # flattened-name → (min_nonnull_size, max_size) for array-of-struct
-    # paths; None value = array absent from the data entirely (no columns)
-    lengths: dict[str, Optional[tuple[int, int]]]
-    # index-free schema signature → sorted union of observed map keys
-    map_keys: dict[tuple, list[str]]
+    # concrete array-of-struct path → (min_nonnull_size, max_size)
+    lengths: dict[Path, tuple[int, int]]
+    # concrete map path → the keys to expand there, sorted
+    map_keys: Callable[[Path], list[str]]
     entries: list[tuple[str, Path]] = dc_field(default_factory=list)
-    pending_lengths: dict[str, Path] = dc_field(default_factory=dict)
-    pending_keys: dict[tuple, Path] = dc_field(default_factory=dict)
-    data: Optional[_DataShape] = None  # set in bug_compat (data-pass) mode
 
 
 def _sig(path: Path) -> tuple:
@@ -157,23 +167,10 @@ def _dispatch(dt: DataType, path: Path, name: str, depth: int, ctx: _Ctx) -> Non
         else:
             _walk_struct(dt, path, name, depth + 1, ctx)
     elif isinstance(dt, ArrayType) and isinstance(dt.elementType, StructType):
-        if ctx.data is not None:
-            info = ctx.data.lengths.get(path)
-            if info is None:
-                return  # array never present in the data → no columns
-            min_sz, max_sz = info
-        elif name not in ctx.lengths:
-            # setdefault = first-wins: when two schema paths collide to one
-            # flattened name, the column set keeps the first path, so the
-            # first path's size range must drive how many index columns the
-            # collided name gets (ADVICE r5).
-            ctx.pending_lengths.setdefault(name, path)
-            return
-        else:
-            info = ctx.lengths[name]
-            if info is None:
-                return  # absent (agg saw only NULLs)
-            min_sz, max_sz = info
+        info = ctx.lengths.get(path)
+        if info is None:
+            return  # array never present in the data → no columns
+        min_sz, max_sz = info
         if min_sz == 0:
             # Some document had this array empty → the reference's empty-list
             # branch creates a bare column (``ElasticSearch ETL.py:58-60``);
@@ -189,23 +186,7 @@ def _dispatch(dt: DataType, path: Path, name: str, depth: int, ctx: _Ctx) -> Non
         if depth + 1 > ctx.max_depth:
             ctx.entries.append((name, path))
             return
-        sig = _sig(path)
-        if ctx.data is not None:
-            keys = sorted(
-                {
-                    p[len(path)]
-                    for p in ctx.data.paths
-                    if len(p) > len(path) and p[: len(path)] == path
-                }
-            )
-            # record for the bug-compat resolution tree
-            ctx.map_keys[sig] = sorted(set(ctx.map_keys.get(sig, [])) | set(keys))
-        elif sig not in ctx.map_keys:
-            ctx.pending_keys[sig] = path
-            return
-        else:
-            keys = ctx.map_keys[sig]
-        for key in keys:
+        for key in ctx.map_keys(path):
             seg = to_pascal_case(key)
             _dispatch(dt.valueType, path + (key,), f"{name}{ctx.sep}{seg}", depth + 1, ctx)
     else:
@@ -254,12 +235,12 @@ def _discover_data(df: DataFrame) -> _DataShape:
                 walk(_json.loads(row[0]), ())
         yield (paths, lengths)
 
-    shape = _DataShape(set(), {})
+    shape = _DataShape()
     for paths, lengths in json_rows.rdd.mapPartitions(per_partition).collect():
-        shape.paths |= paths
-        for p, (mn, mx) in lengths.items():
-            omn, omx = shape.lengths.get(p, (1 << 60, -1))
-            shape.lengths[p] = (min(omn, mn), max(omx, mx))
+        for p in paths:
+            shape.add(p)
+        for p, size_range in lengths.items():
+            shape.add(p, size_range)
     return shape
 
 
@@ -359,125 +340,122 @@ def _value_sql_from(
 
 
 # ---------------------------------------------------------------------------
-# Single-JOB array-length discovery (schema-driven mode)
+# Single-JOB discovery (schema-driven mode)
 #
-# The iterative per-nesting-level aggregation loop costs one Spark job per
-# array depth (~0.25 s each of pure job overhead on small batches; L scans
-# of the array columns at scale). For map-free schemas the full set of
-# concrete array instances is enumerable at PLAN TIME from the schema alone
-# — only the *sizes* are data — so one generated expression per row lists
-# every present ``(flattened_name, size)`` pair via nested ``transform``s
-# (indices become runtime name fragments), and a single explode+groupBy job
-# returns min/max per name for ALL nesting levels at once. Map key sets
-# can't join this pass (their child names need ``to_pascal_case`` of runtime
-# keys, which is Python), so schemas containing maps keep the per-level
-# loop. Spark JSON inference never produces MapType, so the common path is
-# the single job.
+# Every concrete array-of-struct instance and map is enumerable at PLAN TIME
+# from the schema alone, up to runtime index and key steps — only sizes and
+# keys are data. So one generated expression per row lists every present
+# ``(raw path, size)`` entry via nested ``transform``s over arrays and
+# ``map_entries``, and one ``collect_set`` observed over a ``noop`` write
+# returns them for ALL nesting levels at once: one Spark job with no
+# shuffle. Its result is bounded by the schema (paths × distinct sizes,
+# plus the distinct map keys), not by the rows.
 # ---------------------------------------------------------------------------
 
 
-def _schema_has_map(dt: DataType) -> bool:
-    if isinstance(dt, MapType):
-        return True
-    if isinstance(dt, StructType):
-        return any(_schema_has_map(f.dataType) for f in dt.fields)
-    if isinstance(dt, ArrayType):
-        return _schema_has_map(dt.elementType)
-    return False
+def _concat(arrays: list[str]) -> str:
+    return arrays[0] if len(arrays) == 1 else f"concat({', '.join(arrays)})"
 
 
-def _name_frags_sql(frags: list) -> str:
-    """Build a runtime name expression from ('lit', s) / ('sql', s)
-    fragments, merging adjacent literals."""
-    parts: list[str] = []
-    for kind, s in frags:
-        if kind == "lit" and parts and parts[-1][0] == "lit":
-            parts[-1] = ("lit", parts[-1][1] + s)
-        else:
-            parts.append((kind, s))
-    rendered = [_qstr(s) if kind == "lit" else s for kind, s in parts]
-    return rendered[0] if len(rendered) == 1 else f"concat({', '.join(rendered)})"
-
-
-#: Probe-key delimiter: joins RAW schema path steps (field names + runtime
-#: indices), NOT flattened display names — two schema paths whose
-#: pascal-cased names collide (first-wins in the column set) must keep
-#: SEPARATE probe entries, or the groupBy would merge their size ranges and
-#: the collided name could gain index columns the per-level planner (and the
-#: reference's first-wins column set) never emits (ADVICE r5).
-_PROBE_SEP = "\x1f"
-
-
-def _probe_key(path: Path) -> str:
-    """Raw-path probe key matching ``_probe_struct``'s runtime ``k``."""
-    return _PROBE_SEP.join(str(s) for s in path)
+def _probe_entry(steps: list[str], size_sql: str) -> str:
+    return f"array(named_struct('k', array({', '.join(steps)}), 'sz', {size_sql}))"
 
 
 def _probe_struct(
-    st: StructType, sql: Optional[str], frags: list, depth: int,
-    sep: str, max_depth: int, ctr: list,
+    st: StructType,
+    sql: Optional[str],
+    steps: list[str],
+    depth: int,
+    max_depth: int,
+    ctr: Iterator[int],
 ) -> list[str]:
-    """Entry-array expressions (each ``array<struct<k string, sz int>>``)
-    enumerating every concrete array-of-struct instance under ``st``.
-    ``k`` is the raw schema path (see ``_probe_key``), not the display name."""
-    outs: list[str] = []
-    for f in st.fields:
-        seg = f.name
-        child_frags = frags + [("lit", (sep if frags else "") + seg)]
-        child_sql = _qid(f.name) if sql is None else f"{sql}.{_qid(f.name)}"
-        dt = f.dataType
-        if isinstance(dt, StructType):
-            if depth + 1 <= max_depth:
-                outs += _probe_struct(
-                    dt, child_sql, child_frags, depth + 1, sep, max_depth, ctr
-                )
-        elif isinstance(dt, ArrayType) and isinstance(dt.elementType, StructType):
-            name_expr = _name_frags_sql(child_frags)
-            outs.append(
-                f"array(named_struct('k', {name_expr}, 'sz', size({child_sql})))"
-            )
-            if depth + 1 <= max_depth:
-                v = f"__x{ctr[0]}"
-                iv = f"__i{ctr[0]}"
-                ctr[0] += 1
-                inner = _probe_struct(
-                    dt.elementType,
-                    v,
-                    child_frags + [("lit", sep), ("sql", f"cast({iv} AS STRING)")],
-                    depth + 1,
-                    sep,
-                    max_depth,
-                    ctr,
-                )
-                if inner:
-                    body = inner[0] if len(inner) == 1 else f"concat({', '.join(inner)})"
-                    outs.append(
-                        f"coalesce(flatten(transform({child_sql}, "
-                        f"({v}, {iv}) -> {body})), array())"
-                    )
-    return outs
+    """Probe entry arrays for the fields of struct ``st`` (see ``_probe_value``)."""
+    return [
+        e
+        for f in st.fields
+        for e in _probe_value(
+            f.dataType,
+            _qid(f.name) if sql is None else f"{sql}.{_qid(f.name)}",
+            steps + [_qstr(f.name)],
+            depth,
+            max_depth,
+            ctr,
+        )
+    ]
 
 
-def _probe_lengths(df: DataFrame, max_depth: int) -> dict[str, tuple[int, int]]:
-    """Run the single discovery job; returns raw-path probe key (see
-    ``_probe_key``) → (min, max) observed size for every array-of-struct
-    instance PRESENT in ≥1 row. Keys absent from the result are absent from
-    the data (→ no columns)."""
-    entries = _probe_struct(df.schema, None, [], 0, _PROBE_SEP, max_depth, [0])
+def _probe_value(
+    dt: DataType, sql: str, steps: list[str], depth: int, max_depth: int, ctr: Iterator[int]
+) -> list[str]:
+    """Entry-array expressions (each ``array<struct<k array<string>, sz
+    int>>``) for the value ``sql`` of type ``dt``, mirroring ``_dispatch``:
+    an array of structs yields its size, a map one NULL-size entry per key.
+    ``k`` is the RAW concrete path as a list of steps (SQL expressions over
+    the enclosing lambda variables), not a joined string: map keys are data,
+    so a delimiter could make two paths alias."""
+    if isinstance(dt, StructType):
+        return _probe_struct(dt, sql, steps, depth + 1, max_depth, ctr) if depth < max_depth else []
+    if isinstance(dt, ArrayType) and isinstance(dt.elementType, StructType):
+        out = [_probe_entry(steps, f"size({sql})")]
+        if depth < max_depth:
+            v = f"__p{next(ctr)}"
+            idx = [f"cast({v}i AS STRING)"]
+            inner = _probe_struct(dt.elementType, v, steps + idx, depth + 1, max_depth, ctr)
+            if inner:
+                out.append(
+                    f"coalesce(flatten(transform({sql}, ({v}, {v}i) -> {_concat(inner)})), array())"
+                )
+        return out
+    if isinstance(dt, MapType) and depth < max_depth:
+        v = f"__p{next(ctr)}"
+        key = [f"cast({v}.key AS STRING)"]
+        inner = [_probe_entry(steps + key, "CAST(NULL AS INT)")]
+        inner += _probe_value(dt.valueType, f"{v}.value", steps + key, depth + 1, max_depth, ctr)
+        return [
+            f"coalesce(flatten(transform(map_entries({sql}), {v} -> {_concat(inner)})), array())"
+        ]
+    return []
+
+
+def _typed_path(memo: dict, steps: tuple) -> tuple[Path, DataType]:
+    """Concrete value path (array positions as ints) and DataType of raw
+    probe ``steps``; ``memo`` maps raw prefixes to results and is seeded
+    with ``{(): ((), schema)}``."""
+    hit = memo.get(steps)
+    if hit is None:
+        head, dt = _typed_path(memo, steps[:-1])
+        s = steps[-1]
+        if isinstance(dt, ArrayType):
+            hit = (head + (int(s),), dt.elementType)
+        elif isinstance(dt, MapType):
+            hit = (head + (s,), dt.valueType)
+        else:
+            hit = (head + (s,), dt[s].dataType)
+        memo[steps] = hit
+    return hit
+
+
+def _probe_shape(df: DataFrame, max_depth: int) -> _DataShape:
+    """Run the single discovery job: array size ranges per concrete path and
+    the raw keys under every concrete map path, for every instance PRESENT
+    in ≥1 row. Paths absent from the result are absent from the data (→ no
+    columns)."""
+    shape = _DataShape()
+    entries = _probe_struct(df.schema, None, [], 0, max_depth, itertools.count())
     if not entries:
-        return {}
-    src = entries[0] if len(entries) == 1 else f"concat({', '.join(entries)})"
-    rows = (
-        df.selectExpr(f"explode({src}) AS __e")
-        .groupBy("__e.k")
-        .agg(F.min("__e.sz").alias("mn"), F.max("__e.sz").alias("mx"))
-        .collect()
+        return shape
+    obs = Observation()
+    (
+        df.selectExpr(f"explode({_concat(entries)}) AS e")
+        .observe(obs, F.collect_set("e").alias("entries"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
     )
-    return {
-        r["k"]: (int(r["mn"] or 0), int(r["mx"]))
-        for r in rows
-        if r["mx"] is not None
-    }
+    memo: dict = {(): ((), df.schema)}
+    for k, sz in obs.get["entries"]:
+        shape.add(_typed_path(memo, tuple(k))[0], None if sz is None else (sz, sz))
+    return shape
 
 
 # ---------------------------------------------------------------------------
@@ -485,14 +463,14 @@ def _probe_lengths(df: DataFrame, max_depth: int) -> dict[str, tuple[int, int]]:
 # ---------------------------------------------------------------------------
 
 
-def _build_tree(dt: DataType, path: Path, map_keys: dict[tuple, list[str]]):
+def _build_tree(dt: DataType, path: Path, sig_keys: dict[tuple, set]):
     if isinstance(dt, StructType):
-        return {f.name: _build_tree(f.dataType, path + (f.name,), map_keys) for f in dt.fields}
+        return {f.name: _build_tree(f.dataType, path + (f.name,), sig_keys) for f in dt.fields}
     if isinstance(dt, ArrayType):
-        return [_build_tree(dt.elementType, path + (0,), map_keys)]
+        return [_build_tree(dt.elementType, path + (0,), sig_keys)]
     if isinstance(dt, MapType):
-        keys = map_keys.get(_sig(path), [])
-        return {k: _build_tree(dt.valueType, path + (k,), map_keys) for k in keys}
+        keys = sorted(sig_keys.get(_sig(path), ()))
+        return {k: _build_tree(dt.valueType, path + (k,), sig_keys) for k in keys}
     return None
 
 
@@ -531,69 +509,38 @@ def _plan_specs(
     df: DataFrame, max_depth: int, sep: str, bug_compat: bool
 ) -> list[tuple[str, Optional[Path]]]:
     """Shared front half of :func:`flatten_plan`, :func:`flatten_stages` and
-    :func:`flatten_families`: discovery + schema walk + bug-compat path
-    resolution. Returns the name-sorted ``(column_name, value_path)`` specs
-    (``None`` path = constant ``''`` — the reference's parser-miss quirks)."""
-    schema = df.schema
-    lengths: dict[str, Optional[tuple[int, int]]] = {}
-    map_keys: dict[tuple, list[str]] = {}
+    :func:`flatten_families`: one discovery job, one schema walk and the
+    bug-compat path resolution. Returns the name-sorted ``(column_name,
+    value_path)`` specs (``None`` path = constant ``''`` — the reference's
+    parser-miss quirks).
 
-    if bug_compat:
-        # One distributed pass gives presence + array sizes + map keys all
-        # at once (see _discover_data) — no iterative aggregation levels and
-        # no per-column existence queries.
-        shape = _discover_data(df)
-        ctx = _Ctx(
-            sep=sep, max_depth=max_depth, lengths=lengths, map_keys=map_keys, data=shape
-        )
-        _walk_struct(schema, (), "", 0, ctx)
-    elif not _schema_has_map(schema):
-        # Schema-driven, map-free (the common case — JSON inference never
-        # yields MapType): ONE explode+groupBy job discovers every array
-        # instance's size range across all nesting levels (_probe_lengths);
-        # the walk loop then resolves purely from that dict.
-        probe: Optional[dict[str, tuple[int, int]]] = None
-        while True:
-            ctx = _Ctx(sep=sep, max_depth=max_depth, lengths=lengths, map_keys=map_keys)
-            _walk_struct(schema, (), "", 0, ctx)
-            if not ctx.pending_lengths:
-                break
-            if probe is None:
-                probe = _probe_lengths(df, max_depth)
-            for name, path in ctx.pending_lengths.items():
-                # absent from the probe ⇒ array never present ⇒ no columns;
-                # looked up by RAW schema path so name-colliding paths keep
-                # their own size ranges (first-wins handled downstream)
-                lengths[name] = probe.get(_probe_key(path))
-    else:
-        # Schemas with MapType: array index ranges / map key sets via one
-        # aggregation per array-nesting level (map keys need plan-time
-        # pascal-casing, so they can't join the single-pass probe).
-        while True:
-            ctx = _Ctx(sep=sep, max_depth=max_depth, lengths=lengths, map_keys=map_keys)
-            _walk_struct(schema, (), "", 0, ctx)
-            if not ctx.pending_lengths and not ctx.pending_keys:
-                break
-            aggs = []
-            for name, path in ctx.pending_lengths.items():
-                e, _ = _sql_from(schema, None, path)
-                aggs.append(f"min(size({e})) AS {_qid('min' + name)}")
-                aggs.append(f"max(size({e})) AS {_qid('max' + name)}")
-            key_sigs = list(ctx.pending_keys)
-            for j, sig in enumerate(key_sigs):
-                e, _ = _sql_from(schema, None, ctx.pending_keys[sig])
-                aggs.append(
-                    f"array_distinct(flatten(collect_list(map_keys({e})))) AS {_qid(f'keys{j}')}"
-                )
-            row = df.selectExpr(*aggs).first()
-            for name in ctx.pending_lengths:
-                mn = row[f"min{name}"]
-                mx = row[f"max{name}"]
-                # max NULL ⇒ the array is absent (only NULLs) ⇒ no columns
-                lengths[name] = None if mx is None else (int(mn or 0), int(mx))
-            for j, sig in enumerate(key_sigs):
-                ks = row[f"keys{j}"] or []
-                map_keys[sig] = sorted(ks)
+    Discovery is :func:`_probe_shape` by default and :func:`_discover_data`
+    (which also yields per-index presence) with ``bug_compat``. The walk
+    reads array size ranges per concrete path in both modes. Map keys are
+    read per concrete path with ``bug_compat`` (the reference's column set
+    is per instance) and as the union over every concrete path with the
+    same index-free signature by default.
+
+    When two paths flatten to one name (``x[0].y[1].v`` and ``x_0.y[1].v``
+    are both ``X_0_Y_1_V``), the column set is the union of both paths'
+    columns and each column reads the first path in schema order that
+    produces it. So ``{"x": [{"y": [{"v": 1}]}], "x_0": {"y": [{"v": 7},
+    {"v": 8}, {"v": 9}]}}`` gives ``X_0_Y_0_V``..``X_0_Y_2_V`` = ``1``,
+    ``8``, ``9`` by default; ``bug_compat`` reads what the reference's
+    name parser reads instead (``1``, ``''``, ``''``)."""
+    schema = df.schema
+    shape = _discover_data(df) if bug_compat else _probe_shape(df, max_depth)
+    # index-free signature → union of the steps seen under its concrete paths
+    sig_keys: dict[tuple, set] = {}
+    for path, steps in shape.children.items():
+        sig_keys.setdefault(_sig(path), set()).update(steps)
+
+    def map_keys(path: Path) -> list[str]:
+        keys = shape.children.get(path) if bug_compat else sig_keys.get(_sig(path))
+        return sorted(keys or ())
+
+    ctx = _Ctx(sep=sep, max_depth=max_depth, lengths=shape.lengths, map_keys=map_keys)
+    _walk_struct(schema, (), "", 0, ctx)
 
     # First-wins on name collisions (the reference's column *set* collapses
     # them to one column; its parser then decides which value is read —
@@ -610,10 +557,10 @@ def _plan_specs(
     # discovery pass; explicit JSON null under an index is
     # indistinguishable from absence and is pruned — see docstring).
     for n in [n for n, p in by_name.items() if any(isinstance(s, int) for s in p)]:
-        if by_name[n] not in shape.paths:
+        if not shape.has(by_name[n]):
             del by_name[n]
 
-    tree = _build_tree(schema, (), map_keys)
+    tree = _build_tree(schema, (), sig_keys)
     specs: list[tuple[str, Optional[Path]]] = []
     for name in sorted(by_name):
         steps = resolve_reference_path(tree, name, sep)
@@ -643,11 +590,11 @@ def flatten_plan(
     """Build the list of aliased SQL expressions that flattens ``df`` as one
     wide select (pass to ``df.selectExpr``).
 
-    Array index ranges are discovered from the data with ONE explode+groupBy
-    job covering all nesting levels (map-bearing schemas: one aggregation
-    per nesting level), so every call re-reads the current data shape.
+    Array index ranges and map keys are discovered from the data with ONE
+    Spark job covering all nesting levels, so every call re-reads the
+    current data shape.
 
-    With ``bug_compat`` an extra single-pass existence check prunes
+    With ``bug_compat`` that job is a presence pass, which also prunes
     index-path columns no document actually populates — the reference's
     column set is data-driven *per array index*, not schema-driven
     (``ElasticSearch ETL.py:61-65``: only keys present in that element

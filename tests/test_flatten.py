@@ -317,8 +317,8 @@ def test_write_families_concurrent_round_trip(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r5: staged cascade, wide_flatten_conf, MapType schemas (iterative
-# discovery branch), single-job probe discovery
+# r5: staged cascade, wide_flatten_conf, MapType schemas, single-job probe
+# discovery
 # ---------------------------------------------------------------------------
 
 
@@ -373,9 +373,9 @@ def test_wide_flatten_conf_scoped_and_parity(spark):
 
 
 def test_flatten_map_schema_iterative_branch(spark):
-    """Explicit MapType schemas (never produced by JSON inference) keep the
-    per-level discovery loop: map keys become PascalCase columns, arrays
-    under map values still get index ranges."""
+    """Explicit MapType schemas (never produced by JSON inference) go
+    through the same single-job probe: map keys become PascalCase columns,
+    and absent keys read as ''."""
     from pyspark.sql import Row
 
     from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten
@@ -402,8 +402,7 @@ def test_probe_discovery_matches_per_level_aggs(spark):
     import json as _json
 
     from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import (
-        _probe_key,
-        _probe_lengths,
+        _probe_shape,
     )
 
     docs = [
@@ -413,12 +412,12 @@ def test_probe_discovery_matches_per_level_aggs(spark):
     ]
     rdd = spark.sparkContext.parallelize([_json.dumps(d) for d in docs], 2)
     df = spark.read.json(rdd)
-    got = _probe_lengths(df, 20)
+    got = _probe_shape(df, 20).lengths
     assert got == {
-        _probe_key(("a",)): (0, 2),           # sizes 2, 1, 0
-        _probe_key(("a", 0, "b")): (1, 2),    # present in docs 1-2, sizes 2 / 1
-        _probe_key(("a", 1, "b")): (0, 0),    # only doc 1 has a[1]; its b empty
-        _probe_key(("solo",)): (1, 1),        # absent rows don't contribute
+        ("a",): (0, 2),           # sizes 2, 1, 0
+        ("a", 0, "b"): (1, 2),    # present in docs 1-2, sizes 2 / 1
+        ("a", 1, "b"): (0, 0),    # only doc 1 has a[1]; its b empty
+        ("solo",): (1, 1),        # absent rows don't contribute
     }
 
 
@@ -430,8 +429,7 @@ def test_probe_name_collision_keeps_separate_ranges(spark):
     import json as _json
 
     from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import (
-        _probe_key,
-        _probe_lengths,
+        _probe_shape,
     )
 
     docs = [
@@ -442,11 +440,75 @@ def test_probe_name_collision_keeps_separate_ranges(spark):
     ]
     rdd = spark.sparkContext.parallelize([_json.dumps(d) for d in docs], 1)
     df = spark.read.json(rdd)
-    got = _probe_lengths(df, 20)
-    assert got[_probe_key(("x",))] == (1, 1)
+    got = _probe_shape(df, 20).lengths
+    assert got[("x",)] == (1, 1)
     # name-colliding instances measured independently, not merged to (1, 3)
-    assert got[_probe_key(("x", 0, "y"))] == (1, 1)
-    assert got[_probe_key(("x_0", "y"))] == (3, 3)
+    assert got[("x", 0, "y")] == (1, 1)
+    assert got[("x_0", "y")] == (3, 3)
+
+
+COLLISION = {"x": [{"y": [{"v": 1}, {"v": 2}, {"v": 3}]}], "x_0": {"y": [{"v": 7}]}}
+COLLISION_MIRROR = {"x": [{"y": [{"v": 1}]}], "x_0": {"y": [{"v": 7}, {"v": 8}, {"v": 9}]}}
+
+
+@pytest.mark.parametrize("doc", [COLLISION, COLLISION_MIRROR], ids=["x-long", "x_0-long"])
+def test_name_collision_keeps_every_column(spark, doc):
+    """``x[0].y`` and ``x_0.y`` both flatten to ``X_0_Y``: each path's own
+    size range counts, so the default column set equals the in-memory
+    flatten's whichever path is the longer one (bug_compat's is pinned in
+    tests/test_flatten_local_oracle.py)."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.local import json_to_tsv_in_memory
+
+    expected = list(json_to_tsv_in_memory([doc]).columns)
+    assert expected == ["X_0_Y_0_V", "X_0_Y_1_V", "X_0_Y_2_V"]
+    cols, _ = spark_flatten_dicts(spark, [doc])
+    assert cols == expected
+
+
+def test_name_collision_reads_first_path_in_schema_order(spark):
+    """Default mode reads each collided column from the first path in
+    schema order that produces it: ``X_0_Y_0_V`` from ``x``, the rest from
+    ``x_0`` (bug_compat follows the reference's parser instead)."""
+    _, rows = spark_flatten_dicts(spark, [COLLISION_MIRROR])
+    assert rows == [{"X_0_Y_0_V": "1", "X_0_Y_1_V": "8", "X_0_Y_2_V": "9"}]
+
+
+def test_probe_map_keys_are_raw_path_steps(spark):
+    """Map keys are data: the probe keys each entry by its list of raw
+    steps, so a key holding a control character or a dot stays one step,
+    and arrays under map values get per-key size ranges."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import (
+        _probe_shape,
+    )
+
+    df = spark.createDataFrame(
+        [({"a\x1fb": [{"x": 1}, {"x": 2}], "c.d": []},), ({"c.d": [{"x": 3}]},), (None,)],
+        schema="m map<string,array<struct<x:int>>>",
+    )
+    shape = _probe_shape(df, 20)
+    assert shape.lengths == {("m", "a\x1fb"): (2, 2), ("m", "c.d"): (0, 1)}
+    assert shape.children[("m",)] == {"a\x1fb", "c.d"}
+
+
+def test_map_keys_union_over_every_index(spark):
+    """Default mode expands a map under an array with the union of the keys
+    seen at ANY index, so ``p`` (only at index 0) and ``q`` (only at index
+    1) both keep their columns, the same set as bug_compat's per-instance
+    keys."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten
+
+    df = spark.createDataFrame(
+        [([{"m": {"p": [{"x": 1}]}}, {"m": {"q": [{"x": 2}, {"x": 3}]}}],)],
+        schema="arr array<struct<m:map<string,array<struct<x:int>>>>>",
+    )
+    out = flatten(df)
+    assert out.columns == ["Arr_0_M_P_0_X", "Arr_1_M_Q_0_X", "Arr_1_M_Q_1_X"]
+    assert out.collect()[0].asDict() == {
+        "Arr_0_M_P_0_X": "1",
+        "Arr_1_M_Q_0_X": "2",
+        "Arr_1_M_Q_1_X": "3",
+    }
+    assert flatten(df, bug_compat=True).columns == out.columns
 
 
 @pytest.mark.slow

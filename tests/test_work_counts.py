@@ -1,5 +1,6 @@
-"""Counted work per call: Spark jobs run by the batch export, pinned as
-equalities so a regression reads as a failure, not as noise.
+"""Counted work per call: Spark jobs run by flatten discovery and by the
+batch export, pinned as equalities so a regression reads as a failure,
+not as noise.
 
 A lower count updates the pin (and is recorded in CHANGES.md); a higher
 count fails the test.
@@ -10,9 +11,12 @@ from __future__ import annotations
 import contextlib
 import os
 
+import pytest
+
 from perfbench import gen_docs
 
 from etl_pipeline_for_elasticsearch_json_document_spark import jobs
+from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten_plan
 
 
 @contextlib.contextmanager
@@ -42,7 +46,7 @@ def _export_jobs(spark, tmp_path, batch_size: int, name: str) -> int:
 
 
 def test_export_job_count(spark, tmp_path, monkeypatch):
-    """10 documents in 2 pages: 2 key collects, 2 flatten discovery jobs,
+    """10 documents in 2 pages: 2 key collects, 1 flatten discovery job,
     the one write (shuffle map + result) and the audit append. Extra
     pages add only their key collects, and the TSV write runs once per
     export whatever the page count."""
@@ -55,6 +59,36 @@ def test_export_job_count(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(jobs, "write_tsv", counting_write)
     two_pages = _export_jobs(spark, tmp_path, 5, "two-pages")
-    assert two_pages == 7
+    assert two_pages == 6
     assert _export_jobs(spark, tmp_path, 2, "five-pages") == two_pages + 3
     assert len(writes) == 2
+
+
+def _frame(spark, tmp_path, kind: str):
+    if kind == "gen_docs":
+        path = tmp_path / "docs.json"
+        path.write_bytes(gen_docs.dumps_lines(gen_docs.make_documents(1, 10, max_lines=1)))
+        return spark.read.json(str(path))
+    if kind == "map":
+        return spark.createDataFrame(
+            [({"a": [{"x": 1}, {"x": 2}], "b": [{"x": 3}]},)],
+            schema="m map<string,array<struct<x:int>>>",
+        )
+    return spark.createDataFrame(
+        [([{"m": {"p": [{"x": 1}]}}, {"m": {"q": [{"x": 2}, {"x": 3}]}}],)],
+        schema="arr array<struct<m:map<string,array<struct<x:int>>>>>",
+    )
+
+
+@pytest.mark.parametrize(
+    "kind, bug_compat",
+    [("gen_docs", False), ("gen_docs", True), ("map", False), ("array_of_map", False)],
+)
+def test_flatten_plan_job_count(spark, tmp_path, kind, bug_compat):
+    """Discovery is one Spark job whatever the schema: the probe over
+    arrays and maps by default, the presence pass with bug_compat."""
+    df = _frame(spark, tmp_path, kind)
+    name = f"flatten-plan-{kind}-{bug_compat}"
+    with job_group(spark, name) as jobs_run:
+        assert flatten_plan(df, bug_compat=bug_compat)
+    assert jobs_run[0] == 1
