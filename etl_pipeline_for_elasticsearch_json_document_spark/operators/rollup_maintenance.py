@@ -161,28 +161,35 @@ def _read_rollup_meta(rollup_path: str) -> dict:
 
 
 def _guard_pre_protocol_layout(rollup_path: str) -> None:
-    """A pre-r10 rollup store committed full snapshots as ``v=N/_SUCCESS``
-    with no ``_COMMITTED`` marker; the delta protocol would read it as
-    EMPTY — silent data loss — and the next update would wedge on the
-    uncommitted v=0 claim. Fail loudly with the migration step instead
-    (each old version was a full standing relation, so migrating is one
-    read + one update into a fresh store)."""
-    if not os.path.isdir(rollup_path):
+    """Refuse an old layout before any write: a pre-r10 rollup store
+    (full snapshots as ``v=N/_SUCCESS``, no ``_COMMITTED``) or the
+    pre-rollup count-min sketch state (one plain parquet directory, a
+    root ``_SUCCESS``). The delta protocol reads either as EMPTY (silent
+    data loss), and a stream batch would reclaim an uncommitted ``v=0``
+    as its own torn commit and delete its rows. A protocol store writes
+    ``_META`` before its first version, so with ``_META`` present an
+    uncommitted ``v=N/_SUCCESS`` is a torn commit a ledger replay owns."""
+    if not os.path.isdir(rollup_path) or os.path.exists(
+        os.path.join(rollup_path, delta_store._META)
+    ):
         return
     legacy = [
         d
         for d in os.listdir(rollup_path)
-        if d.startswith("v=")
-        and os.path.exists(os.path.join(rollup_path, d, "_SUCCESS"))
-        and not os.path.exists(os.path.join(rollup_path, d, "_COMMITTED"))
+        if d == "_SUCCESS"
+        or (
+            d.startswith("v=")
+            and os.path.exists(os.path.join(rollup_path, d, "_SUCCESS"))
+            and not os.path.exists(os.path.join(rollup_path, d, "_COMMITTED"))
+        )
     ]
     if legacy:
         raise ValueError(
             f"{rollup_path} holds a pre-delta-protocol rollup layout "
             f"({sorted(legacy)} committed via _SUCCESS only). Each old "
-            "version is a FULL standing relation: migrate by reading the "
-            "latest old version with spark.read.parquet and update_rollup "
-            "into a fresh path, then retire this one."
+            "version (or the plain parquet directory) is a FULL standing "
+            "relation: migrate by reading it with spark.read.parquet and "
+            "update_rollup into a fresh path, then retire this one."
         )
 
 
@@ -224,9 +231,9 @@ def read_rollup(
     """The rollup resolved AS OF ``version`` (latest by default), or
     None before the first update. One merge-aggregate over the latest
     snapshot + delta tail — compact to bound the tail."""
+    _guard_pre_protocol_layout(rollup_path)
     versions = delta_store.committed_versions(rollup_path)
     if not versions:
-        _guard_pre_protocol_layout(rollup_path)
         return None
     if version is None:
         version = versions[-1]
@@ -262,9 +269,8 @@ def update_rollup(
     # validate BEFORE the sidecar persists: a bad kind must not create a
     # definition the first CORRECT caller is then refused against
     _validate_measures(measures)
+    _guard_pre_protocol_layout(rollup_path)
     versions = delta_store.committed_versions(rollup_path)
-    if not versions:
-        _guard_pre_protocol_layout(rollup_path)
     _load_or_init_rollup_meta(rollup_path, keys, measures)
     store_meta = delta_store.load_or_init_meta(rollup_path, n_partitions)
     delta = _aggregate(batch, keys, measures)

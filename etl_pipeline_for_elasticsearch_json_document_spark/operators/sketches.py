@@ -92,6 +92,22 @@ def _cms_bucket(item, d: int, width: int):
     return (h.cast("long") % width).cast("int")
 
 
+def count_min_cells(df: DataFrame, item_col: str, depth: int = 4, width: int = 64) -> DataFrame:
+    """Each item's ``depth`` sketch cells: one ``(item, d, bucket)`` row
+    per sketch row. A stateless projection, so it runs on a streaming
+    frame as well as a batch one; the sketch is the row count per cell."""
+    item = F.col(item_col)
+    cells = F.array(
+        *[
+            F.struct(F.lit(d).alias("d"), _cms_bucket(item, d, width).alias("bucket"))
+            for d in range(depth)
+        ]
+    )
+    return df.select(item.alias("item"), F.explode(cells).alias("c")).select(
+        "item", "c.d", "c.bucket"
+    )
+
+
 def count_min_build(
     df: DataFrame, item_col: str, depth: int = 4, width: int = 64
 ) -> DataFrame:
@@ -104,16 +120,8 @@ def count_min_build(
     Sketches merge by summing bucket counts (associative), giving the
     shard/day/source rollup story without re-reading raw data.
     """
-    item = F.col(item_col)
-    cells = F.array(
-        *[
-            F.struct(F.lit(d).alias("d"), _cms_bucket(item, d, width).alias("bucket"))
-            for d in range(depth)
-        ]
-    )
     return (
-        df.select(F.explode(cells).alias("c"))
-        .select("c.d", "c.bucket")
+        count_min_cells(df, item_col, depth, width)
         .groupBy("d", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
@@ -125,20 +133,9 @@ def count_min_estimate(
     """Point-frequency estimates: min over the sketch rows each item hashes
     into (the classic CMS upper bound — overestimates only, never under).
     The sketch side is depth × width rows, so the join broadcasts."""
-    item = F.col(item_col)
-    probes = items.select(
-        item.alias("item"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(d).alias("d"), _cms_bucket(item, d, width).alias("bucket"))
-                    for d in range(depth)
-                ]
-            )
-        ).alias("c"),
-    ).select("item", "c.d", "c.bucket")
     return (
-        probes.join(F.broadcast(sketch), ["d", "bucket"])
+        count_min_cells(items, item_col, depth, width)
+        .join(F.broadcast(sketch), ["d", "bucket"])
         .groupBy("item")
         .agg(F.min("cnt").alias("est"))
     )

@@ -8,7 +8,7 @@ forever, completing the maintenance triad (fingerprint index q158 /
 rollup / ANN) on one shared protocol.
 
 Exactly-once under foreachBatch's at-least-once: the marker-first
-ledger all four store streams share (:func:`delta_store.pin_base`) pins,
+ledger all five store streams share (:func:`delta_store.pin_base`) pins,
 per (checkpoint-lineage, batch), the BASE store version, before any
 store write. On replay the marker already exists, so the batch
 re-assigns against the same codebook, skips the version commit if it

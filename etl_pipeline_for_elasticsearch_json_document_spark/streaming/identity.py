@@ -4,11 +4,11 @@ foreachBatch epoch ids are only monotone WITHIN one checkpoint lineage: a
 fresh checkpoint over the same state/output restarts epochs at 0, so any
 ledger keyed on the epoch alone would treat genuinely new data in batches
 0..N as a replay and silently skip it (data loss). Every replay ledger in
-this package (sketch_job state, export_job audit rows, epoch-named output
-dirs, the delta-store ledger markers) therefore pairs the epoch with this
-lineage id and only skips when BOTH match — a crash replay (same
-checkpoint, re-delivered epoch) is skipped; a new lineage merges/writes
-under its own key. :func:`start_foreach_batch` is the one place a stream
+this package (export_job audit rows, epoch-named output dirs, the
+delta-store ledger markers) therefore pairs the epoch with this lineage
+id and only skips when BOTH match — a crash replay (same checkpoint,
+re-delivered epoch) is skipped; a new lineage merges/writes under its
+own key. :func:`start_foreach_batch` is the one place a stream
 gets its lineage id and its foreachBatch body.
 """
 

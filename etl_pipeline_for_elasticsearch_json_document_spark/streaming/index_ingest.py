@@ -12,7 +12,7 @@ by the batch on both ends; ``compact_fingerprint_index`` /
 ``prune_fingerprint_versions`` are the scheduled roll-up and GC.
 
 Exactly-once protocol (foreachBatch is at-least-once): the marker-first
-ledger of :func:`operators.delta_store.pin_base`, shared by all four store
+ledger of :func:`operators.delta_store.pin_base`, shared by all five store
 streams, pins per (checkpoint-lineage, batch) the BASE index version the
 batch classifies against, before any index write happens. On replay the
 marker already exists, so the batch re-classifies against the SAME base

@@ -49,7 +49,7 @@ Each micro-batch:
    version is atomic-or-absent, the ann_index discipline).
 
 Exactly-once under foreachBatch's at-least-once: the marker-first ledger
-all four store streams share (:func:`delta_store.pin_base`) — the marker
+all five store streams share (:func:`delta_store.pin_base`) — the marker
 pins the BASE version per (checkpoint-lineage, batch) before any write;
 replays re-classify against the SAME retained resolution, skip the
 commit if it landed, and overwrite their own deterministic output dirs.

@@ -10,7 +10,7 @@ Exactly-once matters MORE here than for the other stores: sum/count
 merge-aggregation is not idempotent under row duplication, so a
 double-committed batch double-counts instead of resolving away. The
 protocol is therefore marker-first (:func:`delta_store.pin_base`, the
-ledger all four store streams share, pins the base version before any
+ledger all five store streams share, pins the base version before any
 store write) and the commit goes through
 ``delta_store.commit_pinned_delta``: a replay skips only when its
 pinned version is committed AND is a delta; when a compact() stole the
@@ -27,6 +27,7 @@ from etl_pipeline_for_elasticsearch_json_document_spark.operators import delta_s
 from etl_pipeline_for_elasticsearch_json_document_spark.operators.rollup_maintenance import (
     DEFAULT_PARTITIONS,
     _aggregate,
+    _guard_pre_protocol_layout,
     _load_or_init_rollup_meta,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
@@ -45,6 +46,7 @@ def _rollup_batch_processor(
     ``n_partitions`` applies only when this batch CREATES the store."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        _guard_pre_protocol_layout(rollup_path)  # before the ledger marker
         marker, base_v = delta_store.pin_base(rollup_path, ckpt_id, batch_id)
         _load_or_init_rollup_meta(rollup_path, keys, measures)
         store_meta = delta_store.load_or_init_meta(rollup_path, n_partitions)

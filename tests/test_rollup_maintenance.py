@@ -283,6 +283,55 @@ def test_pre_protocol_layout_fails_loudly(spark, tmp_path):
         )
 
 
+def test_stream_batch_refuses_pre_protocol_layout(spark, tmp_path):
+    """The stream processor refuses a pre-r10 store before its ledger
+    marker. Without the guard it pinned base -1, reclaimed the
+    uncommitted v=0 as its own torn commit and deleted the old rows
+    (``("a", 5)`` became ``("a", 1)``)."""
+    import json
+
+    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.rollup_job import (
+        _rollup_batch_processor,
+    )
+
+    path = str(tmp_path / "rollup")
+    spark.createDataFrame([("a", 5)], "k string, n long").write.parquet(
+        os.path.join(path, "v=0")
+    )
+    with open(os.path.join(path, "_ROLLUP"), "w") as f:
+        json.dump({"keys": ["k"], "measures": {"n": ["count", "*"]}}, f)
+    proc = _rollup_batch_processor(path, "lin", ["k"], {"n": ("count", "*")})
+    with pytest.raises(ValueError, match="pre-delta-protocol"):
+        proc(spark.createDataFrame([("a",)], "k string"), 0)
+    assert not os.path.exists(os.path.join(path, "_ledger"))
+    v0 = spark.read.parquet(os.path.join(path, "v=0"))
+    assert [tuple(r) for r in v0.collect()] == [("a", 5)]
+
+
+def test_stream_replay_reclaims_its_torn_first_commit(spark, tmp_path):
+    """A store stream's own first commit torn after the data write
+    (``v=0/_SUCCESS`` without ``_COMMITTED``) is not an old layout: the
+    store already holds ``_META``, so the replay reclaims v=0 and
+    commits the batch once."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.rollup_job import (
+        _rollup_batch_processor,
+    )
+
+    path = str(tmp_path / "rollup")
+    proc = _rollup_batch_processor(path, "lin", KEYS, MEASURES)
+    proc(spark.createDataFrame(B1, SCHEMA), 0)
+    os.remove(os.path.join(path, "v=0", "_COMMITTED"))  # crash before the marker
+    assert os.path.exists(os.path.join(path, "v=0", "_SUCCESS"))
+    proc(spark.createDataFrame(B1, SCHEMA), 0)  # crash replay
+    oneshot = spark.createDataFrame(B1, SCHEMA).groupBy(*KEYS).agg(
+        F.count("*").cast("bigint").alias("n_events"),
+        F.sum("value").cast("long").alias("total"),
+        F.min("value").alias("vmin"),
+        F.max("value").alias("vmax"),
+    )
+    assert _rows(read_rollup(spark, path)) == _rows(oneshot)
+
+
 def test_update_can_skip_resolved_readback(spark, tmp_path):
     """return_resolved=False commits the delta without constructing the
     tail-sized resolved frame (the stream's discard-the-result path)."""

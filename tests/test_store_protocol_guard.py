@@ -23,6 +23,7 @@ PKG = (
         ('f"v={', "operators/delta_store.py"),
         ('"_SNAPSHOT"', "operators/delta_store.py"),
         ("writeStream.foreachBatch", "streaming/identity.py"),
+        (".__old__", "sinks/compact.py"),
     ],
 )
 def test_protocol_lives_in_one_module(needle, home):

@@ -539,14 +539,16 @@ def test_interval_join_stream_left_outer(spark, sf_dir, tmpdir):
 
 
 def test_cms_stream_equals_batch_sketch(spark, sf_dir, tmpdir):
-    """The streamed (foreachBatch-merged) count-min sketch after a drain is
+    """The streamed (rollup-committed) count-min sketch after a drain is
     IDENTICAL to the batch sketch over all data — the mergeable-summary
     guarantee that makes restarts/backfills order-independent."""
     from etl_pipeline_for_elasticsearch_json_document_spark.operators.sketches import (
         count_min_build,
     )
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.rollup_maintenance import (
+        read_rollup as read_sketch,
+    )
     from etl_pipeline_for_elasticsearch_json_document_spark.streaming.sketch_job import (
-        read_sketch,
         run_cms_stream,
     )
 
@@ -663,10 +665,12 @@ def test_export_stream_fresh_checkpoint_does_not_mask_new_data(spark, tmpdir):
 
 def test_cms_stream_replay_is_idempotent(spark, sf_dir, tmpdir):
     """at-least-once safety: a batch re-delivered after a crash between
-    state swap and checkpoint commit (SAME lineage) must NOT double-count —
-    the state's (ckpt_id, last_batch) ledger detects and skips it."""
+    state commit and checkpoint commit (SAME lineage) must NOT double-count —
+    the store's (ckpt_id, batch) ledger marker detects and skips it."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.rollup_maintenance import (
+        read_rollup as read_sketch,
+    )
     from etl_pipeline_for_elasticsearch_json_document_spark.streaming.sketch_job import (
-        read_sketch,
         run_cms_stream,
     )
 
@@ -699,8 +703,10 @@ def test_cms_stream_fresh_checkpoint_merges_new_data(spark, sf_dir, tmpdir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators.sketches import (
         count_min_build,
     )
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.rollup_maintenance import (
+        read_rollup as read_sketch,
+    )
     from etl_pipeline_for_elasticsearch_json_document_spark.streaming.sketch_job import (
-        read_sketch,
         run_cms_stream,
     )
 
@@ -736,10 +742,12 @@ def test_cms_stream_alternating_lineages_replay_skipped(spark, sf_dir, tmpdir):
     """Two checkpoint lineages alternating over ONE state path: lineage A
     merges, lineage B merges, then A crash-replays its batch 0. A
     single-(ckpt, last_batch) ledger forgets A's high-water mark the
-    moment B merges and double-counts the replay; the per-lineage map
-    ledger must keep both marks and leave the state unchanged."""
+    moment B merges and double-counts the replay; the per-lineage ledger
+    markers must keep both marks and leave the state unchanged."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.rollup_maintenance import (
+        read_rollup as read_sketch,
+    )
     from etl_pipeline_for_elasticsearch_json_document_spark.streaming.sketch_job import (
-        read_sketch,
         run_cms_stream,
     )
 
@@ -771,6 +779,81 @@ def test_cms_stream_alternating_lineages_replay_skipped(spark, sf_dir, tmpdir):
         (r["d"], r["bucket"]): r["cnt"] for r in read_sketch(spark, state).collect()
     }
     assert replayed == after_b
+
+
+def test_cms_stream_refuses_old_sketch_state(spark, tmpdir):
+    """The sketch state before it became a rollup was one plain parquet
+    directory carrying a JSON ledger column. The stream must refuse it
+    before any write (the delta protocol would read it as an empty sketch
+    and start over on top of it), and leave its files untouched."""
+    from pyspark.errors import StreamingQueryException
+
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.rollup_maintenance import (
+        read_rollup,
+    )
+    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.sketch_job import (
+        run_cms_stream,
+    )
+
+    state = os.path.join(tmpdir, "cms_old_state")
+    spark.createDataFrame(
+        [(0, 3, 5, '{"lin": 0}'), (1, 7, 5, '{"lin": 0}')],
+        "d int, bucket int, cnt bigint, ledger string",
+    ).coalesce(1).write.parquet(state)
+    before = sorted(os.listdir(state))
+    src = os.path.join(tmpdir, "cms_old_src")
+    spark.createDataFrame([("a",), ("b",)], "w string").coalesce(1).write.json(src)
+
+    q = run_cms_stream(
+        spark.readStream.schema("w string").json(src), "w",
+        state_path=state, checkpoint_dir=os.path.join(tmpdir, "cms_old_ck"),
+    )
+    with pytest.raises(StreamingQueryException, match="pre-delta-protocol"):
+        q.awaitTermination(600)
+    assert sorted(os.listdir(state)) == before
+    with pytest.raises(ValueError, match="pre-delta-protocol"):
+        read_rollup(spark, state)
+
+
+def test_cms_stream_compacts_to_batch_sketch(spark, tmpdir):
+    """Each micro-batch commits one delta version; compact_rollup folds
+    the tail into one snapshot that still equals count_min_build over all
+    the data, read back as d int, bucket int, cnt bigint (no ledger
+    column reaches readers)."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.delta_store import (
+        committed_versions,
+    )
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.rollup_maintenance import (
+        compact_rollup,
+        read_rollup,
+    )
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.sketches import (
+        count_min_build,
+    )
+    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.sketch_job import (
+        run_cms_stream,
+    )
+
+    words = [(f"w{i % 7}",) for i in range(40)]
+    src = os.path.join(tmpdir, "cms5_src")
+    for k in range(4):
+        part = spark.createDataFrame(words[k * 10 : (k + 1) * 10], "w string")
+        part.coalesce(1).write.mode("append").json(src)
+    state = os.path.join(tmpdir, "cms5_state")
+    q = run_cms_stream(
+        spark.readStream.schema("w string").option("maxFilesPerTrigger", 1).json(src),
+        "w", state_path=state, checkpoint_dir=os.path.join(tmpdir, "cms5_ck"), width=32,
+    )
+    assert q.awaitTermination(600), "stream drain timed out"
+    ticks = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(ticks) == 4
+    assert committed_versions(state) == [0, 1, 2, 3]  # one delta per tick
+
+    assert compact_rollup(spark, state) == 4
+    got = read_rollup(spark, state)
+    assert got.dtypes == [("d", "int"), ("bucket", "int"), ("cnt", "bigint")]
+    want = count_min_build(spark.createDataFrame(words, "w string"), "w", 4, 32)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_export_stream_exactly_once_single_audit_row(spark, tmpdir):

@@ -16,7 +16,11 @@ import pytest
 from perfbench import gen_docs
 
 from etl_pipeline_for_elasticsearch_json_document_spark import jobs
+from etl_pipeline_for_elasticsearch_json_document_spark.operators.sketches import count_min_cells
 from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten_plan
+from etl_pipeline_for_elasticsearch_json_document_spark.streaming.rollup_job import (
+    _rollup_batch_processor,
+)
 
 
 @contextlib.contextmanager
@@ -92,3 +96,23 @@ def test_flatten_plan_job_count(spark, tmp_path, kind, bug_compat):
     with job_group(spark, name) as jobs_run:
         assert flatten_plan(df, bug_compat=bug_compat)
     assert jobs_run[0] == 1
+
+
+def test_sketch_tick_job_count(spark, tmp_path):
+    """One count-min tick of the sketch stream (the rollup processor with
+    run_cms_stream's keys, measure and single partition) is 3 Spark jobs,
+    and a tick on a store with a 3-delta tail costs the same: a tick
+    writes its own delta and reads no standing state."""
+    proc = _rollup_batch_processor(
+        os.fspath(tmp_path / "cms"), "lin", ["d", "bucket"], {"cnt": ("count", "*")},
+        n_partitions=1,
+    )
+    words = spark.createDataFrame([(f"w{i % 13}",) for i in range(50)], "w string")
+    cells = count_min_cells(words, "w", depth=4, width=32)
+    counts = []
+    for tick in range(4):
+        with job_group(spark, f"cms-tick-{tick}") as jobs_run:
+            proc(cells, tick)
+        counts.append(jobs_run[0])
+    assert counts[0] == 3
+    assert counts[3] == counts[0]
