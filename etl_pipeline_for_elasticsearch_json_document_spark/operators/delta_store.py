@@ -92,6 +92,40 @@ def atomic_write(path: str, text: str) -> None:
     os.replace(tmp, path)
 
 
+def create_sidecar(path: str, name: str, text: str) -> str:
+    """Create the store sidecar ``path/name`` holding ``text`` unless it
+    exists, and return the text it holds — a definition stamp (rollup
+    keys and measures, sketch geometry, LSH hash family) the caller then
+    compares against its own. Creation is exclusive (``os.link``, which
+    fails on an existing target), not check-then-write: of two racing
+    first creators the loser reads the winner's text and is refused like
+    any later mismatched writer, instead of overwriting the sidecar
+    after the winner's data committed. A store with committed versions
+    but no sidecar predates the stamp, so what it was built with is
+    unknown: it is refused, never stamped after the fact."""
+    fp = os.path.join(_local(path), name)
+    if not os.path.exists(fp):
+        if committed_versions(path):
+            raise ValueError(
+                f"store at {path} has committed versions but no {name} "
+                "stamp: it predates the stamp, so what it was built with "
+                "cannot be checked. Rebuild it into a fresh path."
+            )
+        os.makedirs(path, exist_ok=True)
+        tmp = fp + f".tmp.{os.getpid()}"
+        with open(tmp, "w") as f:
+            f.write(text)
+        try:
+            os.link(tmp, fp)  # exclusive: loses loudly to a racing creator
+            return text
+        except FileExistsError:
+            pass  # another creator won; return theirs below
+        finally:
+            os.unlink(tmp)
+    with open(fp) as f:
+        return f.read()
+
+
 def load_or_init_meta(path: str, n_partitions: int) -> dict:
     """The store's metadata ({'n_partitions': P}); created on first
     touch, afterwards the PERSISTED value always wins — writers and

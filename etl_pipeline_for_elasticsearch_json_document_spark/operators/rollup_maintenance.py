@@ -96,32 +96,16 @@ def _load_or_init_rollup_meta(
     and the FULL measure mapping (kind AND input column: two sums over
     different source columns are different definitions even though the
     kinds match, and merging them corrupts every total). A second writer
-    with a different definition is refused.
-
-    Creation is exclusive (``os.link``, which fails on an existing
-    target), not check-then-replace: two racing first creators with
-    different definitions must not let the loser overwrite the sidecar
-    AFTER the winner's data committed — the loser falls through to the
-    comparison and raises like any other mismatched writer."""
-    mp = os.path.join(rollup_path, _ROLLUP_META)
+    with a different definition is refused. Creation is exclusive
+    (:func:`delta_store.create_sidecar`): a racing first creator with a
+    different definition is refused too."""
     want = {
         "keys": list(keys),
         "measures": {out: [kind, in_col] for out, (kind, in_col) in measures.items()},
     }
-    if not os.path.exists(mp):
-        os.makedirs(rollup_path, exist_ok=True)
-        tmp = mp + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(want, f)
-        try:
-            os.link(tmp, mp)  # exclusive: loses loudly to a racing creator
-            return
-        except FileExistsError:
-            pass  # another creator won; compare against theirs below
-        finally:
-            os.unlink(tmp)
-    with open(mp) as f:
-        meta = json.load(f)
+    meta = json.loads(
+        delta_store.create_sidecar(rollup_path, _ROLLUP_META, json.dumps(want))
+    )
     _guard_legacy_measures(rollup_path, meta)
     if meta != want:
         raise ValueError(
@@ -160,20 +144,18 @@ def _read_rollup_meta(rollup_path: str) -> dict:
     return meta
 
 
-def _guard_pre_protocol_layout(rollup_path: str) -> None:
-    """Refuse an old layout before any write: a pre-r10 rollup store
-    (full snapshots as ``v=N/_SUCCESS``, no ``_COMMITTED``) or the
-    pre-rollup count-min sketch state (one plain parquet directory, a
-    root ``_SUCCESS``). The delta protocol reads either as EMPTY (silent
-    data loss), and a stream batch would reclaim an uncommitted ``v=0``
-    as its own torn commit and delete its rows. A protocol store writes
-    ``_META`` before its first version, so with ``_META`` present an
-    uncommitted ``v=N/_SUCCESS`` is a torn commit a ledger replay owns."""
+def _pre_protocol_entries(rollup_path: str) -> list[str]:
+    """The entries that mark ``rollup_path`` as an old layout: a pre-r10
+    rollup store (full snapshots as ``v=N/_SUCCESS``, no ``_COMMITTED``)
+    or the pre-rollup count-min sketch state (one plain parquet
+    directory, a root ``_SUCCESS``). A protocol store writes ``_META``
+    before its first version, so with ``_META`` present an uncommitted
+    ``v=N/_SUCCESS`` is a torn commit a ledger replay owns."""
     if not os.path.isdir(rollup_path) or os.path.exists(
         os.path.join(rollup_path, delta_store._META)
     ):
-        return
-    legacy = [
+        return []
+    return sorted(
         d
         for d in os.listdir(rollup_path)
         if d == "_SUCCESS"
@@ -182,11 +164,19 @@ def _guard_pre_protocol_layout(rollup_path: str) -> None:
             and os.path.exists(os.path.join(rollup_path, d, "_SUCCESS"))
             and not os.path.exists(os.path.join(rollup_path, d, "_COMMITTED"))
         )
-    ]
+    )
+
+
+def _guard_pre_protocol_layout(rollup_path: str) -> None:
+    """Refuse an old layout (:func:`_pre_protocol_entries`) before any
+    write. The delta protocol reads either as EMPTY (silent data loss),
+    and a stream batch would reclaim an uncommitted ``v=0`` as its own
+    torn commit and delete its rows."""
+    legacy = _pre_protocol_entries(rollup_path)
     if legacy:
         raise ValueError(
             f"{rollup_path} holds a pre-delta-protocol rollup layout "
-            f"({sorted(legacy)} committed via _SUCCESS only). Each old "
+            f"({legacy} committed via _SUCCESS only). Each old "
             "version (or the plain parquet directory) is a FULL standing "
             "relation: migrate by reading it with spark.read.parquet and "
             "update_rollup into a fresh path, then retire this one."

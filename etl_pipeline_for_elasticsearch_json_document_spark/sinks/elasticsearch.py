@@ -17,7 +17,10 @@ Three tiers, mirroring the source-side design (sources/elasticsearch.py):
    (stdlib urllib → ``_bulk``), closing the loop end-to-end — a full
    parquet → bulk files → replay → ``search_after`` re-scan → flatten
    round trip runs against a loopback fake cluster in
-   tests/test_es_roundtrip.py.
+   tests/test_es_roundtrip.py. This is the one ``_bulk`` file writer:
+   the streaming export (``streaming/es_export.run_es_export_stream``)
+   calls it once per micro-batch, into a directory named by epoch and
+   checkpoint lineage.
 2. :func:`write_es_connector` — the official connector
    (``org.elasticsearch.spark.sql``), when its jar is on the cluster.
 3. :func:`write_with_client` — ``foreachPartition`` + the Python client's

@@ -12,13 +12,23 @@ in ``tests/fake_es.py``) with zero third-party installs.
 Duck-typing contract: only the keyword signatures used by this package
 (``search(index=, body=)`` / ``count(index=, body=)``) plus
 ``bulk_ndjson`` for raw ``_bulk`` payload replay.
+
+:class:`SearchAfterScan` is the reference's ``search_after`` page loop
+over this client, shared by the two HTTP sources: the sliced ``es_live``
+batch read (:mod:`.es_live`) and the ``es_tail`` stream (:mod:`.es_stream`).
+Both take the same five options from it and emit :func:`hit_row` rows
+under :data:`HIT_SCHEMA`.
 """
 
 from __future__ import annotations
 
 import json
 import urllib.request
-from typing import Any, Optional
+from typing import Any, Iterator, Optional
+
+#: one row per search hit; ``source_json`` feeds the flatten planner
+#: exactly like the envelope reader's column
+HIT_SCHEMA = "_index string, _id string, sort_json string, source_json string"
 
 
 class HttpEsClient:
@@ -39,10 +49,10 @@ class HttpEsClient:
         backoff: float = 0.5,
     ) -> dict[str, Any]:
         """One HTTP call, retrying 429/503 with exponential backoff — the
-        same throttled-cluster discipline ``bulk_ndjson`` has always had,
-        applied to the read side too: without it one rejected page kills a
-        whole sliced scan. Anything else (4xx protocol errors) raises
-        immediately — those are caller bugs, not load."""
+        one throttled-cluster loop for every call, search pages and bulk
+        replay alike: without it one rejected page kills a whole sliced
+        scan. Anything else (4xx protocol errors) raises immediately —
+        those are caller bugs, not load."""
         import time
         import urllib.error
 
@@ -117,28 +127,74 @@ class HttpEsClient:
         """``POST /_bulk`` with a ready NDJSON payload (the exact file
         format :func:`~.sinks.elasticsearch.write_bulk_files` emits).
 
-        Retries 429/503 with exponential backoff — a loaded cluster
+        Retries 429/503 through :meth:`_request` — a loaded cluster
         throttles bulk ingest routinely, and because replayed ``index``
         actions with explicit ``_id`` upsert, re-POSTing a partially
         applied payload converges rather than duplicating."""
-        import time
-        import urllib.error
-
         path = f"/{index}/_bulk" if index else "/_bulk"
         if not payload.endswith("\n"):
             payload += "\n"  # _bulk requires a trailing newline
-        body = payload.encode("utf-8")
-        attempt = 0
+        return self._request(
+            "POST", path, payload.encode("utf-8"), "application/x-ndjson",
+            retries, backoff,
+        )
+
+
+def hit_row(hit: dict[str, Any]) -> tuple:
+    """One search hit as a :data:`HIT_SCHEMA` row."""
+    return (
+        hit.get("_index"),
+        str(hit.get("_id")) if hit.get("_id") is not None else None,
+        json.dumps(hit.get("sort")),
+        json.dumps(hit.get("_source")),
+    )
+
+
+class SearchAfterScan:
+    """The reference's ``search_after`` page loop (``ElasticSearch
+    ETL.py:220-267``) over one index, configured by the options both HTTP
+    sources accept: ``url``, ``index``, ``page_size``, ``sort`` (comma-
+    separated fields, ascending) and ``query`` (JSON)."""
+
+    def __init__(self, options, source: str) -> None:
+        self.url = options.get("url")
+        if not self.url:
+            raise ValueError(f"{source} requires .option('url', 'http://host:9200')")
+        self.index = options.get("index")
+        if not self.index:
+            raise ValueError(f"{source} requires .option('index', <es index name>)")
+        self.page_size = int(options.get("page_size", "1000"))
+        self.sort_fields = [
+            s.strip()
+            for s in options.get("sort", "auditProcessedDateTimeUtc,claimRequestId").split(",")
+            if s.strip()
+        ]
+        self.query = json.loads(options.get("query", '{"match_all": {}}'))
+
+    def pages(
+        self, after: Optional[list[Any]] = None, clauses: Optional[dict[str, Any]] = None
+    ) -> Iterator[list[dict[str, Any]]]:
+        """Yield the hits one page at a time, starting after the sort
+        tuple ``after`` (exclusive); stop on an empty or a short page.
+        ``clauses`` join every request body; a body with a ``pit`` clause
+        goes to ``search_pit``. The client is built here, per call, so a
+        scan pickled to an executor never ships a connection."""
+        client = HttpEsClient(self.url)
+        base = {
+            "query": self.query,
+            "sort": [{f: "asc"} for f in self.sort_fields],
+            "size": self.page_size,
+            **(clauses or {}),
+        }
         while True:
-            try:
-                # retries=0: THIS loop is the retry policy for bulk —
-                # letting _request's default retries stack underneath it
-                # would multiply the attempt count and stretch the backoff
-                return self._request(
-                    "POST", path, body, "application/x-ndjson", retries=0
-                )
-            except urllib.error.HTTPError as e:
-                if e.code not in (429, 503) or attempt >= retries:
-                    raise
-                time.sleep(backoff * (2**attempt))
-                attempt += 1
+            body = base if after is None else {**base, "search_after": after}
+            if "pit" in body:
+                hits = client.search_pit(body)["hits"]["hits"]
+            else:
+                hits = client.search(index=self.index, body=body)["hits"]["hits"]
+            if not hits:
+                return
+            yield hits
+            after = hits[-1]["sort"]
+            if len(hits) < self.page_size:
+                return

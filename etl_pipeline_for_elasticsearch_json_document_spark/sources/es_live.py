@@ -50,14 +50,16 @@ keyed by ``_id``; under a PIT the retry is also byte-identical).
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from etl_pipeline_for_elasticsearch_json_document_spark.sources.es_http import HttpEsClient
-
-SCHEMA = "_index string, _id string, sort_json string, source_json string"
+from etl_pipeline_for_elasticsearch_json_document_spark.sources.es_http import (
+    HIT_SCHEMA,
+    HttpEsClient,
+    SearchAfterScan,
+    hit_row,
+)
 
 
 @dataclass
@@ -69,22 +71,10 @@ class _SlicePartition(InputPartition):
 
 class EsLiveReader(DataSourceReader):
     def __init__(self, options) -> None:
-        self.url = options.get("url")
-        if not self.url:
-            raise ValueError("es_live requires .option('url', 'http://host:9200')")
-        self.index = options.get("index")
-        if not self.index:
-            raise ValueError("es_live requires .option('index', <es index name>)")
+        self.scan = SearchAfterScan(options, "es_live")
         self.n_slices = int(options.get("slices", "1"))
         if self.n_slices < 1:
             raise ValueError("slices must be >= 1")
-        self.page_size = int(options.get("page_size", "1000"))
-        self.sort_fields = [
-            s.strip()
-            for s in options.get("sort", "auditProcessedDateTimeUtc,claimRequestId").split(",")
-            if s.strip()
-        ]
-        self.query = json.loads(options.get("query", '{"match_all": {}}'))
         #: pre-opened PIT id (coordinate several reads on one snapshot) —
         #: when absent and slices > 1, partitions() opens one itself
         self.pit_id = options.get("pit_id")
@@ -100,46 +90,20 @@ class EsLiveReader(DataSourceReader):
         # a plain _search): open the PIT here, once, driver-side.
         pit_id = self.pit_id
         if pit_id is None and (self.n_slices > 1 or self.force_pit):
-            pit_id = HttpEsClient(self.url).open_pit(
-                self.index, keep_alive=self.pit_keep_alive
+            pit_id = HttpEsClient(self.scan.url).open_pit(
+                self.scan.index, keep_alive=self.pit_keep_alive
             )
         return [_SlicePartition(i, self.n_slices, pit_id) for i in range(self.n_slices)]
 
     def read(self, partition: _SlicePartition):
-        # executor-side: an independent search_after loop over ONE slice.
-        # The client is constructed here (per task), never serialized.
-        client = HttpEsClient(self.url)
-        base = {
-            "query": self.query,
-            "sort": [{f: "asc"} for f in self.sort_fields],
-            "size": self.page_size,
-        }
+        # executor-side: an independent search_after loop over ONE slice
+        clauses = {}
         if partition.n_slices > 1:
-            base["slice"] = {"id": partition.slice_id, "max": partition.n_slices}
+            clauses["slice"] = {"id": partition.slice_id, "max": partition.n_slices}
         if partition.pit_id is not None:
-            base["pit"] = {"id": partition.pit_id, "keep_alive": self.pit_keep_alive}
-        after = None
-        while True:
-            body = dict(base)
-            if after is not None:
-                body["search_after"] = after
-            if partition.pit_id is not None:
-                # PIT searches are body-only: the id pins index + snapshot
-                hits = client.search_pit(body)["hits"]["hits"]
-            else:
-                hits = client.search(index=self.index, body=body)["hits"]["hits"]
-            if not hits:
-                return
-            for hit in hits:
-                yield (
-                    hit.get("_index"),
-                    str(hit.get("_id")) if hit.get("_id") is not None else None,
-                    json.dumps(hit.get("sort")),
-                    json.dumps(hit.get("_source")),
-                )
-            after = hits[-1]["sort"]
-            if len(hits) < self.page_size:
-                return
+            clauses["pit"] = {"id": partition.pit_id, "keep_alive": self.pit_keep_alive}
+        for hits in self.scan.pages(clauses=clauses):
+            yield from map(hit_row, hits)
 
 
 class EsLiveDataSource(DataSource):
@@ -148,7 +112,7 @@ class EsLiveDataSource(DataSource):
         return "es_live"
 
     def schema(self) -> str:
-        return SCHEMA
+        return HIT_SCHEMA
 
     def reader(self, schema) -> EsLiveReader:
         return EsLiveReader(self.options)

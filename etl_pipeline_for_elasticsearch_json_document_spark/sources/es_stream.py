@@ -21,7 +21,9 @@ tuple, and ``readBetweenOffsets(start, end)`` deterministically re-reads
 the half-open interval ``start < sort <= end`` on crash replay — the
 ``(ts, id)`` sort is a total order (the property the reference's loop
 already relies on for no-skip/no-dup paging), so a replayed batch is the
-same rows in the same order.
+same rows in the same order. The page loop is
+:class:`~.es_http.SearchAfterScan`, the one the sliced ``es_live`` read
+runs per slice.
 
 Scale posture: a ``SimpleDataSourceStreamReader`` reads on the DRIVER —
 the right shape for a low-latency control-plane tail (the cursor loop is
@@ -45,9 +47,11 @@ from typing import Any
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from etl_pipeline_for_elasticsearch_json_document_spark.sources.es_http import HttpEsClient
-
-SCHEMA = "_index string, _id string, sort_json string, source_json string"
+from etl_pipeline_for_elasticsearch_json_document_spark.sources.es_http import (
+    HIT_SCHEMA,
+    SearchAfterScan,
+    hit_row,
+)
 
 
 def _leq(a: list[Any], b: list[Any]) -> bool:
@@ -58,20 +62,8 @@ def _leq(a: list[Any], b: list[Any]) -> bool:
 
 class EsTailStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options) -> None:
-        self.url = options.get("url")
-        if not self.url:
-            raise ValueError("es_tail requires .option('url', 'http://host:9200')")
-        self.index = options.get("index")
-        if not self.index:
-            raise ValueError("es_tail requires .option('index', <es index name>)")
-        self.page_size = int(options.get("page_size", "1000"))
+        self.scan = SearchAfterScan(options, "es_tail")
         self.max_docs_per_batch = int(options.get("max_docs_per_batch", "100000"))
-        self.sort_fields = [
-            s.strip()
-            for s in options.get("sort", "auditProcessedDateTimeUtc,claimRequestId").split(",")
-            if s.strip()
-        ]
-        self.query = json.loads(options.get("query", '{"match_all": {}}'))
         #: resume point for a fresh checkpoint (e.g. the cutoff of an
         #: es_live bulk catch-up): JSON sort array, exclusive
         self.start_after = options.get("start_after")
@@ -81,67 +73,34 @@ class EsTailStreamReader(SimpleDataSourceStreamReader):
         after = json.loads(self.start_after) if self.start_after else None
         return {"after": json.dumps(after)}
 
-    def _pages(self, after: list[Any] | None):
-        """The reference's search_after page loop (ElasticSearch ETL.py:
-        220-267), yielding one hits page at a time from ``after`` (excl.)."""
-        client = HttpEsClient(self.url)
-        base = {
-            "query": self.query,
-            "sort": [{f: "asc"} for f in self.sort_fields],
-            "size": self.page_size,
-        }
-        while True:
-            body = dict(base)
-            if after is not None:
-                body["search_after"] = after
-            hits = client.search(index=self.index, body=body)["hits"]["hits"]
-            if not hits:
-                return
-            yield hits
-            after = hits[-1]["sort"]
-            if len(hits) < self.page_size:
-                return
-
-    @staticmethod
-    def _row(hit: dict[str, Any]) -> tuple:
-        return (
-            hit.get("_index"),
-            str(hit.get("_id")) if hit.get("_id") is not None else None,
-            json.dumps(hit.get("sort")),
-            json.dumps(hit.get("_source")),
-        )
-
     def read(self, start: dict):
         """Drain new documents after ``start`` (capped at
         ``max_docs_per_batch`` so one giant backlog can't build a
         boundless micro-batch); return (rows, end offset)."""
-        after = json.loads(start["after"])
         rows: list[tuple] = []
-        last = after
-        for hits in self._pages(after):
-            for hit in hits:
-                rows.append(self._row(hit))
-                last = hit["sort"]
+        last = None
+        for hits in self.scan.pages(json.loads(start["after"])):
+            rows.extend(map(hit_row, hits))
+            last = hits[-1]
             if len(rows) >= self.max_docs_per_batch:
                 break
         if not rows:
             return iter(()), start
-        return iter(rows), {"after": json.dumps(last)}
+        return iter(rows), {"after": json.dumps(last["sort"])}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         """Crash-replay of one committed batch: re-read exactly
         ``start < sort <= end``. Deterministic because (ts, id) is a
         total order — same rows, same order, every time."""
-        after = json.loads(start["after"])
         bound = json.loads(end["after"])
         if bound is None:
             return iter(())
         rows: list[tuple] = []
-        for hits in self._pages(after):
+        for hits in self.scan.pages(json.loads(start["after"])):
             for hit in hits:
                 if not _leq(hit["sort"], bound):
                     return iter(rows)
-                rows.append(self._row(hit))
+                rows.append(hit_row(hit))
         return iter(rows)
 
     def commit(self, end: dict) -> None:  # nothing to release server-side
@@ -154,7 +113,7 @@ class EsTailDataSource(DataSource):
         return "es_tail"
 
     def schema(self) -> str:
-        return SCHEMA
+        return HIT_SCHEMA
 
     def simpleStreamReader(self, schema) -> EsTailStreamReader:
         return EsTailStreamReader(self.options)

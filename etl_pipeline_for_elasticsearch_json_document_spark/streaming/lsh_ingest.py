@@ -102,30 +102,16 @@ def _check_hash_family(index_path: str) -> None:
     — the r10 seed-prefix fix changed the family; pre-r10 stores must be
     rebuilt, and this turns that into a loud instruction). A store with
     committed versions but no stamp predates the stamp = pre-r10 family
-    = also a mismatch."""
-    fp = os.path.join(index_path, _HASH_FAMILY_FILE)
-    if os.path.exists(fp):
-        with open(fp) as f:
-            found = f.read().strip()
-        if found != HASH_FAMILY:
-            raise ValueError(
-                f"LSH store at {index_path} was built under hash family "
-                f"{found!r}; this build uses {HASH_FAMILY!r} — identical "
-                "text now hashes to different buckets, so ingest would "
-                "silently classify known near-dups as unique. Rebuild the "
-                "store from the corpus (or pin the old code for it)."
-            )
-        return
-    if delta_store.committed_versions(index_path):
+    = also a mismatch (:func:`delta_store.create_sidecar`)."""
+    found = delta_store.create_sidecar(index_path, _HASH_FAMILY_FILE, HASH_FAMILY)
+    if found.strip() != HASH_FAMILY:
         raise ValueError(
-            f"LSH store at {index_path} has committed versions but no "
-            f"{_HASH_FAMILY_FILE} stamp — it predates the hash-family "
-            f"guard and was built under the pre-{HASH_FAMILY!r} family "
-            "(the r10 seed-prefix fix changed bucket hashes). Rebuild the "
-            "store from the corpus."
+            f"LSH store at {index_path} was built under hash family "
+            f"{found.strip()!r}; this build uses {HASH_FAMILY!r} — identical "
+            "text now hashes to different buckets, so ingest would "
+            "silently classify known near-dups as unique. Rebuild the "
+            "store from the corpus (or pin the old code for it)."
         )
-    os.makedirs(index_path, exist_ok=True)
-    delta_store.atomic_write(fp, HASH_FAMILY)
 
 
 def _resolve(union: DataFrame) -> DataFrame:

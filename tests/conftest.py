@@ -43,25 +43,22 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
-def golden_direct_flat(spark):
-    """flatten(golden file, bug_compat=True) computed ONCE per session —
-    the canonical (columns, row-dict) the transport-parity tests compare
-    their re-scanned flattens against. Hoisted in r14 (suite wall time,
-    VERDICT r13 item 2): test_es_live and test_es_roundtrip each rebuilt
-    this identical 5,028-column flatten inline; the canonical side is
-    itself pinned byte-for-byte against the reference implementation by
-    tests/test_flatten.py::test_golden_document_parity, so sharing it
-    drops two redundant full plan-gens + collects without weakening any
-    assertion."""
+def transport_parity_doc(spark):
+    """One golden-shaped document (perfbench gen_docs, 12 claim lines)
+    and flatten(that document read directly, bug_compat=True), computed
+    once per session: ``(doc, columns, row dict)``. The transport-parity
+    tests index ``doc`` into the fake cluster, re-scan it, and compare
+    their flatten with this one; reading the document directly is the
+    reference's own file path, and the golden byte parity of that path
+    is pinned by tests/test_flatten.py::test_golden_document_parity."""
+    import json
+
     from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import (
         flatten,
     )
-    from etl_pipeline_for_elasticsearch_json_document_spark.sources import (
-        elasticsearch as es_src,
-    )
+    from perfbench import gen_docs
 
-    direct = es_src.read_search_response_json(
-        spark, "/root/reference/ElasticSearch_Document.json"
-    )
+    doc = gen_docs.make_documents(1, 1, max_lines=12)[0]
+    direct = spark.read.json(spark.sparkContext.parallelize([json.dumps(doc)]))
     flat = flatten(direct, bug_compat=True)
-    return flat.columns, flat.collect()[0].asDict()
+    return doc, flat.columns, flat.collect()[0].asDict()

@@ -21,8 +21,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.sources.es_live import E
 
 from tests.fake_es import start_fake_es
 
-GOLDEN = "/root/reference/ElasticSearch_Document.json"
-
 
 @pytest.fixture()
 def fake_es():
@@ -105,13 +103,12 @@ def test_es_live_matches_sequential_keyset_scan(spark, sf_dir, fake_es, tmp_path
 
 
 @pytest.mark.slow
-def test_es_live_flatten_parity_with_sequential_path(spark, fake_es, golden_direct_flat):
-    """Golden-document byte parity: flatten(sliced live read) must equal
-    flatten(sequential keyset scan) cell-for-cell on the reference's own
-    document — including through EMPTY slices (1 doc across 3 slices
-    leaves 2 cursors that must terminate cleanly on their first page)."""
-    with open(GOLDEN) as f:
-        source = json.load(f)["hits"]["hits"][0]["_source"]
+def test_es_live_flatten_parity_with_sequential_path(spark, fake_es, transport_parity_doc):
+    """Golden-shaped document parity: flatten(sliced live read) must equal
+    flatten(the document read directly) cell-for-cell — including
+    through EMPTY slices (1 doc across 3 slices leaves 2 cursors that
+    must terminate cleanly on their first page)."""
+    source, d_cols, d_row = transport_parity_doc
     client = HttpEsClient(fake_es)
     payload = (
         json.dumps({"index": {"_index": "claims", "_id": "g1"}})
@@ -136,10 +133,6 @@ def test_es_live_flatten_parity_with_sequential_path(spark, fake_es, golden_dire
     )
     live_flat = flatten(parsed, bug_compat=True)
 
-    # canonical side shared via the session fixture (r14): identical
-    # computation to the inline flatten it replaces, itself pinned against
-    # the reference by test_flatten's golden parity test
-    d_cols, d_row = golden_direct_flat
     assert live_flat.columns == d_cols
     l_row = live_flat.collect()[0].asDict()
     diff = {k: (l_row[k], d_row[k]) for k in d_row if l_row[k] != d_row[k]}

@@ -18,8 +18,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.sources.es_http import H
 
 from tests.fake_es import start_fake_es
 
-GOLDEN = "/root/reference/ElasticSearch_Document.json"
-
 
 @pytest.fixture()
 def fake_es():
@@ -69,14 +67,13 @@ def test_parquet_to_bulk_to_rescan_round_trip(spark, sf_dir, fake_es, tmp_path):
 
 
 @pytest.mark.slow
-def test_golden_document_flatten_parity_through_fake_es(spark, fake_es, golden_direct_flat):
-    """Index the golden document's _source into the fake cluster, re-scan
-    it with search_after, and flatten — the result must be column-for-
-    column identical to flattening the golden file directly (the
+def test_golden_document_flatten_parity_through_fake_es(spark, fake_es, transport_parity_doc):
+    """Index a golden-shaped document into the fake cluster, re-scan it
+    with search_after, and flatten — the result must be column-for-
+    column identical to flattening the document read directly (the
     reference's actual pipeline, now round-tripped through live protocol
     instead of a file)."""
-    with open(GOLDEN) as f:
-        source = json.load(f)["hits"]["hits"][0]["_source"]
+    source, d_cols, d_row = transport_parity_doc
     client = HttpEsClient(fake_es)
     payload = (
         json.dumps({"index": {"_index": "claims", "_id": "g1"}})
@@ -99,12 +96,7 @@ def test_golden_document_flatten_parity_through_fake_es(spark, fake_es, golden_d
     assert len(pages) == 1
     scanned_flat = flatten(pages[0], bug_compat=True)
 
-    # canonical side shared via the session fixture (r14): identical
-    # computation to the inline flatten it replaces, itself pinned against
-    # the reference by test_flatten's golden parity test
-    d_cols, d_row = golden_direct_flat
     assert scanned_flat.columns == d_cols
-    assert len(scanned_flat.columns) == 5028
     s_row = scanned_flat.collect()[0].asDict()
     diff = {k: (s_row[k], d_row[k]) for k in d_row if s_row[k] != d_row[k]}
     assert not diff, f"{len(diff)} cells differ, e.g. {list(diff.items())[:3]}"
@@ -123,6 +115,19 @@ def test_bulk_replay_is_idempotent_upsert(spark, fake_es, tmp_path):
     es_sink.replay_bulk_files(out, fake_es)
     es_sink.replay_bulk_files(out, fake_es)  # second replay: same state
     assert client.count("idem")["count"] == 3
+
+
+def _bulk_ids(path: str) -> list[int]:
+    """The ``_id`` of every action line in a bulk directory's part files."""
+    import glob as _glob
+    import os
+
+    ids = []
+    for f in _glob.glob(os.path.join(path, "part-*")):
+        with open(f) as fh:
+            lines = [ln for ln in fh.read().splitlines() if ln]
+        ids.extend(int(json.loads(a)["index"]["_id"]) for a in lines[0::2])
+    return ids
 
 
 def test_streaming_export_to_live_fake_cluster(spark, fake_es, tmp_path):
@@ -167,6 +172,10 @@ def test_streaming_export_to_live_fake_cluster(spark, fake_es, tmp_path):
         id_col="doc_id", base_url=fake_es, max_docs_per_file=3,
     ).awaitTermination(600)
     assert client.count("stream_docs")["count"] == 7  # upserted, not doubled
+    # the replay rewrote its own epoch directory: still one, still 7 docs
+    dirs = _glob.glob(os.path.join(out, "bulk_epoch*"))
+    assert len(dirs) == 1
+    assert sorted(_bulk_ids(dirs[0])) == list(range(7))
 
     # re-scan what the cluster holds and check content survived
     base_query = {"query": {"match_all": {}},
@@ -181,72 +190,51 @@ def test_streaming_export_to_live_fake_cluster(spark, fake_es, tmp_path):
     assert got == [f"doc {i}" for i in range(7)]
 
 
-def test_es_bulk_datasource_writer(spark, fake_es, tmp_path):
-    """The Spark 4 Python DataSource write path: df.write.format('es_bulk')
-    stages per-task NDJSON and commits by rename — then the standard
-    replayer ships the files to the (fake) cluster. Exercises the full
-    DataSourceWriter lifecycle including atomic commit."""
+def test_streaming_export_second_lineage_keeps_first_lineage_output(spark, tmp_path):
+    """A fresh checkpoint restarts at epoch 0. Its new data must land in
+    its own directory next to the first lineage's, never over it: the
+    directory name carries the checkpoint lineage."""
+    import glob as _glob
     import os
 
-    from etl_pipeline_for_elasticsearch_json_document_spark.sinks.es_bulk_datasource import (
-        EsBulkDataSource,
+    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.es_export import (
+        run_es_export_stream,
     )
 
-    spark.dataSource.register(EsBulkDataSource)
-    df = spark.createDataFrame(
-        [(1, 'weird "id> val', 2.5), (2, "b", None), (3, "c", 0.0)],
-        "doc_id long, name string, amount double",
-    ).repartition(2)
-    out = str(tmp_path / "dsout")
-    (
-        df.write.format("es_bulk")
-        .option("index", "ds_docs")
-        .option("id_col", "doc_id")
-        .mode("append")
-        .save(out)
-    )
-    files = sorted(f for f in os.listdir(out) if f.startswith("part-"))
-    assert files and not [f for f in os.listdir(out) if f.startswith("_staging")]
-    assert os.path.exists(os.path.join(out, "_SUCCESS"))
-    # every file is valid bulk protocol and the total is 3 docs
-    n = 0
-    for f in files:
-        with open(os.path.join(out, f)) as fh:
-            lines = [ln for ln in fh.read().splitlines() if ln]
-        for a, s in zip(lines[0::2], lines[1::2]):
-            action = json.loads(a)
-            assert action["index"]["_index"] == "ds_docs"
-            json.loads(s)
-            n += 1
-    assert n == 3
-    # replay to the live fake cluster: content round-trips
-    es_sink.replay_bulk_files(out, fake_es)
-    client = HttpEsClient(fake_es)
-    assert client.count("ds_docs")["count"] == 3
+    out = str(tmp_path / "bulk_out")
+    for lineage, ids in (("a", [1, 2]), ("b", [3])):
+        inp = tmp_path / f"in_{lineage}"
+        inp.mkdir()
+        with open(inp / "part.json", "w") as f:
+            for i in ids:
+                f.write(json.dumps({"doc_id": i, "body": f"doc {i}"}) + "\n")
+        stream = spark.readStream.schema("doc_id long, body string").json(str(inp))
+        run_es_export_stream(
+            stream, out, "lineage_docs", id_col="doc_id",
+            checkpoint_dir=str(tmp_path / f"ckpt_{lineage}"),
+        ).awaitTermination(600)
+
+    dirs = sorted(_glob.glob(os.path.join(out, "bulk_epoch*")))
+    assert len(dirs) == 2
+    assert all(os.path.basename(d).startswith("bulk_epoch000000_") for d in dirs)
+    assert sorted(sorted(_bulk_ids(d)) for d in dirs) == [[1, 2], [3]]
 
 
-def test_es_bulk_datasource_overwrite_clears_stale_parts(spark, fake_es, tmp_path):
-    """mode('overwrite') must leave NO committed part files from prior
-    writes — an ingest fleet replaying the directory would otherwise ship
-    stale bulk payloads alongside the new ones."""
+def test_write_bulk_files_overwrite_clears_stale_parts(spark, fake_es, tmp_path):
+    """A second write_bulk_files into the same directory must leave NO
+    part files from the first — an ingest fleet replaying the directory
+    would otherwise ship stale bulk payloads alongside the new ones."""
     import os
 
-    from etl_pipeline_for_elasticsearch_json_document_spark.sinks.es_bulk_datasource import (
-        EsBulkDataSource,
-    )
-
-    spark.dataSource.register(EsBulkDataSource)
     out = str(tmp_path / "ow")
     big = spark.createDataFrame(
         [(i, f"old {i}") for i in range(10)], "doc_id long, body string"
     ).repartition(4)
-    (big.write.format("es_bulk").option("index", "ow_docs")
-        .option("id_col", "doc_id").mode("append").save(out))
+    es_sink.write_bulk_files(big, out, "ow_docs", id_col="doc_id")
     first_parts = {f for f in os.listdir(out) if f.startswith("part-")}
     assert len(first_parts) >= 2
     small = spark.createDataFrame([(100, "new")], "doc_id long, body string").coalesce(1)
-    (small.write.format("es_bulk").option("index", "ow_docs")
-        .option("id_col", "doc_id").mode("overwrite").save(out))
+    es_sink.write_bulk_files(small, out, "ow_docs", id_col="doc_id")
     parts = {f for f in os.listdir(out) if f.startswith("part-")}
     assert parts and not (parts & first_parts)  # every stale part removed
     # replaying the dir now ships ONLY the new write
@@ -315,87 +303,3 @@ def test_search_retries_throttled_cluster(spark, tmp_path):
     finally:
         server.shutdown()
         server.server_close()
-
-
-@pytest.mark.slow
-def test_es_bulk_stream_writer_end_to_end(spark, fake_es, tmp_path):
-    """df.writeStream.format('es_bulk'): per-epoch bulk NDJSON dirs with
-    _SUCCESS-last commits; every epoch's files replay into the fake
-    cluster and the index converges to the streamed rows."""
-    import glob
-    import os
-
-    from etl_pipeline_for_elasticsearch_json_document_spark.sinks.es_bulk_datasource import (
-        EsBulkDataSource,
-    )
-
-    spark.dataSource.register(EsBulkDataSource)
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "bulk_stream")
-    ckpt = str(tmp_path / "ckpt")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, body string")
-    df2 = spark.createDataFrame([(3, "c")], "doc_id long, body string")
-    df1.coalesce(1).write.mode("append").json(src)
-    df2.coalesce(1).write.mode("append").json(src)
-    stream = (
-        spark.readStream.schema("doc_id long, body string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    q = (
-        stream.writeStream.format("es_bulk")
-        .option("index", "streamed")
-        .option("id_col", "doc_id")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start(out)
-    )
-    assert q.awaitTermination(600), "stream drain timed out"
-
-    epochs = sorted(glob.glob(os.path.join(out, "epoch=*")))
-    assert len(epochs) == 2
-    for e in epochs:
-        assert os.path.exists(os.path.join(e, "_SUCCESS"))
-        # replay this epoch's bulk files into the live fake cluster
-        es_sink.replay_bulk_files(e, fake_es)
-    client = HttpEsClient(fake_es)
-    assert client.count("streamed")["count"] == 3
-    got = client.search("streamed", {"size": 10, "sort": ["doc_id"]})
-    assert [h["_source"]["body"] for h in got["hits"]["hits"]] == ["a", "b", "c"]
-
-
-def test_es_bulk_stream_epoch_commit_is_replay_deterministic(tmp_path):
-    """A replayed epoch (commit re-fired for the same batchId with fresh
-    staged files) ends with ONLY the replay's parts — the interrupted
-    attempt's committed parts are removed before the rename, so the
-    epoch dir is deterministic and a downstream replayer never ships
-    both attempts."""
-    import os
-
-    from etl_pipeline_for_elasticsearch_json_document_spark.sinks.es_bulk_datasource import (
-        EsBulkStreamWriter,
-        _Staged,
-    )
-
-    out = str(tmp_path / "bulk")
-    w = EsBulkStreamWriter({"path": out, "index": "i"}, overwrite=False)
-
-    def staged(name, rows):
-        os.makedirs(out, exist_ok=True)
-        p = os.path.join(out, f"_staging_part-{name}.ndjson")
-        with open(p, "w") as f:
-            f.write("x\n" * rows)
-        return _Staged(
-            staged_path=p,
-            final_path=os.path.join(out, f"part-{name}.ndjson"),
-            rows=rows,
-        )
-
-    w.commit([staged("attempt1", 2)], batchId=0)
-    edir = os.path.join(out, "epoch=0")
-    assert sorted(os.listdir(edir)) == ["_SUCCESS", "part-attempt1.ndjson"]
-    # crash-after-commit-before-checkpoint: the engine replays epoch 0
-    w.commit([staged("attempt2", 3)], batchId=0)
-    assert sorted(os.listdir(edir)) == ["_SUCCESS", "part-attempt2.ndjson"]
-    with open(os.path.join(edir, "_SUCCESS")) as f:
-        assert f.read() == "3"

@@ -1,7 +1,8 @@
 """Structural guard: the delta-store ledger, its version directories and
-snapshot marker, the atomic file write and the foreachBatch starter each
-live in one place, so a new store or store stream reuses them instead of
-copying the protocol."""
+snapshot marker, the atomic file write, the exclusive sidecar create, the
+foreachBatch starter, the Elasticsearch ``search_after`` page loop and
+its 429/503 retry loop each live in one place, so a new store, stream or
+source reuses them instead of copying the protocol."""
 
 from __future__ import annotations
 
@@ -24,6 +25,9 @@ PKG = (
         ('"_SNAPSHOT"', "operators/delta_store.py"),
         ("writeStream.foreachBatch", "streaming/identity.py"),
         (".__old__", "sinks/compact.py"),
+        ("os.link(", "operators/delta_store.py"),
+        ('hits[-1]["sort"]', "sources/es_http.py"),
+        ("e.code not in (429, 503)", "sources/es_http.py"),
     ],
 )
 def test_protocol_lives_in_one_module(needle, home):

@@ -815,6 +815,45 @@ def test_cms_stream_refuses_old_sketch_state(spark, tmpdir):
         read_rollup(spark, state)
 
 
+def test_cms_stream_refuses_other_geometry(spark, tmpdir):
+    """The store records the (depth, width) it was built with. A fresh
+    checkpoint with another width must be refused before its stream
+    starts: cells of two widths in one store make every estimate wrong."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.operators.delta_store import (
+        committed_versions,
+    )
+    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.sketch_job import (
+        run_cms_stream,
+    )
+
+    src = os.path.join(tmpdir, "cms_geo_src")
+    spark.createDataFrame(
+        [(f"w{i}",) for i in range(20)], "w string"
+    ).coalesce(1).write.json(src)
+    state = os.path.join(tmpdir, "cms_geo_state")
+
+    def run(width: int, ck: str):
+        return run_cms_stream(
+            spark.readStream.schema("w string").json(src), "w",
+            state_path=state, checkpoint_dir=os.path.join(tmpdir, ck), width=width,
+        )
+
+    assert run(32, "cms_geo_ck_a").awaitTermination(600)
+    before = committed_versions(state)
+    assert before == [0]
+    with pytest.raises(ValueError, match="width"):
+        run(64, "cms_geo_ck_b").awaitTermination(600)
+    assert committed_versions(state) == before
+    # the recorded geometry still runs
+    assert run(32, "cms_geo_ck_c").awaitTermination(600)
+    assert committed_versions(state) == [0, 1]
+    # a store with versions but no stamp has an unknown geometry
+    os.remove(os.path.join(state, "_SKETCH"))
+    with pytest.raises(ValueError, match="no _SKETCH"):
+        run(32, "cms_geo_ck_d")
+    assert committed_versions(state) == [0, 1]
+
+
 def test_cms_stream_compacts_to_batch_sketch(spark, tmpdir):
     """Each micro-batch commits one delta version; compact_rollup folds
     the tail into one snapshot that still equals count_min_build over all
