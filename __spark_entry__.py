@@ -9,17 +9,26 @@ All queries live in
 ``etl_pipeline_for_elasticsearch_json_document_spark.queries`` (one entry
 per operator from SURVEY.md §2); this module just adapts the registry to
 the driver's interface.
+
+The driver verifies a bounded number of queries per round in dict order,
+so both dicts follow one rotation derived from the committed
+``CORRECTNESS_r{N}.json`` files: names that no file proves green come
+first, then every other name, stalest first (by the latest round whose
+file records ``hash_match`` for it), with the name as the tiebreak.
 """
 
 from __future__ import annotations
 
+import json
+import re
 import sys
 from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+_ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(_ROOT))
 
 from etl_pipeline_for_elasticsearch_json_document_spark.queries import all_queries  # noqa: E402
 
@@ -28,201 +37,26 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the engine's signature
     operation — flatten semi-structured events (JSON props) into the
     reference's wide all-string shape, executed as one Catalyst select."""
-    from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import REGISTRY
-
-    all_queries()
-    return REGISTRY["q70_flatten_events"].fn(spark, "/root/testdata/sf0.001")
+    return all_queries()["q70_flatten_events"].fn(spark, "/root/testdata/sf0.001")
 
 
-# Ordering policy: the driver verifies a bounded number (~50) of queries per
-# round in dict order, so _ordered() emits (1) queries never yet driver-
-# checked, (2) queries first registered this round, (3) already-driver-
-# verified names ordered STALEST FIRST (by the round whose
-# CORRECTNESS_r{N}.json last proved them green) — with all 226 registered
-# queries cumulatively driver-verified (r1-r9, zero failures), the r10 budget
-# takes any new names first and then re-verifies the least-recently-checked
-# band (the remaining round-4 block q120-q143 and the r5 block q144-q152 —
-# the oldest green proofs on the board, as VERDICT r9 item 4 prescribes).
-# ALL of (1) and (2) are locally green against the same DuckDB oracles at the
-# driver's sf0.01 (scripts/compare_oracle.py); the remainder keeps regression
-# coverage via tests/test_queries.py. Round maintenance: after each
-# CORRECTNESS_r{N}.json, record its green names as last-verified in round N
-# and empty the new-this-round set.
-
-#: Queries first registered this round — ordered first (never driver-checked,
-#: newest); locally oracle-green at sf0.01 AND sf0.001 before registration
-#: (scripts/compare_oracle.py). r14 registers no new queries (optimization
-#: round); CORRECTNESS_r13 proved all 50 of its rotation green (including
-#: q250), folded into _LAST_VERIFIED below per the round-maintenance note.
-_NEW_IN_R14: set[str] = set()
-
-#: name → round whose driver CORRECTNESS run last proved it green.
-_LAST_VERIFIED: dict[str, int] = {
-    # round 1 (stalest — re-verified first)
-    "q54_bigram_counts": 11, "q55_language_id": 11, "q57_char_ngram_profile": 11,
-    "q58_pii_redaction": 11, "q59_train_split": 11, "q60_multimodal_meta": 11,
-    # round 2
-    "q10_window_topk": 10, "q11_window_running": 10, "q12_rank_dense": 10,
-    "q13_sort_limit": 10, "q14_union_all": 11, "q15_intersect": 11,
-    "q16_except": 11, "q17_semi_join": 11, "q18_anti_join": 11,
-    "q19_outer_join_coalesce": 11, "q20_string_funcs": 11, "q21_date_funcs": 11,
-    "q22_case_when": 11, "q23_json_extract": 11, "q24_array_funcs": 11,
-    "q25_keyset_page": 11, "q26_asof_join": 11, "q27_range_join": 11,
-    "q28_exists_subquery_agg": 11, "q29_tumbling_window": 11,
-    "q30_dedup_exact": 11, "q31_jaccard_pairs": 11, "q32_minhash_lsh": 11,
-    "q33_simhash_pairs": 11, "q34_embedding_neardup": 11,
-    "q36_repetition_metrics": 11, "q37_shingle_jaccard": 11,
-    "q40_knn_bruteforce": 11, "q41_knn_lsh": 11, "q42_knn_ivf": 11,
-    "q43_knn_pq": 11, "q44_label_centroids": 11, "q45_ann_recall": 11,
-    "q48_pagerank": 11, "q50_token_stats": 11,
-    # round 3
-    "q46_cdc_chunk_dedup": 13, "q47_flatten_families": 13, "q56_tfidf": 13,
-    "q61_multimodal_decode": 13, "q62_frame_sample": 13, "q63_pipeline_e2e": 13,
-    "q64_sessionize": 13, "q65_outlink_domains": 13, "q66_audio_chunks": 13,
-    "q68_ntile_deciles": 13, "q69_group_concat": 13, "q70_flatten_events": 13,
-    "q71_winnowing_fingerprints": 13, "q72_bpe_token_stats": 13,
-    "q73_zorder_key": 13, "q74_binned_quantile_sketch": 13,
-    "q75_top_tokens_per_lang": 13, "q76_variant_json": 13,
-    "q77_latest_by_key": 13, "q78_mode_per_group": 13, "q79_histogram": 13,
-    "q80_math_funcs": 13, "q81_null_handling": 13, "q82_string_more": 13,
-    "q83_date_more": 13, "q84_scalar_subquery": 13, "q85_in_subquery": 13,
-    "q86_literal_dim_join": 13, "q88_posexplode": 13, "q89_full_outer_join": 13,
-    "q90_map_functions": 13, "q91_pivot": 8, "q92_unpivot": 9,
-    "q93_stats_agg": 9, "q94_window_distribution": 9, "q95_sessionize": 9,
-    "q96_regexp_extract_all": 9, "q97_rolling_time_window": 9,
-    "q98_nth_value": 9, "q99_bool_bit_agg": 9,
-    # round 4 (entries re-verified by CORRECTNESS_r09's stalest band are 9).
-    # q01 was driver-green in r9 but its PLAN changed in r13 (gated
-    # under-split fan-out exchange, commit ac7fd57): recorded as 7 so it
-    # re-verifies ahead of the round-8 band (the q175/q217 precedent);
-    # locally oracle-green at sf0.01 + sf0.001 after the change.
-    "q01_pricing_summary": 7, "q02_filter_predicates": 9,
-    "q03_revenue_topn": 9, "q04_join_region_rollup": 9,
-    "q05_count_distinct": 9, "q06_rollup": 9, "q07_cube": 9,
-    "q08_grouping_sets": 9, "q09_median_percentile": 9,
-    "q100_decontaminate": 9, "q106_count_min": 9, "q107_vector_quantize": 9,
-    "q108_scd2": 9, "q109_dedup_weights": 9, "q110_fuzzy_decontaminate": 9,
-    "q111_weighted_sample": 9, "q112_facets": 9, "q113_bm25_topk": 9,
-    "q114_triangle_counts": 9, "q115_source_mix": 9,
-    "q116_decontaminated_stats": 9, "q117_novelty_scores": 9,
-    "q118_profile": 9, "q119_gap_fill": 9, "q120_null_safe_join": 10,
-    "q121_union_schema_evolution": 10, "q122_bfs_levels": 10, "q123_funnel": 10,
-    "q124_retention_cohorts": 10, "q125_fuzzy_match": 10,
-    "q126_anomaly_days": 10, "q127_snapshot_diff": 10,
-    "q128_dedup_cluster_stats": 10, "q129_regression_agg": 10,
-    "q130_ewma_daily": 10, "q131_boilerplate_ratio": 10,
-    "q132_lsh_verify_calibration": 10, "q133_salted_join": 10,
-    "q134_length_stratified_sample": 10, "q135_campaign_overlap": 10,
-    "q136_debounce_events": 10, "q137_json_key_profile": 10,
-    "q138_kmeans_codebook": 10, "q139_semantic_dedup": 10,
-    "q140_heavy_hitters": 10, "q141_prefix_filter_jaccard": 10,
-    "q142_asof_join_forward": 10, "q143_event_transitions": 10,
-    "q67_hll_sketch_distinct": 10, "q87_approx_count_distinct": 10,
-    # round 5
-    "q144_char_entropy": 10, "q145_winsorized_stats": 10, "q146_token_jsd": 10,
-    "q147_kmv_sketch_overlap": 11, "q148_weighted_reservoir": 11,
-    "q149_vocab_oov": 11, "q150_matryoshka_recall": 11, "q151_fd_audit": 11,
-    "q152_dup_spans": 11,
-    # round 7 (CORRECTNESS_r07: 50/50 green — the 10 r7-new, the 30 r6-new,
-    # and the 10 stalest re-verifications)
-    "q35_dedup_clusters": 12, "q38_sentence_dedup": 12,
-    "q51_quality_metrics": 12, "q52_lang_facet": 12,
-    "q53_fingerprint_groups": 12, "q101_domain_quota": 11,
-    "q102_sequence_packing": 11, "q103_lsh_star_dedup": 11,
-    "q104_text_chunks": 11, "q105_bigram_lift": 11,
-    "q153_bloom_decontaminate": 12, "q154_line_dedup_rebuild": 12,
-    "q155_char_lm_score": 12, "q156_zipf_slope": 12, "q157_normalized_dedup": 12,
-    "q158_incremental_dedup": 12, "q159_recursive_cte": 12,
-    "q160_lateral_topn": 12, "q161_hard_negatives": 12,
-    "q162_quality_funnel": 12, "q163_key_skew_audit": 12,
-    "q164_epoch_shards": 12, "q165_vocab_coverage": 12,
-    "q166_source_overlap": 12, "q167_truncation_loss": 12,
-    "q168_lsh_param_sweep": 12, "q169_lang_confusion": 12,
-    "q170_deletion_manifest": 12, "q171_temperature_mix": 12,
-    "q172_degenerate_runs": 12, "q173_label_shard_balance": 12,
-    "q174_dedup_growth_curve": 12, "q175_length_calibration": 12,
-    "q176_domain_overlap": 12, "q177_code_switching": 12,
-    "q178_canary_scan": 12, "q179_filter_redundancy": 12,
-    "q180_event_cooccurrence": 12, "q181_false_merge_audit": 12,
-    "q182_watermark_audit": 12, "q183_gopher_rules": 12,
-    "q184_dup_ngram_mass": 12, "q185_dsir_importance": 12,
-    "q186_best_of_cluster": 12, "q187_blocking_audit": 12,
-    "q188_embedding_qa": 12, "q189_label_margin_audit": 12,
-    "q190_split_leakage": 12, "q191_rare_ngram_loss": 12,
-    "q192_dedup_signal_agreement": 12,
-    # round 8 (CORRECTNESS_r08: 50/50 green — the 18 r8-new plus the 32
-    # stalest re-verifications, whose entries above are bumped to 8)
-    "q193_contamination_fraction": 13, "q194_dedup_pareto": 13,
-    "q195_source_dup_matrix": 13, "q196_prefix_template_groups": 13,
-    "q197_embedding_dim_clip": 13, "q198_packing_boundary_curve": 13,
-    "q199_gram_df_spectrum": 13, "q200_label_silhouette": 13,
-    "q201_basket_lift": 13, "q202_supply_concentration": 13,
-    "q203_tpch_q5_local_volume": 13, "q204_large_order_customers": 13,
-    "q205_lang_source_chi2": 13, "q206_langid_kappa": 13,
-    "q207_sorted_neighborhood": 13, "q208_benford_price_audit": 13,
-    "q209_embedding_cov_probe": 13, "q210_budget_selection": 13,
-    # round 9 (CORRECTNESS_r09: 50/50 green — the 18 r9-new plus the 32
-    # stalest re-verifications, whose entries above are bumped to 9)
-    "q211_cheapest_supplier": 9, "q212_part_value_concentration": 9,
-    "q213_order_count_distribution": 9, "q214_idle_customer_audit": 9,
-    "q215_readability_scores": 9, "q216_fingerprint_bucket_health": 9,
-    "q217_scorer_rank_correlation": 12, "q218_event_burstiness": 9,
-    "q219_price_band_match": 9, "q220_nation_trade_volume": 9,
-    "q221_lexical_richness": 9, "q222_user_value_gini": 12,
-    "q223_backlog_curve": 9, "q224_shipping_delay_distribution": 9,
-    "q225_repeat_purchase_interval": 9, "q226_first_word_entropy": 9,
-    "q227_balance_outliers_robust": 9, "q228_crosslingual_mirror": 9,
-    # round 10 (CORRECTNESS_r10: 50/50 green — the 17 r10-new plus the 33
-    # stalest re-verifications, whose entries above are bumped to 10)
-    "q229_small_quantity_revenue": 10,
-    "q230_waiting_suppliers": 10,
-    "q231_product_profit": 10,
-    "q232_top_supplier_revenue": 10,
-    "q233_disjunctive_revenue": 10,
-    "q234_dominant_part_suppliers": 10,
-    "q235_market_share": 10,
-    "q236_promo_revenue_share": 10,
-    "q237_part_supplier_diversity": 10,
-    "q238_order_priority_check": 10,
-    "q239_forecast_revenue": 10,
-    "q240_returned_items": 10,
-    "q241_priority_lateness_matrix": 10,
-    "q242_epoch_budget_plan": 10,
-    "q243_contamination_cascade": 10,
-    "q244_trailing_wau": 10,
-    # q175/q217/q222/q245 were driver-green in rounds 7/9/9/10 but were
-    # REIMPLEMENTED on value_domain_rank_blocks/ranks in r11 (ADVICE r11):
-    # recorded as 6 so they re-verify ahead of the round-7 band — their
-    # last driver proof describes the pre-refactor implementation (local
-    # sf0.001 oracle gates and the bit-equality property tests do cover
-    # the rewrite).
-    "q245_zipf_slope": 12,
-    # round 11 (CORRECTNESS_r11: 50/50 green — the 2 r11-new plus the 48
-    # stalest re-verifications, whose entries above are bumped to 11)
-    "q246_schema_evolution": 11,
-    "q247_path_coverage_drift": 11,
-    "q248_deep_schema_evolution": 12,
-    "q249_flatten_width_contract": 12,
-    # round 13 (CORRECTNESS_r13: 50/50 green — q250 new, the 18 r8-vintage
-    # and 31 r3-vintage stalest re-verifications, bumped to 13 above)
-    "q250_volume_contract": 13,
-}
+def _last_verified() -> dict[str, int]:
+    """name → the latest round N whose ``CORRECTNESS_rN.json`` (next to this
+    module) records ``hash_match`` for it."""
+    last: dict[str, int] = {}
+    for path in _ROOT.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        for name, result in json.loads(path.read_text()).items():
+            if result.get("hash_match"):
+                last[name] = max(int(m[1]), last.get(name, 0))
+    return last
 
 
 def _ordered() -> list[str]:
-    names = sorted(all_queries())
-    never_checked = [
-        n for n in names if n not in _LAST_VERIFIED and n not in _NEW_IN_R14
-    ]
-    verified = sorted(
-        (n for n in names if n in _LAST_VERIFIED),
-        key=lambda n: (_LAST_VERIFIED[n], n),
-    )
-    return (
-        never_checked
-        + [n for n in names if n in _NEW_IN_R14]
-        + verified
-    )
+    last = _last_verified()
+    return sorted(all_queries(), key=lambda n: (last.get(n, 0), n))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

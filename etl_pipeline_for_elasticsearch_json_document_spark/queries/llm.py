@@ -22,12 +22,9 @@ from etl_pipeline_for_elasticsearch_json_document_spark.operators import (
     text,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten
+from etl_pipeline_for_elasticsearch_json_document_spark.queries import lsh_oracle
 from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import query
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
-
-
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -46,7 +43,7 @@ FROM documents GROUP BY fp
     doc="Exact dedup groups via normalized-md5 fingerprint groupBy.",
 )
 def q30(spark, sf_dir):
-    return dedup.exact_duplicates(_t(spark, sf_dir, "documents"), "doc_id", "text")
+    return dedup.exact_duplicates(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @query(
@@ -66,7 +63,9 @@ WHERE round(i / (sa.n + sb.n - i), 6) >= 0.6
     doc="Exact word-set Jaccard pairs via inverted-index join.",
 )
 def q31(spark, sf_dir):
-    return dedup.jaccard_pairs(_t(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.6)
+    return dedup.jaccard_pairs(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.6
+    )
 
 
 @query(
@@ -91,35 +90,17 @@ WHERE round(i / (sa.n + sb.n - i), 6) >= 0.5
     "catches reordered/edited near-dups and shrinks postings lists.",
 )
 def q37(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return dedup.jaccard_pairs(
         d, "doc_id", "text", threshold=0.5, token_expr=text.word_ngrams(F.col("text"), 3)
     )
 
 
 def _minhash_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.5) -> str:
-    rows = num_hashes // bands
-    # Hash function k = 8 hex chars of md5(seed || w) at offset (k%4)*8 —
-    # identical family to operators/dedup.py (PREFIX_LEN slices, 4 per md5).
-    mins = ",\n  ".join(
-        f"min(substring(md5('{dedup._seed_prefix(dedup._minhash_seed_offset(k)[0])}' || w), "
-        f"{dedup._minhash_seed_offset(k)[1] + 1}, 8)) AS mh{k}"
-        for k in range(num_hashes)
-    )
-    band_exprs = ",\n   ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
-        + "))"
-        for b in range(bands)
-    )
-    matches = " + ".join(f"(sa.mh{j} = sb.mh{j})::INT" for j in range(num_hashes))
+    matches = lsh_oracle.minhash_matches("sa", "sb", num_hashes)
     return f"""
-WITH words AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-sig AS (SELECT doc_id,
-  {mins}
-  FROM words GROUP BY doc_id),
-banded AS (SELECT doc_id, unnest(list_value(
-   {band_exprs})) AS bucket FROM sig),
+WITH {lsh_oracle.WORDS},
+{lsh_oracle.minhash_banded(num_hashes, bands)},
 cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
          FROM banded a JOIN banded b ON a.bucket = b.bucket AND a.doc_id < b.doc_id)
 SELECT a_id, b_id,
@@ -139,7 +120,12 @@ WHERE round(({matches}) / {float(num_hashes)}, 6) >= {threshold}
 )
 def q32(spark, sf_dir):
     return dedup.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", num_hashes=16, bands=4, threshold=0.5
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        "text",
+        num_hashes=16,
+        bands=4,
+        threshold=0.5,
     )
 
 
@@ -171,7 +157,7 @@ WHERE bit_count(xor(a.sh, b.sh)) <= {max_hamming}
 )
 def q33(spark, sf_dir):
     return dedup.simhash_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", bits=16, max_hamming=3
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", bits=16, max_hamming=3
     )
 
 
@@ -187,7 +173,7 @@ WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
 )
 def q34(spark, sf_dir):
     return dedup.embedding_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), "vec_id", "embedding", "label", threshold=0.95
+        load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding", "label", threshold=0.95
     )
 
 
@@ -196,9 +182,7 @@ def q34(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "q40_knn_bruteforce",
-    oracle="""
+Q40_ORACLE = """
 WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS n_id,
@@ -209,12 +193,17 @@ SELECT q_id, n_id, cos, rank FROM (
          row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
   FROM scored)
 WHERE rank <= 5
-""",
+"""
+
+
+@query(
+    "q40_knn_bruteforce",
+    oracle=Q40_ORACLE,
     doc="Exact cosine top-5 neighbors for 10 query vectors (broadcast "
     "queries, one scoring pass, Window top-k).",
 )
 def q40(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.knn_bruteforce(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
@@ -267,13 +256,11 @@ SELECT q_id, n_id, cos, rank FROM (
     "make even this index exactly oracle-checkable.",
 )
 def q41(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.knn_lsh(emb, emb.filter(F.col("vec_id") < 10), dim=64, k=5)
 
 
-@query(
-    "q42_knn_ivf",
-    oracle="""
+Q42_ORACLE = """
 WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
 asg AS (SELECT cid, vec_id AS n_id FROM (
   SELECT v.vec_id, c.cid,
@@ -297,13 +284,18 @@ SELECT q_id, n_id, cos, rank FROM (
          row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
   FROM scored)
 WHERE rank <= 5
-""",
+"""
+
+
+@query(
+    "q42_knn_ivf",
+    oracle=Q42_ORACLE,
     doc="ANN top-5 via a deterministic IVF index: nearest-centroid "
     "assignment (map-side max_by), nprobe=4 partition probe, in-partition "
     "scoring — the partition-pruning scale path next to q41's LSH.",
 )
 def q42(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.knn_ivf(
         emb,
         emb.filter(F.col("vec_id") < 10),
@@ -356,7 +348,7 @@ WHERE rank <= {k}
     "to q41's LSH and q42's IVF. Fully relational, exact SQL oracle.",
 )
 def q43(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.knn_pq(
         emb,
         emb.filter(F.col("vec_id") < 10),
@@ -384,7 +376,7 @@ FROM ex GROUP BY label, dim
     "decimal sums make the result add-order-independent.",
 )
 def q44(spark, sf_dir):
-    return similarity.label_centroids(_t(spark, sf_dir, "embeddings"))
+    return similarity.label_centroids(load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -405,7 +397,7 @@ FROM documents GROUP BY lang
     doc="Token counting rolled up by language.",
 )
 def q50(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     nt = text.token_count(F.col("text"))
     return d.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -431,7 +423,7 @@ FROM documents WHERE doc_id < 100
     "stopword ratio — pure expressions, no shuffle.",
 )
 def q51(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return d.select(
         "doc_id",
         text.token_count(F.col("text")).alias("n_tokens"),
@@ -450,7 +442,7 @@ FROM documents GROUP BY lang, source
 )
 def q52(spark, sf_dir):
     return (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("lang", "source")
         .agg(F.count("*").alias("n"), F.sum("n_chars").alias("chars"))
     )
@@ -466,7 +458,7 @@ FROM documents GROUP BY fp HAVING count(*) >= 1
     doc="Document fingerprint (normalized md5) groups.",
 )
 def q53(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select(text.fingerprint(F.col("text")).alias("fp"), "doc_id")
         .groupBy("fp")
@@ -487,7 +479,7 @@ SELECT bg, count(*) AS n FROM b GROUP BY bg HAVING count(*) >= 20
     "explode only at the count).",
 )
 def q54(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select(F.explode(text.bigrams(F.col("text"))).alias("bg"))
         .groupBy("bg")
@@ -511,7 +503,7 @@ FROM documents GROUP BY pred_lang
     doc="Heuristic language-ID facet (frequent-word profiles as regex).",
 )
 def q55(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     t = F.lower(F.col("text"))
     pred = (
         F.when(t.rlike(r"\b(der|die|das|und|ist)\b"), "de")
@@ -539,7 +531,7 @@ FROM documents WHERE doc_id < 100
     "pattern: binary blob, metadata computed engine-side).",
 )
 def q60(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     blob = F.encode(F.col("text"), "UTF-8")
     return d.select(
         "doc_id",
@@ -565,7 +557,7 @@ FROM documents WHERE doc_id < 100
 def q61(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators.multimodal import decode_images
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     payload = d.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
     return decode_images(payload, "payload", id_col="doc_id")
 
@@ -588,7 +580,7 @@ FROM events
     "json_to_tsv_in_memory semantics, Catalyst-executed).",
 )
 def q70(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     nested = e.select(
         "event_id", "event_type", F.from_json("props", "k INT").alias("props")
     )
@@ -614,7 +606,7 @@ FROM events
 def q47(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten_families
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     nested = e.select(
         "event_id",
         "event_type",
@@ -644,7 +636,7 @@ WHERE tf.doc_id < 20
     "frequency; DF computed once over the corpus and broadcast.",
 )
 def q56(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = d.select("doc_id", F.explode(text.tokens(F.col("text"))).alias("w"))
     tf = words.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
     df = words.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
@@ -678,7 +670,7 @@ SELECT tri, count(*) AS n FROM g GROUP BY tri HAVING count(*) >= 50
     doc="Character-trigram profile (the language-ID feature space).",
 )
 def q57(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return (
         d.select(F.explode(text.char_ngrams(F.col("text"), 3)).alias("tri"))
         .groupBy("tri")
@@ -723,7 +715,7 @@ FROM reach GROUP BY id
     "transitive closure.",
 )
 def q35(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(d, "doc_id", "text", threshold=0.8)
     return graph.dedup_clusters(pairs, d, id_col="doc_id")
 
@@ -750,7 +742,7 @@ FROM synth
     "PII is appended deterministically since the corpus has none.",
 )
 def q58(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     raw = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -785,7 +777,7 @@ FROM b GROUP BY split
     "never rand(), so no train/test leakage on reprocessing.",
 )
 def q59(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select(sampling.split_label(F.col("doc_id")).alias("split"), "n_chars")
         .groupBy("split")
@@ -816,7 +808,7 @@ FROM base JOIN top ON base.doc_id = top.doc_id
     "boilerplate/degenerate-text filters for training corpora.",
 )
 def q36(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = text.tokens(F.col("text"))
     base = d.select(
         "doc_id",
@@ -848,7 +840,7 @@ FROM v
 def q62(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators.multimodal import frame_sample_plan
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     payload = d.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
     return frame_sample_plan(payload, "payload", every_n=30).select(
         "doc_id", F.col("frame_idx").cast("long").alias("frame_idx")
@@ -877,7 +869,7 @@ FROM links GROUP BY domain
     "extract+explode+count shape is the real web-graph pipeline stage.",
 )
 def q65(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     raw = F.concat(
         F.col("text"),
         F.lit(" see https://site"),
@@ -915,7 +907,7 @@ FROM (SELECT doc_id, unnest(range(0, greatest(n_samples - 16000 + 1, 0), 8000)) 
 def q66(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators.multimodal import audio_chunk_plan
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     meta = d.select("doc_id", (F.col("n_chars") * F.lit(100)).alias("n_samples"))
     return audio_chunk_plan(meta, "n_samples", window=16000, hop=8000).select(
         "doc_id", "chunk_start", "chunk_end"
@@ -951,7 +943,7 @@ FROM labeled GROUP BY split
     "map-only after.",
 )
 def q63(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     kept = dedup.dedup_exact(d, "doc_id", "text").filter(F.col("n_chars") >= 100)
     return (
         kept.select(sampling.split_label(F.col("doc_id")).alias("split"), "n_chars")
@@ -987,7 +979,7 @@ FROM g
     "Map-only until the caller joins sketches.",
 )
 def q71(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     g = d.select("doc_id", text.winnow_gram_hashes(F.col("text"), k=5).alias("hs"))
     return g.select(
         "doc_id", F.explode(text.winnow_select(F.col("hs"), window=4)).alias("fp")
@@ -1013,7 +1005,7 @@ GROUP BY lang
     "whitespace word. One regexp_extract_all expression, no UDF.",
 )
 def q72(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     nb = F.size(text.bpe_pretokens(F.col("text")))
     nw = text.token_count(F.col("text"))
     return (
@@ -1046,7 +1038,7 @@ WHERE rnk <= 10
     "language's vocabulary; descending count rides the negated column).",
 )
 def q75(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     c = (
         d.select("lang", F.explode(text.tokens(F.col("text"))).alias("w"))
         .groupBy("lang", "w")
@@ -1084,7 +1076,7 @@ FROM f GROUP BY fp HAVING count(*) > 1
     "carries only (doc_id, 16-byte fp).",
 )
 def q38(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = F.split(F.col("text"), " ")
     n_seg = F.ceil(F.size(ws) / F.lit(12.0)).cast("long")
     idx = F.when(n_seg > 0, F.sequence(F.lit(0).cast("long"), n_seg - 1)).otherwise(
@@ -1103,13 +1095,9 @@ def q38(spark, sf_dir):
 
 
 def _q45_oracle() -> str:
-    from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import REGISTRY
-
-    bf = REGISTRY["q40_knn_bruteforce"].oracle
-    ivf = REGISTRY["q42_knn_ivf"].oracle
     return f"""
-WITH bf AS ({bf}),
-ivf AS ({ivf}),
+WITH bf AS ({Q40_ORACLE}),
+ivf AS ({Q42_ORACLE}),
 hits AS (
   SELECT bf.q_id, count(ivf.n_id) AS n_hits
   FROM bf LEFT JOIN ivf ON bf.q_id = ivf.q_id AND bf.n_id = ivf.n_id
@@ -1128,7 +1116,7 @@ FROM hits
     "parameter sweeps stay one query away.",
 )
 def q45(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 10)
     cents = emb.filter(F.col("vec_id") < 16)
     bf = similarity.knn_bruteforce(emb, qs, k=5).select("q_id", "n_id")
@@ -1186,7 +1174,7 @@ FROM r2 LEFT JOIN ind ON r2.node = ind.node
     "iterations unrolled as CTEs.",
 )
 def q48(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select("doc_id")
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
     e1 = d.select(
         (F.col("doc_id") % 40).alias("src"), ((3 * F.col("doc_id") + 1) % 40).alias("dst")
     )
@@ -1230,7 +1218,7 @@ FROM c GROUP BY chunk_fp HAVING count(*) > 1
     "but not chunk identity.",
 )
 def q46(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ch = dedup.cdc_chunks(d, "doc_id", "text", window=8, boundary_hex="0")
     return (
         ch.groupBy("chunk_fp")
@@ -1265,7 +1253,7 @@ GROUP BY test_id
     "side is broadcast, so the train corpus never shuffles.",
 )
 def q100(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     test = d.filter(F.col("doc_id") % 10 == 0)
     train = d.filter(F.col("doc_id") % 10 != 0)
     return dedup.ngram_contamination(train, test, "doc_id", "text", n=5)
@@ -1284,7 +1272,7 @@ SELECT doc_id, source FROM (
     "key, never rand), so no source dominates the training mix.",
 )
 def q101(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return sampling.per_key_quota(d, "source", "doc_id", quota=10).select("doc_id", "source")
 
 
@@ -1310,7 +1298,7 @@ FROM c GROUP BY lang, pack_id
     "sorts a whole language's corpus slice.",
 )
 def q102(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").withColumn(
+    d = load_table(spark, sf_dir, "documents").withColumn(
         "nt", text.token_count(F.col("text"))
     )
     packs = sampling.sequence_packing(
@@ -1320,34 +1308,11 @@ def q102(spark, sf_dir):
 
 
 def _lsh_star_oracle(num_hashes: int = 16, bands: int = 4) -> str:
-    rows = num_hashes // bands
-    mins = ",\n  ".join(
-        f"min(substring(md5('{dedup._seed_prefix(dedup._minhash_seed_offset(k)[0])}' || w), "
-        f"{dedup._minhash_seed_offset(k)[1] + 1}, 8)) AS mh{k}"
-        for k in range(num_hashes)
-    )
-    band_exprs = ",\n   ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
-        + "))"
-        for b in range(bands)
-    )
     return f"""
 WITH RECURSIVE
-words AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-sig AS (SELECT doc_id,
-  {mins}
-  FROM words GROUP BY doc_id),
-banded AS (SELECT doc_id, unnest(list_value(
-   {band_exprs})) AS bucket FROM sig),
-star AS (SELECT doc_id AS b_id, min(doc_id) OVER (PARTITION BY bucket) AS a_id FROM banded),
-edges AS (SELECT a_id AS u, b_id AS v FROM star WHERE a_id <> b_id
-          UNION ALL SELECT b_id, a_id FROM star WHERE a_id <> b_id),
-reach(id, lbl) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT e.u, r.lbl FROM edges e JOIN reach r ON r.id = e.v
-)
+{lsh_oracle.WORDS},
+{lsh_oracle.minhash_banded(num_hashes, bands)},
+{lsh_oracle.STAR_CLOSURE}
 SELECT id AS doc_id,
        min(lbl) AS cluster_id,
        (id = min(lbl)) AS is_representative
@@ -1365,7 +1330,7 @@ FROM reach GROUP BY id
     "boilerplate buckets.",
 )
 def q103(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     edges = dedup.lsh_bucket_edges(d, "doc_id", "text", num_hashes=16, bands=4)
     return graph.dedup_clusters(edges, d, id_col="doc_id")
 
@@ -1397,7 +1362,7 @@ FROM k, unnest(range(0, nc)) AS t(i)
     "or packing pipeline consumes. operators/text.py::overlapping_chunks.",
 )
 def q104(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     c = d.select(
         "doc_id",
         F.explode(text.overlapping_chunks(F.col("text"), window=64, stride=48)).alias("c"),
@@ -1444,7 +1409,7 @@ WHERE t.rn <= 20
 def q105(spark, sf_dir):
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(F.explode(text.tokens(F.col("text"))).alias("w"))
     uni = tok.groupBy("w").agg(F.count("*").alias("n"))
     nt = tok.groupBy().agg(F.count("*").cast("double").alias("n_tok"))
@@ -1526,7 +1491,7 @@ def q106(spark, sf_dir):
 
     from etl_pipeline_for_elasticsearch_json_document_spark.operators import sketches
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(F.explode(text.tokens(F.col("text"))).alias("w"))
     sk = sketches.count_min_build(tok, "w", depth=4, width=256)
     exact = tok.groupBy("w").agg(F.count("*").alias("n_exact"))
@@ -1575,7 +1540,7 @@ FROM err GROUP BY vec_id
     "operators/similarity.py::scalar_quantize.",
 )
 def q107(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     q = similarity.scalar_quantize(emb, "vec_id", "embedding", levels=255)
     return q.select(
         "vec_id",
@@ -1606,7 +1571,7 @@ FROM fp f JOIN g ON f.fp = g.fp
     "16-byte-key groupBy + one equi-join back; text never shuffles.",
 )
 def q109(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = d.select("doc_id", text.fingerprint(F.col("text")).alias("fp"))
     g = fp.groupBy("fp").agg(
         F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_count")
@@ -1620,26 +1585,10 @@ def q109(spark, sf_dir):
 
 
 def _minhash_cross_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.4) -> str:
-    rows = num_hashes // bands
-    mins = ",\n  ".join(
-        f"min(substring(md5('{dedup._seed_prefix(dedup._minhash_seed_offset(k)[0])}' || w), "
-        f"{dedup._minhash_seed_offset(k)[1] + 1}, 8)) AS mh{k}"
-        for k in range(num_hashes)
-    )
-    band_exprs = ",\n   ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
-        + "))"
-        for b in range(bands)
-    )
-    matches = " + ".join(f"(sc.mh{j} = sp.mh{j})::INT" for j in range(num_hashes))
+    matches = lsh_oracle.minhash_matches("sc", "sp", num_hashes)
     return f"""
-WITH words AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-sig AS (SELECT doc_id,
-  {mins}
-  FROM words GROUP BY doc_id),
-banded AS (SELECT doc_id, unnest(list_value(
-   {band_exprs})) AS bucket FROM sig),
+WITH {lsh_oracle.WORDS},
+{lsh_oracle.minhash_banded(num_hashes, bands)},
 cand AS (SELECT DISTINCT c.doc_id AS corpus_id, p.doc_id AS probe_id
          FROM banded c JOIN banded p ON c.bucket = p.bucket
          WHERE c.doc_id % 10 <> 0 AND p.doc_id % 10 = 0)
@@ -1662,7 +1611,7 @@ WHERE round(({matches}) / {float(num_hashes)}, 6) >= {threshold}
     "map-side. operators/dedup.py::minhash_cross_pairs.",
 )
 def q110(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     test = d.filter(F.col("doc_id") % 10 == 0)
     train = d.filter(F.col("doc_id") % 10 != 0)
     return dedup.minhash_cross_pairs(
@@ -1692,7 +1641,7 @@ FROM documents
     "unlike rand(). Map-only, shuffle-free.",
 )
 def q111(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     keep_p = F.round(text.quality_score(F.col("text")), 6)
     coin = (
         F.conv(F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|ws"))), 1, 8), 16, 10)
@@ -1719,7 +1668,7 @@ GROUP BY GROUPING SETS ((lang), (source))
     "for one scan + one partial-aggregated shuffle instead of N queries.",
 )
 def q112(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     return (
         d.groupingSets([[F.col("lang")], [F.col("source")]], F.col("lang"), F.col("source"))
         .agg(
@@ -1779,7 +1728,7 @@ def q113(spark, sf_dir):
     from pyspark.sql.window import Window
 
     k1, b = 1.2, 0.75
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # Deliberately NO under-split fan-out before tokenization (r14):
     # unlike _gram_postings (5-gram explode + hash per row), a split +
     # 3-term filter is too cheap to amortize shuffling the text bytes —
@@ -1852,7 +1801,7 @@ SELECT node, count(*) AS n_triangles FROM (
     "operators/graph.py::triangle_counts.",
 )
 def q114(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select("doc_id")
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
     e1 = d.select(
         (F.col("doc_id") % 40).alias("src"), ((3 * F.col("doc_id") + 1) % 40).alias("dst")
     )
@@ -1891,7 +1840,7 @@ FROM kept GROUP BY source, mix_rate
     "no driver action. operators/sampling.py::target_mix_sample.",
 )
 def q115(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     wt = F.when(
         F.regexp_extract(F.col("source"), r"([0-9]+)$", 1).cast("bigint") % 2 == 0,
         F.lit(4.0),
@@ -1932,7 +1881,7 @@ GROUP BY lang
     "partial-aggregated rollup.",
 )
 def q116(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     test = d.filter(F.col("doc_id") % 10 == 0)
     train = d.filter(F.col("doc_id") % 10 != 0)
 
@@ -1989,7 +1938,7 @@ GROUP BY h.doc_id
     "never shuffles.",
 )
 def q117(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     h = d.select(
         "doc_id",
         F.explode(F.array_distinct(text.word_ngrams(F.col("text"), 3))).alias("g"),
@@ -2038,7 +1987,7 @@ FROM documents
     "sketch (q67) column by column.",
 )
 def q118(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cols = ("doc_id", "lang", "source", "n_chars")
     aggs = [F.count("*").alias("n")]
     for c in cols:
@@ -2080,7 +2029,7 @@ FROM cal LEFT JOIN daily ON cal.user_id = daily.user_id AND cal.day = daily.day
     "assumes; no driver-side calendar materialization.",
 )
 def q119(spark, sf_dir):
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 20)
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
     daily = e.groupBy("user_id", F.to_date("ts").alias("day")).agg(F.count("*").alias("n"))
     bounds = daily.groupBy("user_id").agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     cal = bounds.select(
@@ -2127,7 +2076,7 @@ SELECT node, CAST(level AS INT) AS level FROM l3
     "pattern as q48). operators/graph.py::bfs_levels.",
 )
 def q122(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select("doc_id")
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
     e1 = d.select(
         (F.col("doc_id") % 40).alias("src"), ((3 * F.col("doc_id") + 1) % 40).alias("dst")
     )

@@ -30,10 +30,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import 
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q229: TPC-H Q17 shape — small-quantity-order revenue (correlated scalar avg)
 # ---------------------------------------------------------------------------
@@ -73,8 +69,8 @@ def q229(spark, sf_dir):
     # rows — measured 0.80 s without vs 1.04 s with on the ×10
     # single-file ladder replica (interleaved quiet-box A/B). See q203's
     # note for why q01's crossover does not transfer.
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4").select(
         F.col("p_partkey").alias("l_partkey")
     )
     # Only Brand#4 parts' averages are consulted after the join-back, so
@@ -139,11 +135,11 @@ GROUP BY s.s_name
     "broadcast hints (supplier joins under AQE).",
 )
 def q230(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     late = F.when(
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
         1,
@@ -207,13 +203,13 @@ GROUP BY n.n_name, year(o.o_orderdate)
     "SF-scaled relations.",
 )
 def q231(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%")).select(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%")).select(
         "p_partkey", "p_retailprice"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     dec = lambda c: c.cast("decimal(18,4)")  # noqa: E731
     amount = dec(F.col("l_extendedprice")) * dec(1 - F.col("l_discount")) - dec(
         F.lit(0.6)
@@ -265,8 +261,8 @@ JOIN supplier s ON s.s_suppkey = rev.l_suppkey
     "nested-loop cross).",
 )
 def q232(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
     rev = (
         li.filter(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -327,8 +323,8 @@ WHERE p.p_brand IN ('Brand#4', 'Brand#2')
     "evaluates only on brand-sliced matches.",
 )
 def q233(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity").between(1, 40))
-    p = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity").between(1, 40))
+    p = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#4", "Brand#2") & F.col("p_size").between(1, 30)
     )
     disj = (
@@ -392,11 +388,11 @@ FROM dom d JOIN supplier s ON s.s_suppkey = d.l_suppkey
     "shuffle; no windows, no hints.",
 )
 def q234(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    rp = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%")).select(
+    li = load_table(spark, sf_dir, "lineitem")
+    rp = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%")).select(
         "p_partkey"
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     red = li.join(rp, li["l_partkey"] == rp["p_partkey"]).select(
         "l_suppkey", "l_partkey", F.col("l_quantity").cast("decimal(18,4)").alias("q0")
     )
@@ -451,12 +447,12 @@ FROM rev GROUP BY o_year
     "denominator ride the SAME grouped aggregate.",
 )
 def q235(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     cn = n.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_region")
     )
@@ -525,10 +521,10 @@ GROUP BY ship_month
     "and denominator ride one grouped aggregate.",
 )
 def q236(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     vol = F.col("l_extendedprice").cast("decimal(18,4)") * (
         1 - F.col("l_discount")
     ).cast("decimal(18,4)")
@@ -580,11 +576,11 @@ FROM sp GROUP BY p_brand, p_type
     "AQE; DISTINCT reduces map-side before the final count.",
 )
 def q237(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size").between(1, 25)).select(
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_size").between(1, 25)).select(
         "p_partkey", "p_brand", "p_type"
     )
-    excl = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 1500).select(
+    excl = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 1500).select(
         "s_suppkey"
     )
     sp = (

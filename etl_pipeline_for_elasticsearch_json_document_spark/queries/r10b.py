@@ -33,10 +33,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import 
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q238: TPC-H Q4 — order priority checking (EXISTS with cross-side predicate)
 # ---------------------------------------------------------------------------
@@ -69,11 +65,11 @@ GROUP BY o.o_orderpriority
     "short-circuits per key — no dedup pass, no window.",
 )
 def q238(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     sj = o.join(
         li,
         (o["o_orderkey"] == li["l_orderkey"])
@@ -116,7 +112,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
     "1-row final aggregate; no shuffle of data, only of partials.",
 )
 def q239(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -188,13 +184,13 @@ LIMIT 20
     "nation is a constant-cardinality broadcast.",
 )
 def q240(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     rev = (
         c.join(o, o["o_custkey"] == c["c_custkey"])
         .join(li, li["l_orderkey"] == o["o_orderkey"])
@@ -255,11 +251,11 @@ GROUP BY l.l_returnflag
     "output is a 3-row relation.",
 )
 def q241(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -323,7 +319,7 @@ FROM w, z
 def q242(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators import text as text_ops
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per_source = d.groupBy("source").agg(
         F.sum(text_ops.token_count(F.col("text"))).cast("bigint").alias(
             "supply_tokens"
@@ -434,7 +430,7 @@ GROUP BY t.source
 def q243(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators import dedup, graph
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     train = d.filter(F.col("doc_id") % 10 != 0)
     test = d.filter(F.col("doc_id") % 10 == 0)
     direct = dedup.contaminated_train_ids(train, test, "doc_id", "text", n=5).select(
@@ -516,7 +512,7 @@ GROUP BY fan.rd
     "aggregates. No window, no per-day self-joins.",
 )
 def q244(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     du = ev.select(F.col("ts").cast("date").alias("d"), "user_id").distinct()
     days = du.select("d").distinct().withColumnRenamed("d", "rd")
     offsets = spark.range(7).select(F.col("id").cast("int").alias("o"))
@@ -595,7 +591,7 @@ def q245(spark, sf_dir):
         value_domain_rank_blocks,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select("lang", F.explode(F.split(F.col("text"), " ")).alias("w"))
     wc = toks.groupBy("lang", "w").agg(F.count("*").alias("c"))
     # the extracted block operator (r11), descending: one row per

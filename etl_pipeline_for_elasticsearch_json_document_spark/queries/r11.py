@@ -17,10 +17,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import 
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q246: per-batch JSON schema evolution report (new / missing / kind_changed)
 # ---------------------------------------------------------------------------
@@ -93,7 +89,7 @@ def q246(spark, sf_dir):
         schema_evolution_report,
     )
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     day = F.dayofmonth("ts")
     uid = F.col("user_id").cast("string")
     j = F.concat(
@@ -158,7 +154,7 @@ JOIN (SELECT batch + 1 AS batch, path, cov FROM cov) p
     "identically in any IEEE engine and the rounds are mirrored.",
 )
 def q247(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     day = F.dayofmonth("ts")
     uid = F.col("user_id").cast("string")
     present_v = F.when(day < 15, F.col("user_id") % 3).otherwise(

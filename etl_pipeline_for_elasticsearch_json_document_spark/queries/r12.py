@@ -21,10 +21,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import 
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # The DuckDB twin of json_schema_profile_deep's walk, shared by both
 # oracles: recursive CTE over json_keys/json_extract building the same
 # (batch, path, token) leaf relation the Spark chain of Generates emits.
@@ -142,7 +138,7 @@ def q248(spark, sf_dir):
         schema_evolution_report,
     )
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     day = F.dayofmonth("ts")
     uid = F.col("user_id").cast("string")
     eid = F.col("event_id").cast("string")
@@ -240,7 +236,7 @@ def q249(spark, sf_dir):
         flatten_width_report,
     )
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     day = F.dayofmonth("ts")
     uid = F.col("user_id").cast("string")
     eid = F.col("event_id").cast("string")

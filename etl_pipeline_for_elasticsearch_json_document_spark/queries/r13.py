@@ -23,10 +23,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import 
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q250: per-batch volume contract (doc count + byte mass vs trailing baseline)
 # ---------------------------------------------------------------------------
@@ -87,7 +83,7 @@ def q250(spark, sf_dir):
         batch_volume_report,
     )
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     day = F.dayofmonth("ts")
     j = F.concat(
         F.lit('{"u":'),

@@ -20,10 +20,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import 
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Dedup-graph analytics
 # ---------------------------------------------------------------------------
@@ -63,7 +59,7 @@ FROM by_cluster GROUP BY cluster_size
     "dedup pass. Same closure as q35; two tiny aggregations on top.",
 )
 def q128(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(d, "doc_id", "text", threshold=0.8)
     clusters = graph.dedup_clusters(pairs, d, id_col="doc_id")
     return (
@@ -116,7 +112,7 @@ FROM s
     "rows.",
 )
 def q129(spark, sf_dir):
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     p = e.select(
         "event_type",
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
@@ -185,7 +181,7 @@ FROM fold WHERE i = m
     "bounded by days-per-group, not rows.",
 )
 def q130(spark, sf_dir):
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = (
         e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
         .agg(
@@ -239,7 +235,7 @@ FROM flagged GROUP BY doc_id
     "fingerprints; the text itself never shuffles.",
 )
 def q131(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = F.split(F.col("text"), " ")
     n_seg = F.ceil(F.size(ws) / F.lit(12.0)).cast("int")
     seg = (
@@ -317,7 +313,7 @@ FROM scored GROUP BY est_bucket
     "decides band/row settings.",
 )
 def q132(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cand = dedup.minhash_lsh_pairs(d, "doc_id", "text", num_hashes=16, bands=4, threshold=0.0)
     words = dedup._distinct_words(d, "doc_id", "text")
     sizes = words.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -369,7 +365,7 @@ GROUP BY weight
     "escapes the operator.",
 )
 def q133(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").withColumnRenamed("o_orderpriority", "prio")
+    o = load_table(spark, sf_dir, "orders").withColumnRenamed("o_orderpriority", "prio")
     dim = spark.createDataFrame(
         [("1-URGENT", 5), ("2-HIGH", 4), ("3-MEDIUM", 3), ("4-NOT SPECIFIED", 2), ("5-LOW", 1)],
         "prio string, weight int",
@@ -425,7 +421,7 @@ FROM s GROUP BY lang, decile
     "no task ever sorts a whole language's corpus slice.",
 )
 def q134(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
     )
     g = d.groupBy("lang", "n_tokens").agg(F.count("*").alias("k"))
@@ -504,7 +500,7 @@ GROUP BY name
     "partial-aggregated groupBy of events.",
 )
 def q135(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sessions = e.groupBy("user_id", F.col("ts").cast("date").alias("d")).agg(
         F.min(F.unix_timestamp("ts")).alias("s_start"),
         F.max(F.unix_timestamp("ts")).alias("s_end"),
@@ -565,7 +561,7 @@ FROM x GROUP BY event_type
     "streaming filter.",
 )
 def q136(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     x = e.select(
         "event_type",
@@ -606,7 +602,7 @@ FROM k GROUP BY key
     "the JSON parses once per row, JVM-side.",
 )
 def q137(spark, sf_dir):
-    e = _t(spark, sf_dir, "events").filter(F.col("props").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("props").isNotNull())
     # ratio denominator as a broadcast 1-row aggregate, not a driver count()
     total = F.broadcast(e.agg(F.count("*").cast("double").alias("__total")))
     k = e.select(F.explode(F.json_object_keys("props")).alias("key"))
@@ -681,7 +677,7 @@ def q138(spark, sf_dir):
         kmeans_fit,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, k=8, iterations=2)
     asg = kmeans_assign(emb, cents)
     return asg.groupBy("cid").agg(
@@ -735,7 +731,7 @@ def q139(spark, sf_dir):
         kmeans_fit,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, k=8, iterations=2)
     asg = kmeans_assign(emb, cents).select("vec_id", "cid")
     v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -795,7 +791,7 @@ def q140(spark, sf_dir):
     )
 
     threshold = 72
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sketch = count_min_build(e.select("user_id"), "user_id", depth=4, width=256)
     keys = e.select("user_id").distinct()
     est = count_min_estimate(sketch, keys, "user_id", depth=4, width=256)
@@ -837,7 +833,7 @@ WHERE round(i / (sa.n + sb.n - i), 6) >= 0.6
 )
 def q141(spark, sf_dir):
     return dedup.prefix_filter_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.6
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.6
     )
 
 
@@ -867,7 +863,7 @@ SELECT purchase_id, click_id, gap_us FROM j WHERE rn = 1
     "(ts, click_id) to match the oracle exactly.",
 )
 def q142(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), "ts"
     )
@@ -930,7 +926,7 @@ GROUP BY t.from_type, t.to_type
     "divide by exact integer counts so they are engine-identical.",
 )
 def q143(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t = (
         e.select(

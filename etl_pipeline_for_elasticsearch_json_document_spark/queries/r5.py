@@ -19,12 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_pipeline_for_elasticsearch_json_document_spark.operators import similarity
+from etl_pipeline_for_elasticsearch_json_document_spark.queries.llm import Q40_ORACLE
 from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import query
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
-
-
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -69,7 +66,7 @@ FROM ent GROUP BY lang
     "docs×alphabet, not corpus size; text itself never shuffles.",
 )
 def q144(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ch = d.select(
         "doc_id", "lang", F.explode(F.split(F.col("text"), "")).alias("c")
     ).filter(F.col("c") != "")
@@ -129,7 +126,7 @@ FROM clipped GROUP BY event_type, p05, p95
     "clip+mean pass is map-side except one partial-aggregated shuffle.",
 )
 def q145(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     pct = e.groupBy("event_type").agg(
         F.round(F.expr("percentile(value, 0.05)"), 6).alias("p05"),
         F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
@@ -223,7 +220,7 @@ FROM stats s JOIN exact e ON e.type_a = s.type_a AND e.type_b = s.type_b
     "keeping K smallest, associatively).",
 )
 def q147(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     du = ev.select("event_type", "user_id").distinct()
     hashed = du.select(
         "event_type", F.md5(F.col("user_id").cast("string")).alias("h")
@@ -332,7 +329,7 @@ FROM flagged GROUP BY lang
     "never shuffles itself.",
 )
 def q149(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select("lang", F.explode(F.split("text", " ")).alias("w"))
     freq = toks.groupBy("w").agg(F.count("*").alias("n"))
     vocab = freq.orderBy(F.col("n").desc(), "w").limit(10).select("w", F.lit(1).alias("iv"))
@@ -352,16 +349,11 @@ def q149(spark, sf_dir):
 
 
 def _q150_oracle() -> str:
-    from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import (
-        REGISTRY,
-    )
-
-    full = REGISTRY["q40_knn_bruteforce"].oracle
-    trunc = full.replace("q.embedding::DOUBLE[]", "(q.embedding[1:16])::DOUBLE[]").replace(
+    trunc = Q40_ORACLE.replace("q.embedding::DOUBLE[]", "(q.embedding[1:16])::DOUBLE[]").replace(
         "c.embedding::DOUBLE[]", "(c.embedding[1:16])::DOUBLE[]"
     )
     return f"""
-WITH fullk AS ({full}),
+WITH fullk AS ({Q40_ORACLE}),
 trunck AS ({trunc}),
 hits AS (
   SELECT fullk.q_id, count(trunck.n_id) AS n_hits
@@ -376,7 +368,7 @@ FROM hits
 
 @query(
     "q150_matryoshka_recall",
-    oracle=None,  # assembled lazily below (needs q40 registered first)
+    oracle=_q150_oracle(),
     doc="Matryoshka-embedding evaluation: recall@5 of retrieval using only "
     "the FIRST 16 of 64 dimensions vs the full-dimension ground truth — "
     "the measurement that decides how far a 100 TB index can truncate its "
@@ -385,7 +377,7 @@ FROM hits
     "truncation is a zero-copy slice(embedding, 1, 16) at scan time.",
 )
 def q150(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     trunc = emb.withColumn("embedding", F.slice("embedding", 1, 16))
     full_k = similarity.knn_bruteforce(emb, emb.filter(F.col("vec_id") < 10), k=5)
     trunc_k = similarity.knn_bruteforce(trunc, trunc.filter(F.col("vec_id") < 10), k=5)
@@ -461,7 +453,7 @@ FROM folded
     "and sum the per-shard folds.",
 )
 def q146(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select("lang", F.explode(F.split("text", " ")).alias("w"))
     cnt = toks.groupBy("lang", "w").agg(F.count("*").alias("n"))
     tot = cnt.groupBy("lang").agg(F.sum("n").alias("t"))
@@ -564,7 +556,7 @@ SELECT lang, rank, doc_id, n_chars, es_key FROM ranked WHERE rank <= 5
 def q148(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators import sampling
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
@@ -634,8 +626,8 @@ FROM fd3
     "on flagged groups only.",
 )
 def q151(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
 
     def audit(grouped, fd_name):
         return grouped.agg(
@@ -734,7 +726,7 @@ FROM perdoc GROUP BY source
 def q152(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators.dedup import duplicated_spans
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     spans = duplicated_spans(d, "doc_id", "text", k=8)
     perdoc = (
         spans.join(d.select("doc_id", "source"), "doc_id")
@@ -753,17 +745,3 @@ def q152(spark, sf_dir):
         ),
     )
 
-
-def _late_bind_oracles() -> None:
-    """q150's oracle nests q40's (registered in llm.py); bind after all
-    modules import."""
-    from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import (
-        REGISTRY,
-        Query,
-    )
-
-    q = REGISTRY["q150_matryoshka_recall"]
-    if q.oracle is None:
-        REGISTRY["q150_matryoshka_recall"] = Query(
-            name=q.name, fn=q.fn, oracle=_q150_oracle(), doc=q.doc
-        )

@@ -18,12 +18,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_pipeline_for_elasticsearch_json_document_spark.queries import lsh_oracle
 from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import query
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
-
-
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -86,7 +83,7 @@ FROM tr GROUP BY source
     "independent of test-set size.",
 )
 def q153(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     grams = d.select(
         "doc_id",
         "source",
@@ -180,7 +177,7 @@ FROM marked GROUP BY doc_id
     "bounded by doc length, never cross-doc.",
 )
 def q154(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = F.split(F.col("text"), " ")
     n_seg = F.ceil(F.size(ws) / F.lit(12.0)).cast("long")
     idx = F.when(n_seg > 0, F.sequence(F.lit(0).cast("long"), n_seg - 1)).otherwise(
@@ -259,7 +256,7 @@ FROM docsc GROUP BY lang
     "pairs joined map-side; one partial-agg per doc then per lang.",
 )
 def q155(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.length("text") >= 2)
+    d = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 2)
     bg = d.select(
         "doc_id",
         "lang",
@@ -336,7 +333,7 @@ FROM m
 def q156(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators import sampling
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("lang", F.explode(F.split(F.col("text"), " ")).alias("w")).filter(
         F.col("w") != ""
     )
@@ -406,7 +403,7 @@ FROM r GROUP BY source
     "(window-over-hash here ≡ groupBy+join at scale); text never shuffles.",
 )
 def q157(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     norm = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", ""), " +", " "
@@ -470,7 +467,7 @@ FROM inc GROUP BY source
     "within-batch.",
 )
 def q158(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     h = d.select(
         "doc_id", "source", F.md5("text").alias("fp"), (F.col("doc_id") % 5 == 4).alias("incoming")
     )
@@ -528,7 +525,7 @@ FROM walk GROUP BY depth
     "partial-agg groupBy on a log2-sized key space.",
 )
 def q159(spark, sf_dir):
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q159_documents")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("q159_documents")
     return spark.sql(
         """
         WITH RECURSIVE walk AS (
@@ -572,8 +569,8 @@ WHERE c.c_acctbal > 9000
     "top-k.",
 )
 def q160(spark, sf_dir):
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("q160_customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("q160_orders")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("q160_customer")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q160_orders")
     return spark.sql(
         """
         SELECT c.c_custkey, o.o_orderkey, o.price, o.rn
@@ -625,7 +622,7 @@ WHERE rank <= 3
 def q161(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators import similarity
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.hard_negatives(emb, emb.filter(F.col("vec_id") % 37 == 0), k=3)
 
 
@@ -689,7 +686,7 @@ FROM (VALUES {_FUNNEL_SPINE}) AS sp(stage) LEFT JOIN cnt USING (stage)
     "6-value key; the denominator is a broadcast 1-row count.",
 )
 def q162(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.length("text") > 0)
+    d = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     ws = F.split(F.col("text"), " ")
     n_tok = F.size(ws)
     m = d.select(
@@ -774,7 +771,7 @@ FROM ranked GROUP BY key_col
 def q163(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators import sampling
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     stats = (
         ev.select(F.col("user_id").cast("string").alias("k"))
         .groupBy("k")
@@ -857,7 +854,7 @@ FROM s GROUP BY shard
     "directly via repartitionByRange(shard, hh) — same keys, same order.",
 )
 def q164(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     s = d.select(
         "doc_id",
         "n_chars",
@@ -911,7 +908,7 @@ FROM (VALUES (100), (1000), (5000)) AS ks(k)
     "Integer counts + single divisions — engine-exact.",
 )
 def q165(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
         .filter(F.col("w") != "")
@@ -986,7 +983,7 @@ JOIN per_src pb ON pb.source = p.src_b
     "|sources|²-bounded pair relation.",
 )
 def q166(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = F.split(F.col("text"), " ")
     g = (
         d.select(
@@ -1065,7 +1062,7 @@ GROUP BY lang, ctx
     "divisions — engine-exact.",
 )
 def q167(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     lens = d.select("lang", F.size(F.split(F.col("text"), " ")).alias("n_tok"))
     ctx = spark.createDataFrame([(64,), (128,), (256,)], "ctx int")
     lost = F.when(F.col("n_tok") > F.col("ctx"), F.col("n_tok") - F.col("ctx")).otherwise(0)
@@ -1095,13 +1092,6 @@ def _lsh_sweep_oracle(num_hashes: int = 16, band_cfgs: tuple[int, ...] = (2, 4, 
     config from one signature CTE; bucket identity is component-tuple
     equality (band index included on both engines), so counts agree
     regardless of each engine's key function."""
-    from etl_pipeline_for_elasticsearch_json_document_spark.operators import dedup
-
-    mins = ",\n  ".join(
-        f"min(substring(md5('{dedup._seed_prefix(dedup._minhash_seed_offset(k)[0])}' || w), "
-        f"{dedup._minhash_seed_offset(k)[1] + 1}, 8)) AS mh{k}"
-        for k in range(num_hashes)
-    )
     cfg_selects = []
     for bands in band_cfgs:
         rows = num_hashes // bands
@@ -1119,9 +1109,9 @@ def _lsh_sweep_oracle(num_hashes: int = 16, band_cfgs: tuple[int, ...] = (2, 4, 
         )
     allb = "\nUNION ALL\n".join(cfg_selects)
     return f"""
-WITH words AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+WITH {lsh_oracle.WORDS},
 sig AS (SELECT doc_id,
-  {mins}
+  {lsh_oracle.minhash_mins(num_hashes)}
   FROM words GROUP BY doc_id),
 allb AS (
 {allb}
@@ -1157,7 +1147,7 @@ def q168(spark, sf_dir):
 
     num_hashes = 16
     sigs = dedup.minhash_signatures(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", num_hashes=num_hashes
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", num_hashes=num_hashes
     )
     cfgs = []
     for bands in (2, 4, 8):
@@ -1251,7 +1241,7 @@ FROM p GROUP BY lang, pred_lang
     "the second-max comes from a sorted 4-element array on BOTH engines.",
 )
 def q169(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", "lang", F.explode(F.split(F.col("text"), " ")).alias("w"))
     aggs = [
         F.sum(
@@ -1317,7 +1307,7 @@ FROM cls GROUP BY source
     "plan IS the next corpus snapshot — one pass for audit + rewrite.",
 )
 def q170(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     req = d.filter(F.col("doc_id") % 97 == 13).select("doc_id")
     cls = d.select("source", "doc_id").join(
         F.broadcast(req.withColumn("del", F.lit(1))), "doc_id", "left"
@@ -1375,7 +1365,7 @@ FROM w, z
     "1-row normalizer Z and total broadcast everywhere.",
 )
 def q171(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per_lang = d.groupBy("lang").agg(F.count("*").cast("bigint").alias("n_docs"))
     tot = per_lang.agg(F.sum("n_docs").alias("n"))
     w = per_lang.crossJoin(F.broadcast(tot)).select(
@@ -1452,7 +1442,7 @@ FROM per_doc GROUP BY source
     "pre-rounded DECIMAL terms then divides once.",
 )
 def q172(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     pos = d.select(
         "doc_id",
         "source",
@@ -1539,7 +1529,7 @@ FROM t GROUP BY label
     "corpus; everything downstream is broadcast-sized.",
 )
 def q173(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     o = e.groupBy(
         "label", (F.col("vec_id") % 8).alias("shard")
     ).agg(F.count("*").cast("bigint").alias("o"))
@@ -1612,7 +1602,7 @@ FROM cur
     "BIGINT cumulative sums.",
 )
 def q174(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = d.select("doc_id", F.md5("text").alias("fp"))
     firsts = fp.groupBy("fp").agg(F.min("doc_id").alias("first_doc"))
     db = fp.groupBy(F.floor(F.col("doc_id") / 100).alias("bucket")).agg(
@@ -1678,7 +1668,7 @@ def q175(spark, sf_dir):
         value_domain_rank_blocks,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # the extracted block operator (r11), GLOBAL partition: one row per
     # distinct n_chars with multiplicity c and count-strictly-below
     vc = value_domain_rank_blocks(
@@ -1739,7 +1729,7 @@ FROM sg GROUP BY source
     "never shuffles.",
 )
 def q176(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     g = d.select(
         "source",
         "lang",
@@ -1827,7 +1817,7 @@ FROM p GROUP BY lang_head, lang_tail
     "is |langs|²-bounded. Every comparison is integer.",
 )
 def q177(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # token count computed BEFORE the explode: the midpoint predicate is
     # then map-side arithmetic — no per-doc window over the token stream
     pos = d.select(
@@ -1913,7 +1903,7 @@ FROM hits GROUP BY canary_doc, canary
     "per-test-doc argmax is a bounded window over that doc's own grams.",
 )
 def q178(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     test_docs = d.filter(F.col("doc_id") % 97 == 5)
     grams = test_docs.select(
         "doc_id",
@@ -2017,7 +2007,7 @@ FROM cells
     "one column, not another corpus pass.",
 )
 def q179(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = d.groupBy(F.md5("text").alias("f")).agg(
         F.count("*").cast("bigint").alias("c")
     )
@@ -2114,7 +2104,7 @@ CROSS JOIN n
     "exactly once.",
 )
 def q180(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     ut = e.select("user_id", "event_type").distinct()
     tc = ut.groupBy("event_type").agg(F.count("*").cast("bigint").alias("c"))
     n = e.agg(F.countDistinct("user_id").cast("bigint").alias("n"))
@@ -2158,36 +2148,11 @@ def q180(spark, sf_dir):
 
 
 def _false_merge_oracle(num_hashes: int = 16, bands: int = 4) -> str:
-    from etl_pipeline_for_elasticsearch_json_document_spark.operators import dedup
-
-    rows = num_hashes // bands
-    mins = ",\n  ".join(
-        f"min(substring(md5('{dedup._seed_prefix(dedup._minhash_seed_offset(k)[0])}' || w), "
-        f"{dedup._minhash_seed_offset(k)[1] + 1}, 8)) AS mh{k}"
-        for k in range(num_hashes)
-    )
-    band_exprs = ",\n   ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
-        + "))"
-        for b in range(bands)
-    )
     return f"""
 WITH RECURSIVE
-words AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-sig AS (SELECT doc_id,
-  {mins}
-  FROM words GROUP BY doc_id),
-banded AS (SELECT doc_id, unnest(list_value(
-   {band_exprs})) AS bucket FROM sig),
-star AS (SELECT doc_id AS b_id, min(doc_id) OVER (PARTITION BY bucket) AS a_id FROM banded),
-edges AS (SELECT a_id AS u, b_id AS v FROM star WHERE a_id <> b_id
-          UNION ALL SELECT b_id, a_id FROM star WHERE a_id <> b_id),
-reach(id, lbl) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT e.u, r.lbl FROM edges e JOIN reach r ON r.id = e.v
-),
+{lsh_oracle.WORDS},
+{lsh_oracle.minhash_banded(num_hashes, bands)},
+{lsh_oracle.STAR_CLOSURE},
 cl AS (SELECT id AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY id),
 sizes AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS sz FROM cl GROUP BY cluster_id),
 nw AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM words GROUP BY doc_id),
@@ -2237,7 +2202,7 @@ GROUP BY s.sz
 def q181(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.operators import dedup, graph
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     edges = dedup.lsh_bucket_edges(d, "doc_id", "text", num_hashes=16, bands=4)
     cl = graph.dedup_clusters(edges, d, id_col="doc_id").select("doc_id", "cluster_id")
     sizes = cl.groupBy("cluster_id").agg(F.count("*").cast("bigint").alias("sz"))
@@ -2333,7 +2298,7 @@ FROM lat GROUP BY event_type
     "global), then a partial-agg groupBy to |event_types| rows.",
 )
 def q182(spark, sf_dir):
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "event_type",

@@ -20,12 +20,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_for_elasticsearch_json_document_spark.operators import dedup, graph, sampling
+from etl_pipeline_for_elasticsearch_json_document_spark.queries import lsh_oracle
 from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import query
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
-
-
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -78,7 +75,7 @@ FROM r GROUP BY source
     "shuffles.",
 )
 def q183(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = F.split(F.col("text"), " ")
     wc = F.size(ws)
     sumlen = F.expr(
@@ -164,7 +161,7 @@ FROM j GROUP BY source
     "executor un-reduced; output relation is |sources| rows.",
 )
 def q184(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = F.split(F.col("text"), " ")
     base = d.select("doc_id", "source", ws.alias("ws")).filter(F.size("ws") >= 5)
 
@@ -251,7 +248,7 @@ GROUP BY doc_id, lang
     "shuffles, and V is a constant independent of corpus size.",
 )
 def q185(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", "lang", F.explode(F.split(F.col("text"), " ")).alias("w")
     )
@@ -297,33 +294,10 @@ def q185(spark, sf_dir):
 def _star_cluster_cte(num_hashes: int = 16, bands: int = 4) -> str:
     """The q103 LSH star-closure as a reusable WITH-body: yields
     ``clusters(doc_id, cluster_id)``. Same md5 family as operators/dedup."""
-    rows = num_hashes // bands
-    mins = ",\n  ".join(
-        f"min(substring(md5('{dedup._seed_prefix(dedup._minhash_seed_offset(k)[0])}' || w), "
-        f"{dedup._minhash_seed_offset(k)[1] + 1}, 8)) AS mh{k}"
-        for k in range(num_hashes)
-    )
-    band_exprs = ",\n   ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
-        + "))"
-        for b in range(bands)
-    )
     return f"""
-words AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-sig AS (SELECT doc_id,
-  {mins}
-  FROM words GROUP BY doc_id),
-banded AS (SELECT doc_id, unnest(list_value(
-   {band_exprs})) AS bucket FROM sig),
-star AS (SELECT doc_id AS b_id, min(doc_id) OVER (PARTITION BY bucket) AS a_id FROM banded),
-edges AS (SELECT a_id AS u, b_id AS v FROM star WHERE a_id <> b_id
-          UNION ALL SELECT b_id, a_id FROM star WHERE a_id <> b_id),
-reach(id, lbl) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT e.u, r.lbl FROM edges e JOIN reach r ON r.id = e.v
-),
+{lsh_oracle.WORDS},
+{lsh_oracle.minhash_banded(num_hashes, bands)},
+{lsh_oracle.STAR_CLOSURE},
 clusters AS (SELECT id AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY id)"""
 
 
@@ -355,7 +329,7 @@ HAVING count(*) >= 2
     "swapping policies never revisits text.",
 )
 def q186(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     edges = dedup.lsh_bucket_edges(d, "doc_id", "text", num_hashes=16, bands=4)
     clusters = graph.dedup_clusters(edges, d, id_col="doc_id").select(
         "doc_id", "cluster_id"
@@ -389,18 +363,6 @@ def q186(spark, sf_dir):
 
 
 def _blocking_oracle(num_hashes: int = 16, bands: int = 4, truth_t: float = 0.9) -> str:
-    rows = num_hashes // bands
-    mins = ",\n  ".join(
-        f"min(substring(md5('{dedup._seed_prefix(dedup._minhash_seed_offset(k)[0])}' || w), "
-        f"{dedup._minhash_seed_offset(k)[1] + 1}, 8)) AS mh{k}"
-        for k in range(num_hashes)
-    )
-    band_exprs = ",\n   ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
-        + "))"
-        for b in range(bands)
-    )
     row = """
 SELECT '{name}' AS blocker,
        CAST((SELECT count(*) FROM {cand}) AS BIGINT) AS n_candidates,
@@ -423,11 +385,7 @@ inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
 truth AS (SELECT a_id, b_id FROM inter
           JOIN sizes sa ON sa.doc_id = a_id JOIN sizes sb ON sb.doc_id = b_id
           WHERE i * 1.0 / (sa.n + sb.n - i) >= {truth_t}),
-sig AS (SELECT doc_id,
-  {mins}
-  FROM dw GROUP BY doc_id),
-banded AS (SELECT doc_id, unnest(list_value(
-   {band_exprs})) AS bucket FROM sig),
+{lsh_oracle.minhash_banded(num_hashes, bands, words="dw")},
 cand_mh AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
             FROM banded a JOIN banded b
             ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
@@ -470,7 +428,7 @@ UNION ALL {row.format(name="length_firstword", cand="cand_lf")}
 def q187(spark, sf_dir):
     from pyspark.sql import DataFrame
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     truth = dedup.jaccard_pairs(d, "doc_id", "text", threshold=0.9).select(
         "a_id", "b_id"
     )
@@ -577,7 +535,7 @@ FROM g
     "shuffle is dims-sized regardless of corpus size.",
 )
 def q188(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     x = e.select(F.posexplode("embedding").alias("dim", "vf")).select(
         "dim", F.col("vf").cast("double").alias("v")
     )
@@ -645,7 +603,7 @@ FROM m GROUP BY label
     "fixed label set; raw vectors shuffle once in the posexplode agg.",
 )
 def q189(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     x = e.select(
         "vec_id", "label", F.posexplode("embedding").alias("dim", "vf")
     ).select("vec_id", "label", "dim", F.col("vf").cast("double").alias("v"))
@@ -693,26 +651,10 @@ def q189(spark, sf_dir):
 
 def _minhash_pairs_ctes(num_hashes: int = 16, bands: int = 4, threshold: float = 0.5) -> str:
     """CTE chain (q32's md5 family) ending in ``pairs(a_id, b_id, est)``."""
-    rows = num_hashes // bands
-    mins = ",\n  ".join(
-        f"min(substring(md5('{dedup._seed_prefix(dedup._minhash_seed_offset(k)[0])}' || w), "
-        f"{dedup._minhash_seed_offset(k)[1] + 1}, 8)) AS mh{k}"
-        for k in range(num_hashes)
-    )
-    band_exprs = ",\n   ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
-        + "))"
-        for b in range(bands)
-    )
-    matches = " + ".join(f"(sa.mh{j} = sb.mh{j})::INT" for j in range(num_hashes))
+    matches = lsh_oracle.minhash_matches("sa", "sb", num_hashes)
     return f"""
-words AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-sig AS (SELECT doc_id,
-  {mins}
-  FROM words GROUP BY doc_id),
-banded AS (SELECT doc_id, unnest(list_value(
-   {band_exprs})) AS bucket FROM sig),
+{lsh_oracle.WORDS},
+{lsh_oracle.minhash_banded(num_hashes, bands)},
 cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
          FROM banded a JOIN banded b ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
 pairs AS (SELECT a_id, b_id,
@@ -754,7 +696,7 @@ GROUP BY 1
     "id->split joins.",
 )
 def q190(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         d, "doc_id", "text", num_hashes=16, bands=4, threshold=0.5
     )
@@ -820,7 +762,7 @@ FROM gs WHERE df <= 2 GROUP BY df
     "grams; counts only — no gram strings shuffle).",
 )
 def q191(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     edges = dedup.lsh_bucket_edges(d, "doc_id", "text", num_hashes=16, bands=4)
     surv = (
         graph.dedup_clusters(edges, d, id_col="doc_id")
@@ -906,8 +848,8 @@ FROM u
     "label-blocked join); the FULL OUTER join runs on id pairs only.",
 )
 def q192(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    e = _t(spark, sf_dir, "embeddings")
+    d = load_table(spark, sf_dir, "documents")
+    e = load_table(spark, sf_dir, "embeddings")
     tp = dedup.minhash_lsh_pairs(
         d, "doc_id", "text", num_hashes=16, bands=4, threshold=0.5
     ).select("a_id", "b_id", F.lit(1).alias("in_text"))

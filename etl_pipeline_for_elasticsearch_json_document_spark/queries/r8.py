@@ -34,10 +34,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import 
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q193: contamination fraction — the thresholdable decontamination score
 # ---------------------------------------------------------------------------
@@ -79,7 +75,7 @@ def q193(spark, sf_dir):
         word_ngrams,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     grams = d.select(
         "doc_id",
         F.explode(F.array_distinct(word_ngrams(F.col("text"), 5))).alias("g"),
@@ -143,7 +139,7 @@ FROM sized GROUP BY cluster_size
     "never shuffles.",
 )
 def q194(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     edges = dedup.lsh_bucket_edges(d, "doc_id", "text", num_hashes=16, bands=4)
     clusters = graph.dedup_clusters(edges, d, id_col="doc_id").select(
         "doc_id", "cluster_id"
@@ -202,7 +198,7 @@ GROUP BY a.source, b.source
     "output is the |sources|^2-bounded matrix; text never shuffles.",
 )
 def q195(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = F.split("text", " ")
     segs = (
         d.select(
@@ -260,7 +256,7 @@ FROM p GROUP BY prefix_fp HAVING count(*) >= 2
     "the split), one partial-agg groupBy on 16-byte keys.",
 )
 def q196(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     p = d.select(
         "doc_id",
         "source",
@@ -312,7 +308,7 @@ FROM x GROUP BY dim
     "approx_percentile at 100 TB (same operator shape).",
 )
 def q197(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     x = e.select(
         F.posexplode(F.slice(F.col("embedding").cast("array<double>"), 1, 16))
     ).select(F.col("pos").alias("dim"), F.col("col").alias("v"))
@@ -375,7 +371,7 @@ def q198(spark, sf_dir):
         grouped_prefix_sum,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     wc = grouped_prefix_sum(
         d.select("doc_id", "lang", F.size(F.split("text", " ")).alias("wc")),
         "lang", "doc_id", "wc", "cum", chunk_width=4096,
@@ -446,7 +442,7 @@ def q199(spark, sf_dir):
         word_ngrams,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     g = d.select(
         "doc_id",
         F.explode(F.array_distinct(word_ngrams(F.col("text"), 3))).alias("g"),
@@ -519,7 +515,7 @@ FROM s GROUP BY label
     "per-vector pass is map-only against it.",
 )
 def q200(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
     dims = (
@@ -608,7 +604,7 @@ LIMIT 20
 )
 def q201(spark, sf_dir):
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct()
     )
@@ -670,7 +666,7 @@ FROM sq GROUP BY pk
     "that reuses the first shuffle's partitioning.",
 )
 def q202(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     sq = li.groupBy(
         F.col("l_partkey").alias("p_partkey"), F.col("l_suppkey").alias("sk")
     ).agg(F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("q"))
@@ -723,8 +719,8 @@ GROUP BY n.n_name
     "100 TB design point.",
 )
 def q203(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.to_timestamp(F.lit("1996-01-01")))
         & (F.col("o_orderdate") < F.to_timestamp(F.lit("1997-01-01")))
     )
@@ -736,10 +732,10 @@ def q203(spark, sf_dir):
     # probes + ONE decimal sum — cheaper than shuffling 6M narrow rows
     # (round-robin also pays its sort-before-repartition). At 100 TB the
     # input arrives well-split and the question vanishes.
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     j = (
         c.join(o, c["c_custkey"] == o["o_custkey"])
         .join(li, li["l_orderkey"] == o["o_orderkey"])
@@ -794,7 +790,7 @@ JOIN customer c ON c.c_custkey = o.o_custkey
     "by construction, and AQE turns the follow-up joins into broadcasts.",
 )
 def q204(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(
@@ -806,8 +802,8 @@ def q204(spark, sf_dir):
             F.col("__q").cast("double").alias("sum_qty"),
         )
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         big.join(o, "o_orderkey")
         .join(c, o["o_custkey"] == c["c_custkey"])
@@ -851,7 +847,7 @@ FROM grid
     "|langs|×|sources| broadcast-sized.",
 )
 def q205(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cells = d.groupBy("lang", "source").agg(F.count("*").alias("o"))
     rows_ = d.groupBy("lang").agg(F.count("*").alias("rn"))
     cols = d.groupBy("source").agg(F.count("*").alias("cn"))
@@ -954,7 +950,7 @@ def q206(spark, sf_dir):
         _LANG_PROFILES,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", "lang", F.explode(F.split(F.col("text"), " ")).alias("w"))
     aggs = [
         F.sum(
@@ -1062,7 +1058,7 @@ FROM j GROUP BY blk
     "postings only.",
 )
 def q207(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     keyed = d.select(
         "doc_id",
         F.split("text", " ").getItem(0).alias("blk"),
@@ -1153,7 +1149,7 @@ FROM d GROUP BY digit
     "9-row groupBy; the total rides as a broadcast 1-row aggregate.",
 )
 def q208(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
     d = o.select(
         F.substring(
             F.floor("o_totalprice").cast("bigint").cast("string"), 1, 1
@@ -1213,7 +1209,7 @@ FROM p JOIN m mi ON mi.dim = p.dim_i JOIN m mj ON mj.dim = p.dim_j
     "out 8×8 within a vec_id — constant per row.",
 )
 def q209(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     x = e.select(
         "vec_id",
         F.posexplode(F.slice(F.col("embedding").cast("array<double>"), 1, 8)),
@@ -1302,7 +1298,7 @@ FROM sel GROUP BY source
     "slice; output is |sources| rows.",
 )
 def q210(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = F.split("text", " ")
     m = d.select(
         "doc_id",

@@ -29,10 +29,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import 
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q211: TPC-H Q2 shape — cheapest supplier per part (argmin join-back)
 # ---------------------------------------------------------------------------
@@ -68,10 +64,10 @@ QUALIFY row_number() OVER (PARTITION BY pk ORDER BY unit_price, sk) = 1
     "broadcast dim joins before the aggregate.",
 )
 def q211(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     ps = (
         li.join(s, li["l_suppkey"] == s["s_suppkey"])
         .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
@@ -123,7 +119,7 @@ WHERE CAST(v AS DOUBLE) > 1.4 * CAST(t AS DOUBLE) / np
     "sanctioned broadcast-scalar shape).",
 )
 def q212(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("p_partkey")).agg(
         F.sum(
             (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
@@ -168,8 +164,8 @@ FROM per GROUP BY c_count
     "|distinct k| rows.",
 )
 def q213(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     per = (
         c.join(o, c["c_custkey"] == o["o_custkey"], "left")
         .groupBy(c["c_custkey"])
@@ -214,9 +210,9 @@ GROUP BY n.n_name
     "build), nation rides as a broadcast dim.",
 )
 def q214(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     thr = F.broadcast(
         c.filter(F.col("c_acctbal") > 0).agg(
             (
@@ -279,7 +275,7 @@ FROM s
     "splits, no shuffle of text), then a |sources|-row aggregate.",
 )
 def q215(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per = d.select(
         "source",
         F.size(F.split("text", " ")).alias("n_words"),
@@ -348,7 +344,7 @@ GROUP BY b.lang, n.n_buckets, n.max_size, n.total
     "aggregate, no gram strings shuffle).",
 )
 def q216(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     grams = d.filter(F.size(F.split("text", " ")) >= 3).select(
         "lang",
         "doc_id",
@@ -436,7 +432,7 @@ def q217(spark, sf_dir):
         value_domain_ranks,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     s = d.select(
         "source", "doc_id", "n_chars", F.size(F.split("text", " ")).alias("n_words")
     )
@@ -500,7 +496,7 @@ FROM s
     "window shuffle on (user, type), then a |types|-row aggregate.",
 )
 def q218(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     g = e.select(
         "event_type",
@@ -556,7 +552,7 @@ GROUP BY a.o_orderpriority
     "candidates are bucket-local.",
 )
 def q219(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     eps = 50.0
@@ -630,11 +626,11 @@ GROUP BY 1, 2, 3
     "dim joins, and the fact chain shuffles once on its join keys.",
 )
 def q220(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     sn = n.select(F.col("n_nationkey").alias("snk"), F.col("n_name").alias("supp_nation"))
     cn = n.select(F.col("n_nationkey").alias("cnk"), F.col("n_name").alias("cust_nation"))
     j = (
@@ -699,7 +695,7 @@ FROM wc GROUP BY source
     "text shuffles.",
 )
 def q221(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     wc = (
         d.select("source", F.explode(F.split("text", " ")).alias("word"))
         .groupBy("source", "word")
@@ -764,7 +760,7 @@ def q222(spark, sf_dir):
         value_domain_rank_blocks,
     )
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     # Deliberately NO under-split fan-out before the per-user aggregation
     # (r14): one decimal sum per row is cheaper than shuffling the raw
     # rows — measured 1.20 s without vs 2.07 s with on the ×10

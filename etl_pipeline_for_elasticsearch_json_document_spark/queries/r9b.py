@@ -19,10 +19,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.queries.registry import 
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # q223: order-vs-ship backlog curve (two cumulative series aligned)
 # ---------------------------------------------------------------------------
@@ -66,8 +62,8 @@ FROM m
     "(decades ≈ hundreds of rows), the documented q174-class allowance.",
 )
 def q223(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     ordered = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .groupBy(F.to_date("o_orderdate").alias("day"))
@@ -127,10 +123,10 @@ FROM d GROUP BY 1, 2
     "(priority × weeks) output relation.",
 )
 def q224(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderdate"
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     d = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
         "o_orderpriority",
         F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate")).alias("delay"),
@@ -177,8 +173,8 @@ FROM g WHERE gap IS NOT NULL GROUP BY 1
     "customer, then a |segments|-row aggregate.",
 )
 def q225(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     g = (
         o.join(c, o["o_custkey"] == c["c_custkey"])
@@ -234,7 +230,7 @@ GROUP BY c.source, t.n_distinct, t.total
     "|sources × openers| rows.",
 )
 def q226(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     c = (
         d.select("source", F.split("text", " ").getItem(0).alias("w"))
         .groupBy("source", "w")
@@ -308,8 +304,8 @@ GROUP BY n.n_name
     "form at test SF). The join-backs are 25-row broadcasts.",
 )
 def q227(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     med = c.groupBy("c_nationkey").agg(
         F.percentile("c_acctbal", F.lit(0.5)).alias("med")
     )
@@ -370,7 +366,7 @@ GROUP BY 1, 2
     "sliver only.",
 )
 def q228(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = d.select(
         F.md5(F.array_join(F.slice(F.split("text", " "), 1, 8), " ")).alias("f"),
         "lang",

@@ -62,5 +62,4 @@ def all_queries() -> dict[str, Query]:
         relational,
     )
 
-    r5._late_bind_oracles()
     return dict(REGISTRY)

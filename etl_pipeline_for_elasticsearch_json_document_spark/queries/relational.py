@@ -21,10 +21,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import (
 )
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 def _dsum(col, digits=2, scale="decimal(18,4)"):
     """Exact (partition-order-independent) sum of a double measure: sum in
     decimal, emit rounded double."""
@@ -56,7 +52,7 @@ GROUP BY l_returnflag, l_linestatus
     doc="TPC-H Q1-style pricing summary: filtered scan + grouped aggregation.",
 )
 def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.to_timestamp(F.lit("1998-09-02"))
     )
     # All eight aggregates are exact decimal sums / counts (partition-order
@@ -100,7 +96,7 @@ WHERE p_size BETWEEN 10 AND 30
     doc="Predicate surface: BETWEEN / IN / LIKE / NOT LIKE pushed to the scan.",
 )
 def q02(spark, sf_dir):
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.filter(
         F.col("p_size").between(10, 30)
         & F.col("p_type").isin("ECONOMY", "SMALL")
@@ -124,9 +120,9 @@ LIMIT 10
     doc="TPC-H Q3-style: 3-way join + grouped revenue + deterministic top-N.",
 )
 def q03(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -159,9 +155,9 @@ GROUP BY r.r_name, n.n_name
     doc="Star join through two broadcast dimensions + grouped agg.",
 )
 def q04(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    r = F.broadcast(_t(spark, sf_dir, "region"))
+    c = load_table(spark, sf_dir, "customer")
+    n = F.broadcast(load_table(spark, sf_dir, "nation"))
+    r = F.broadcast(load_table(spark, sf_dir, "region"))
     return (
         c.join(n, c.c_nationkey == n.n_nationkey)
         .join(r, n.n_regionkey == r.r_regionkey)
@@ -182,7 +178,7 @@ FROM orders GROUP BY o_orderpriority
 )
 def q05(spark, sf_dir):
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").alias("n_orders"),
@@ -205,7 +201,7 @@ FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
 )
 def q06(spark, sf_dir):
     return (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(
             F.grouping("l_returnflag").alias("g_rf"),
@@ -228,7 +224,7 @@ FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
 )
 def q07(spark, sf_dir):
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .cube("o_orderstatus", "o_orderpriority")
         .agg(F.count("*").alias("n"), _dsum("o_totalprice").alias("total"))
     )
@@ -244,7 +240,7 @@ GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
     doc="Explicit GROUPING SETS via the SQL surface.",
 )
 def q08(spark, sf_dir):
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("q08_customer")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("q08_customer")
     return spark.sql(
         """
         SELECT c_mktsegment, c_nationkey, count(*) AS n
@@ -266,7 +262,7 @@ FROM lineitem GROUP BY l_returnflag
 )
 def q09(spark, sf_dir):
     return (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
             F.round(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("median_price"),
@@ -295,7 +291,7 @@ SELECT * FROM (
 def q10(spark, sf_dir):
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select("o_custkey", "o_orderkey", "o_totalprice", F.row_number().over(w).alias("rn"))
         .filter(F.col("rn") <= 3)
     )
@@ -319,7 +315,7 @@ FROM orders
 def q11(spark, sf_dir):
     wo = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wf = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return _t(spark, sf_dir, "orders").select(
+    return load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
         F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(wf).cast("double"), 2)
@@ -343,7 +339,7 @@ FROM supplier
 def q12(spark, sf_dir):
     w1 = Window.orderBy(F.col("s_acctbal").desc(), F.col("s_suppkey"))
     w2 = Window.orderBy("s_nationkey")
-    return _t(spark, sf_dir, "supplier").select(
+    return load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_name",
         F.rank().over(w1).alias("rnk"),
@@ -367,7 +363,7 @@ ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
 )
 def q13(spark, sf_dir):
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .limit(10)
@@ -386,8 +382,8 @@ SELECT nationkey, count(*) AS n FROM (
     doc="UNION ALL + regroup.",
 )
 def q14(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.unionByName(s).groupBy("nationkey").agg(F.count("*").alias("n"))
 
 
@@ -401,8 +397,8 @@ SELECT s_nationkey FROM supplier
     doc="INTERSECT (distinct set semantics).",
 )
 def q15(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s)
 
 
@@ -416,8 +412,8 @@ SELECT c_nationkey FROM customer
     doc="EXCEPT (distinct set semantics).",
 )
 def q16(spark, sf_dir):
-    n = _t(spark, sf_dir, "nation").select("n_nationkey")
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey")
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
     return n.subtract(c)  # EXCEPT (distinct)
 
 
@@ -431,8 +427,8 @@ WHERE EXISTS (SELECT 1 FROM orders o
     doc="Left-semi join (EXISTS).",
 )
 def q17(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
@@ -445,8 +441,8 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     doc="Left-anti join (NOT EXISTS).",
 )
 def q18(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
@@ -461,9 +457,9 @@ FROM nation n LEFT JOIN (
     doc="Left outer join against a derived aggregate with null repair.",
 )
 def q19(spark, sf_dir):
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     x = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy("c_nationkey")
         .agg(F.count("*").alias("n_cust"))
     )
@@ -493,7 +489,7 @@ FROM part WHERE p_partkey <= 100
     doc="String function surface.",
 )
 def q20(spark, sf_dir):
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 100)
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") <= 100)
     return p.select(
         "p_partkey",
         F.upper("p_brand").alias("brand_u"),
@@ -519,7 +515,7 @@ GROUP BY ym
     doc="Date bucketing: monthly revenue.",
 )
 def q21(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(F.year("o_orderdate").between(1996, 1998))
+    o = load_table(spark, sf_dir, "orders").filter(F.year("o_orderdate").between(1996, 1998))
     return (
         o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("ym"))
         .agg(F.count("*").alias("n_orders"), _dsum("o_totalprice").alias("revenue"))
@@ -542,7 +538,7 @@ HAVING count(*) > 10
     doc="Conditional aggregation + HAVING.",
 )
 def q22(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.groupBy("l_returnflag")
         .agg(
@@ -570,7 +566,7 @@ FROM events GROUP BY event_type
     doc="JSON path extraction from a string column (get_json_object).",
 )
 def q23(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return e.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -592,7 +588,7 @@ FROM embeddings WHERE vec_id < 50
     doc="Array functions: size / element_at / array_max.",
 )
 def q24(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
     return e.select(
         "vec_id",
         F.size("embedding").alias("dim"),
@@ -621,7 +617,7 @@ LIMIT 100
     "cursor predicate — checkpointless incremental scan).",
 )
 def q25(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cur_ts = F.to_timestamp(F.lit("2024-01-15 00:00:00"))
     page = (
         e.filter((F.col("ts") > cur_ts) | ((F.col("ts") == cur_ts) & (F.col("event_id") > 0)))
@@ -646,7 +642,7 @@ FROM purchases p ASOF LEFT JOIN clicks c
     "union+window merge — one shuffle by (user, time), no join explosion.",
 )
 def q26(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), "ts"
     )
@@ -692,8 +688,8 @@ GROUP BY o.o_orderkey
     doc="Range join: equi-key + interval band predicate.",
 )
 def q27(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(
             o,
@@ -718,8 +714,8 @@ GROUP BY o_orderstatus
     doc="EXISTS-correlated subquery folded to a semi-join + agg.",
 )
 def q28(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 49)
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 49)
     return (
         o.join(l, o.o_orderkey == l.l_orderkey, "left_semi")
         .groupBy("o_orderstatus")
@@ -741,7 +737,7 @@ GROUP BY bucket_s, event_type
     "F.window aligns to the epoch, same as the floor-div oracle).",
 )
 def q29(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "6 hours").alias("w"), F.col("event_type"))
         .agg(
@@ -789,7 +785,7 @@ FROM g GROUP BY user_id, sid
 def q64(spark, sf_dir):
     from etl_pipeline_for_elasticsearch_json_document_spark.streaming.windows import sessionize_batch
 
-    return sessionize_batch(_t(spark, sf_dir, "events"), gap="1 hour")
+    return sessionize_batch(load_table(spark, sf_dir, "events"), gap="1 hour")
 
 
 # ---------------------------------------------------------------------------
@@ -815,7 +811,7 @@ FROM lineitem WHERE l_orderkey <= 100
     doc="Math function surface (abs/ceil/floor/sqrt/ln/log10/pow/mod/sign).",
 )
 def q80(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 100)
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 100)
     return l.select(
         "l_orderkey",
         "l_linenumber",
@@ -844,7 +840,7 @@ FROM supplier
     doc="NULL semantics: nullif / coalesce / null-safe comparison.",
 )
 def q81(spark, sf_dir):
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     nk = F.nullif(F.col("s_nationkey"), F.lit(0))
     return s.select(
         "s_suppkey",
@@ -874,7 +870,7 @@ FROM part WHERE p_partkey <= 60
     doc="Extended string surface (pad/trim/reverse/strpos/split_part/...).",
 )
 def q82(spark, sf_dir):
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 60)
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") <= 60)
     return p.select(
         "p_partkey",
         F.lpad("p_brand", 12, "*").alias("pad_l"),
@@ -906,7 +902,7 @@ FROM orders WHERE o_orderkey <= 200
     doc="Date arithmetic surface (extract fields, datediff, last_day, interval add).",
 )
 def q83(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 200)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 200)
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").alias("y"),
@@ -932,7 +928,7 @@ WHERE o_totalprice > 2 * (SELECT avg(o_totalprice) FROM orders)
     doc="Scalar subquery via the SQL surface.",
 )
 def q84(spark, sf_dir):
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("q84_orders")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q84_orders")
     return spark.sql(
         """
         SELECT o_orderkey, round(o_totalprice, 2) AS price
@@ -951,8 +947,8 @@ WHERE n_nationkey IN (SELECT c_nationkey FROM customer WHERE c_acctbal > 9000)
     doc="IN-subquery via the SQL surface (decorrelates to a semi join).",
 )
 def q85(spark, sf_dir):
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("q85_nation")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("q85_customer")
+    load_table(spark, sf_dir, "nation").createOrReplaceTempView("q85_nation")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("q85_customer")
     return spark.sql(
         """
         SELECT n_name FROM q85_nation
@@ -973,7 +969,7 @@ GROUP BY w.weight
     doc="Join against an inline literal dimension (broadcast by construction).",
 )
 def q86(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     dim = spark.createDataFrame(
         [("1-URGENT", 5), ("2-HIGH", 4), ("3-MEDIUM", 3), ("4-NOT SPECIFIED", 2), ("5-LOW", 1)],
         "prio string, weight int",
@@ -1004,7 +1000,7 @@ FROM orders GROUP BY o_orderstatus
     "raw estimate.",
 )
 def q87(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderstatus")
         .agg(
@@ -1041,7 +1037,7 @@ FROM b GROUP BY o_orderstatus, decile
     "the histogram/binning primitive.",
 )
 def q68(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     return (
         o.withColumn("decile", F.ntile(10).over(w))
@@ -1065,7 +1061,7 @@ FROM orders GROUP BY o_orderstatus
     "-> array_join keeps the result deterministic under any partitioning.",
 )
 def q69(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.array_join(
             F.sort_array(F.collect_set("o_orderpriority")), ","
@@ -1095,7 +1091,7 @@ FROM events GROUP BY event_type
     "emits an oracle-checkable accuracy bound next to the exact count.",
 )
 def q67(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("event_type")
         .agg(
@@ -1127,7 +1123,7 @@ FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents WHERE doc_id <
     doc="posexplode: positional flattening of an array column.",
 )
 def q88(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 5)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 5)
     return d.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w"))
 
 
@@ -1145,12 +1141,12 @@ FULL OUTER JOIN (SELECT s_nationkey, count(*) AS n_supp FROM supplier GROUP BY s
 )
 def q89(spark, sf_dir):
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy("c_nationkey")
         .agg(F.count("*").alias("n_cust"))
     )
     s = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .groupBy("s_nationkey")
         .agg(F.count("*").alias("n_supp"))
     )
@@ -1174,7 +1170,7 @@ FROM events WHERE event_id < 50
     "and values (map_keys / element_at).",
 )
 def q90(spark, sf_dir):
-    e = _t(spark, sf_dir, "events").filter(F.col("event_id") < 50)
+    e = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 50)
     m = F.from_json("props", "map<string,int>")
     return e.select(
         "event_id",
@@ -1197,7 +1193,7 @@ FROM orders GROUP BY o_orderpriority
     "value list so no extra distinct-values job runs).",
 )
 def q91(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     p = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -1223,7 +1219,7 @@ SELECT l_orderkey, l_linenumber, 'tax', l_tax FROM lineitem WHERE l_orderkey < 1
     "re-scanning the table per measure).",
 )
 def q92(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
     return li.selectExpr(
         "l_orderkey",
         "l_linenumber",
@@ -1244,7 +1240,7 @@ FROM lineitem GROUP BY l_returnflag
     doc="Statistical aggregates: stddev/variance/corr/covariance.",
 )
 def q93(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
         F.round(F.var_samp("l_quantity"), 4).alias("var_qty"),
@@ -1267,7 +1263,7 @@ WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
     "(ties broken by key so ranks are total-order deterministic).",
 )
 def q94(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return c.select(
         "c_custkey",
@@ -1295,7 +1291,7 @@ FROM gaps GROUP BY user_id
     "session_window in streaming/windows.py).",
 )
 def q95(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts")
     gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
     new_sess = F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), 1).otherwise(0)
@@ -1317,7 +1313,7 @@ FROM documents WHERE doc_id < 200
     doc="regexp_extract_all: all matches of a pattern per document.",
 )
 def q96(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     hits = F.regexp_extract_all("text", F.lit(r"(\w*or\w*)"))
     return d.select(
         "doc_id",
@@ -1341,7 +1337,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
     "epoch-micros; peers at equal ts make it tie-deterministic).",
 )
 def q97(spark, sf_dir):
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 50)
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros("ts"))
@@ -1370,7 +1366,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
     doc="first/last/nth_value with an explicit full-partition ROWS frame.",
 )
 def q98(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -1398,7 +1394,7 @@ FROM lineitem GROUP BY l_returnflag
     doc="Boolean and bitwise aggregates.",
 )
 def q99(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.bool_and(F.col("l_discount") <= 0.08).alias("all_low_disc"),
         F.bool_or(F.col("l_tax") > 0.07).alias("any_high_tax"),
@@ -1504,7 +1500,7 @@ GROUP BY event_type
     "model, ElasticSearch ETL.py:37-76). Oracle uses DuckDB JSON ops.",
 )
 def q76(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.try_variant_get(F.parse_json("props"), "$.k", "int")
     return (
         e.select("event_type", k.alias("k"))
@@ -1534,7 +1530,7 @@ FROM events GROUP BY user_id
     "tiebreak is deterministic cross-engine.",
 )
 def q77(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     key = F.format_string("%020d|%012d", F.unix_micros("ts"), F.col("event_id"))
     return e.groupBy("user_id").agg(
         F.max_by("event_id", key).alias("last_event_id"),
@@ -1559,7 +1555,7 @@ FROM c GROUP BY user_id
     "combine map-side; no window sort, no collect.",
 )
 def q78(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     c = e.groupBy("user_id", "event_type").agg(F.count("*").alias("cnt"))
     key = F.format_string(
         "%012d|%s", F.lit(999999999999) - F.col("cnt"), F.col("event_type")
@@ -1590,7 +1586,7 @@ FROM events GROUP BY bucket
     "width_bucket's under/overflow buckets 0 and n+1 arithmetically.",
 )
 def q79(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
             F.width_bucket("value", F.lit(_Q79_LO), F.lit(_Q79_HI), F.lit(_Q79_BINS))
@@ -1625,7 +1621,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 )
 def q108(spark, sf_dir):
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") < 200)
         # NTZ parquet timestamps -> LTZ in the UTC session, matching the
         # oracle's naive epoch_us (same normalization as events.ts)
@@ -1660,7 +1656,7 @@ FROM a JOIN b ON a.pr IS NOT DISTINCT FROM b.pr
     "equality is a valid shuffle key), unlike an OR-of-IS-NULL rewrite.",
 )
 def q120(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderkey") < 500).select(
         "o_orderkey",
         F.when(F.col("o_orderkey") % 7 == 0, None)
@@ -1696,7 +1692,7 @@ FROM orders WHERE o_orderkey >= 100 AND o_orderkey < 200
     "positional corruption plain UNION would produce.",
 )
 def q121(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     old = o.filter(F.col("o_orderkey") < 100).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1737,7 +1733,7 @@ FROM f
     "explicit guards.",
 )
 def q123(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
 
     def first_ts(t):
         return F.min(F.when(F.col("event_type") == t, F.col("ts")))
@@ -1782,7 +1778,7 @@ GROUP BY f.cohort_day, week_offset
     "functions and no per-cohort scans.",
 )
 def q124(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     firsts = (
         e.groupBy("user_id")
         .agg(F.min(F.to_date("ts")).alias("cohort_day"))
@@ -1822,7 +1818,7 @@ WHERE levenshtein(a.p_name, b.p_name) <= 3 AND a.p_name <> b.p_name
 )
 def q125(spark, sf_dir):
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") < 2000)
         .select("p_partkey", "p_name", F.substring("p_name", 1, 1).alias("blk"))
     )
@@ -1870,7 +1866,7 @@ WHERE n_hist = 7 AND sd > 0 AND abs((n - mu) / sd) > 2
     "flags |z| > 2 with a full-history guard.",
 )
 def q126(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.count("*").alias("n")
     )
@@ -1914,7 +1910,7 @@ WHERE old.doc_id IS NULL OR new.doc_id IS NULL OR old.h <> new.h
     "every 11th vs every 13th doc, rewrite every 7th).",
 )
 def q127(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     old = d.filter(F.col("doc_id") % 11 != 0).select(
         "doc_id", F.md5("text").alias("h")
     )
