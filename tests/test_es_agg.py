@@ -620,3 +620,46 @@ def test_scan_or_push_histogram_chooser_parity(spark, sf_dir, fake_es, tmp_path)
         scan_or_push_histogram(
             spark, fake_es, "two_hist", field="n_chars", interval=0.0
         )
+
+
+def test_scan_branches_drop_null_group_keys(spark, fake_es, tmp_path):
+    """ES buckets no document whose group key is missing, so the choosers'
+    scan branches drop null keys too: on a 3-doc index where one doc has
+    no ``ts`` and no ``lang``, the forced scan returns exactly the pushed
+    buckets, for the date_histogram and the composite chooser alike."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.sources.es_agg import (
+        es_date_histogram_agg,
+        scan_or_push,
+        scan_or_push_date_histogram,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "2024-01-01 10:00:00", "en", 2.0),
+         (2, "2024-01-01 11:30:00", "de", 3.0),
+         (3, None, None, 5.0)],
+        "doc_id long, ts string, lang string, value double",
+    )
+    out = str(tmp_path / "bulk_null_keys")
+    es_sink.write_bulk_files(docs.coalesce(1), out, "null_keys", id_col="doc_id")
+    es_sink.replay_bulk_files(out, fake_es)
+    metrics = {"total": ("sum", "value")}
+
+    def rows(df):
+        return {tuple(r) for r in df.collect()}
+
+    # 1 month ≤ 744 hour buckets > 0.5 × 3 docs: the chooser scans
+    scanned = scan_or_push_date_histogram(
+        spark, fake_es, "null_keys", field="ts", calendar_interval="hour",
+        metrics=metrics, scan=lambda: docs,
+    )
+    assert rows(scanned) == rows(es_date_histogram_agg(
+        spark, fake_es, "null_keys", field="ts", calendar_interval="hour",
+        metrics=metrics,
+    ))
+    scanned = scan_or_push(
+        spark, fake_es, "null_keys", fields=["lang"], metrics=metrics,
+        scan=lambda: docs, push_cardinality_ratio=0.0,
+    )
+    assert rows(scanned) == rows(es_composite_agg(
+        spark, fake_es, "null_keys", fields=["lang"], metrics=metrics
+    ))

@@ -14,9 +14,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.sources.es_datasource im
     EsEnvelopeDataSource,
 )
 
-GOLDEN = "/root/reference/ElasticSearch_Document.json"
-
-
 def _envelope(doc_ids):
     return {
         "hits": {
@@ -36,9 +33,9 @@ def _envelope(doc_ids):
     }
 
 
-def test_es_envelope_reads_golden(spark):
+def test_es_envelope_reads_golden(spark, golden_doc):
     spark.dataSource.register(EsEnvelopeDataSource)
-    df = spark.read.format("es_envelope").load(GOLDEN)
+    df = spark.read.format("es_envelope").load(golden_doc)
     rows = df.collect()
     assert len(rows) == 1
     assert rows[0]["_index"].startswith("rta_claim_headers-")

@@ -10,9 +10,6 @@ import pytest
 
 from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten
 
-GOLDEN = "/root/reference/ElasticSearch_Document.json"
-
-
 def spark_flatten_dicts(spark, docs, **kw):
     """Flatten a list of plain-dict documents through Spark; returns
     (columns, rows-as-list-of-dicts)."""
@@ -189,13 +186,13 @@ def test_ragged_nested_arrays(spark, reference_etl):
 
 
 @pytest.mark.slow
-def test_golden_document_parity(spark, reference_etl):
-    with open(GOLDEN) as f:
+def test_golden_document_parity(spark, reference_etl, reference_golden):
+    with open(reference_golden) as f:
         data = json.load(f)
     ref_pdf = reference_etl.json_to_tsv_in_memory(data)
     assert ref_pdf.shape == (1, 5028)
 
-    df = spark.read.option("multiLine", True).json(GOLDEN)
+    df = spark.read.option("multiLine", True).json(reference_golden)
     out = flatten(df, bug_compat=True)
     assert out.columns == list(ref_pdf.columns)
     row = out.collect()[0].asDict()
@@ -212,10 +209,10 @@ def test_golden_document_parity(spark, reference_etl):
 
 
 @pytest.mark.slow
-def test_flatten_families_partition_and_values(spark):
+def test_flatten_families_partition_and_values(spark, golden_doc):
     from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten_families
 
-    df = spark.read.option("multiLine", True).json(GOLDEN)
+    df = spark.read.option("multiLine", True).json(golden_doc)
     wide = flatten(df)
     # alias the key to a name outside the flattened column space — the
     # document itself flattens to a ClaimRequestId column
@@ -236,7 +233,7 @@ def test_flatten_families_partition_and_values(spark):
 
 
 @pytest.mark.slow
-def test_flatten_families_scan_is_pruned(spark, tmp_path):
+def test_flatten_families_scan_is_pruned(spark, tmp_path, golden_doc):
     """A family's parquet scan must read only its subtree, not the whole
     document — the I/O win that motivates the split. (Parquet only: JSON
     scans are row-oriented and don't nested-prune.)"""
@@ -248,7 +245,7 @@ def test_flatten_families_scan_is_pruned(spark, tmp_path):
         unwrap_envelope,
     )
 
-    src = unwrap_envelope(spark.read.option("multiLine", True).json(GOLDEN))
+    src = unwrap_envelope(spark.read.option("multiLine", True).json(golden_doc))
     path = str(tmp_path / "docs.parquet")
     src.write.parquet(path)
     docs = spark.read.parquet(path)

@@ -270,28 +270,29 @@ def test_column_search_a23(spark):
     assert list(t.index) == ["Lines_0_BasePrice", "Lines_0_FinalPrice"]
 
 
-def test_es_source_stub_gating(spark):
+def test_es_source_stub_gating(spark, golden_doc):
     from etl_pipeline_for_elasticsearch_json_document_spark.sources import elasticsearch as es
 
     assert not es.HAS_ES_CLIENT  # not installed here
     with pytest.raises(NotImplementedError, match="not installed"):
         next(es.scan_with_client(spark, "idx", {"query": {}}))
     # tier 1 works everywhere: the golden envelope
-    df = es.read_search_response_json(spark, "/root/reference/ElasticSearch_Document.json")
+    df = es.read_search_response_json(spark, golden_doc)
     assert df.count() == 1 and "claimRequestId" in df.columns
 
 
 @pytest.mark.slow
-def test_cli_main_exports_golden_doc(tmp_path, capsys):
+def test_cli_main_exports_golden_doc(tmp_path, capsys, golden_doc):
     """`python -m etl_pipeline_for_elasticsearch_json_document_spark IN OUT`
     — the reference's script entry point (E1): envelope in, per-batch TSV +
-    audit out."""
+    audit out, as wide as the driver-local flatten of the same document."""
     import glob
 
     from etl_pipeline_for_elasticsearch_json_document_spark.__main__ import main
+    from etl_pipeline_for_elasticsearch_json_document_spark.local import json_to_tsv_in_memory
 
     out = str(tmp_path / "cli_out")
-    rc = main(["/root/reference/ElasticSearch_Document.json", out, "--bug-compat"])
+    rc = main([golden_doc, out, "--bug-compat"])
     assert rc == 0
     assert "exported 1 documents" in capsys.readouterr().out
     tsvs = glob.glob(f"{out}/rta_claim_headers_*/*.csv")
@@ -299,7 +300,9 @@ def test_cli_main_exports_golden_doc(tmp_path, capsys):
     import pandas as pd
 
     df = pd.read_csv(tsvs[0], sep="\t")
-    assert df.shape == (1, 5028)
+    with open(golden_doc) as f:
+        width = json_to_tsv_in_memory(json.load(f)).shape[1]
+    assert df.shape == (1, width)
 
 
 def test_cli_main_reads_jsonl_fully(tmp_path, capsys):

@@ -4,26 +4,22 @@ Three layers of checking:
 
 1. unit tests of the documented semantics (quirks Q1/Q2, arrays, depth cap,
    envelope detect, multi-doc column union);
-2. the golden document: shape + spot values that SURVEY.md records as
-   [verified by execution] against the reference;
+2. the reference's golden document: shape + spot values that SURVEY.md
+   records as [verified by execution] against the reference;
 3. direct comparison against the reference's own ``json_to_tsv_in_memory``
-   (imported with its missing config modules stubbed), including a
-   hypothesis-randomized document generator — skipped automatically if the
-   reference can't be imported.
+   (the ``reference_etl`` fixture), including a hypothesis-randomized
+   document generator.
+
+Layers 2 and 3 skip when the reference checkout is absent.
 """
 
 from __future__ import annotations
 
 import json
-import sys
-import types
 
 import pytest
 
 from etl_pipeline_for_elasticsearch_json_document_spark.local import json_to_tsv_in_memory
-
-GOLDEN = "/root/reference/ElasticSearch_Document.json"
-
 
 # ---------------------------------------------------------------------------
 # 1. semantics units
@@ -119,8 +115,8 @@ def test_pinned_columns_skip_discovery():
 # ---------------------------------------------------------------------------
 
 
-def test_golden_document_shape_and_spot_values():
-    with open(GOLDEN) as f:
+def test_golden_document_shape_and_spot_values(reference_golden):
+    with open(reference_golden) as f:
         data = json.load(f)
     df = json_to_tsv_in_memory(data)
     assert df.shape == (1, 5028)  # SURVEY.md §1.5 [verified by execution]
@@ -135,50 +131,21 @@ def test_golden_document_shape_and_spot_values():
 # ---------------------------------------------------------------------------
 
 
-def _import_reference():
-    """Import the reference module with its missing config deps stubbed."""
-    cfg = types.ModuleType("elasticsearch_config")
-    cfg.BASE_QUERY = {"query": {"match_all": {}}, "size": 100, "sort": []}
-    cfg.ES = None
-    utils = types.ModuleType("utils")
-    utils.log_to_sql_db = lambda **kw: None
-    sys.modules.setdefault("elasticsearch_config", cfg)
-    sys.modules.setdefault("utils", utils)
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "reference_etl", "/root/reference/ElasticSearch ETL.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-try:
-    _REF = _import_reference()
-except Exception:  # pragma: no cover - container without the reference
-    _REF = None
-
-needs_ref = pytest.mark.skipif(_REF is None, reason="reference not importable")
-
-
-def assert_matches_reference(data, max_depth=20):
+def assert_matches_reference(ref, data, max_depth=20):
     ours = json_to_tsv_in_memory(data, max_depth=max_depth)
-    theirs = _REF.json_to_tsv_in_memory(data, max_depth=max_depth)
+    theirs = ref.json_to_tsv_in_memory(data, max_depth=max_depth)
     assert list(ours.columns) == list(theirs.columns)
     assert ours.to_dict("records") == theirs.to_dict("records")
 
 
-@needs_ref
-def test_reference_parity_golden_document():
-    with open(GOLDEN) as f:
+def test_reference_parity_golden_document(reference_etl, reference_golden):
+    with open(reference_golden) as f:
         data = json.load(f)
-    assert_matches_reference(data)
+    assert_matches_reference(reference_etl, data)
 
 
-@needs_ref
 @pytest.mark.parametrize("max_depth", [0, 1, 2, 20])
-def test_reference_parity_edge_docs(max_depth):
+def test_reference_parity_edge_docs(reference_etl, max_depth):
     doc = {
         "plain": "v",
         "num": 3,
@@ -196,11 +163,10 @@ def test_reference_parity_edge_docs(max_depth):
         "listlist": [[1], [2]],
         "Mixed_Case": {"lengthOfStay": 9, "LengthOfStay": 10},
     }
-    assert_matches_reference(doc, max_depth=max_depth)
+    assert_matches_reference(reference_etl, doc, max_depth=max_depth)
 
 
-@needs_ref
-def test_reference_parity_hypothesis_random_docs():
+def test_reference_parity_hypothesis_random_docs(reference_etl):
     from hypothesis import given, settings, strategies as st
 
     keys = st.sampled_from(
@@ -239,6 +205,6 @@ def test_reference_parity_hypothesis_random_docs():
 
         if has_mixed(doc):
             return
-        assert_matches_reference(doc, max_depth=max_depth)
+        assert_matches_reference(reference_etl, doc, max_depth=max_depth)
 
     check()

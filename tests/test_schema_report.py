@@ -30,9 +30,6 @@ from etl_pipeline_for_elasticsearch_json_document_spark.operators.schema_report 
     schema_evolution_report,
 )
 
-GOLDEN = "/root/reference/ElasticSearch_Document.json"
-
-
 def _profile(spark, docs, max_depth=20):
     df = spark.createDataFrame(docs, "batch long, j string")
     return {
@@ -197,12 +194,12 @@ def test_width_report_matches_flatten_plan(spark):
         assert widths[b] == len(flatten_plan(parsed)), f"batch {b}"
 
 
-def test_width_alarm_fires_on_widened_golden_variant(spark):
+def test_width_alarm_fires_on_widened_golden_variant(spark, golden_doc):
     """The VERDICT r11 item-8 scenario end-to-end: batch 1 is the
-    reference's golden document; batch 2 is the same document with every
+    golden document; batch 2 is the same document with every
     dict-array's elements DOUBLED (the feed that doubles its array
     lengths, ElasticSearch ETL.py:63-65). The alarm fires on batch 2."""
-    with open(GOLDEN) as f:
+    with open(golden_doc) as f:
         doc = json.load(f)
 
     def widen(node):
