@@ -92,12 +92,33 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from perfbench import gen_docs  # noqa: E402
+
 GOLDEN = "/root/reference/ElasticSearch_Document.json"
+
+
+def golden() -> tuple[str, str]:
+    """(path, source) of the golden ES search response: the reference's
+    document when its checkout is present, else one gen_docs document
+    with 12 claim lines, written as a one-hit search response to the
+    temp directory (the hermetic test fixture's document)."""
+    if os.path.exists(GOLDEN):
+        return GOLDEN, "reference"
+    doc = gen_docs.make_documents(1, 1, max_lines=12)[0]
+    hit = {"_index": "rta_claim_headers-000001", "_id": str(doc[gen_docs.ID_COL]), "_score": 1.0, "_source": doc}
+    response = {"hits": {"total": {"value": 1, "relation": "eq"}, "max_score": 1.0, "hits": [hit]}}
+    path = os.path.join(tempfile.gettempdir(), "spark_graft_bench_golden.json")
+    tmp = f"{path}.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(response, f, indent=2)
+    os.replace(tmp, path)
+    return path, "gen_docs seed 1, 1 document, 12 claim lines"
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -145,7 +166,7 @@ def bench_inmem() -> dict[str, float]:
     is an in-process pandas call, so its engine-parity benchmark must run
     the same way — a bare Python process, no JVM sharing the driver, no
     Spark session allocating while pandas runs."""
-    script = _INMEM_SCRIPT.format(repo=str(Path(__file__).resolve().parent), golden=GOLDEN)
+    script = _INMEM_SCRIPT.format(repo=str(Path(__file__).resolve().parent), golden=golden()[0])
     res = subprocess.run(
         [sys.executable, "-c", script], capture_output=True, text=True, check=True
     )
@@ -370,7 +391,7 @@ def bench_flatten(spark) -> dict[str, float]:
     )
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    src = unwrap_envelope(spark.read.option("multiLine", True).json(GOLDEN)).cache()
+    src = unwrap_envelope(spark.read.option("multiLine", True).json(golden()[0])).cache()
     src.count()
     out: dict[str, float] = {}
     t0 = time.time()
@@ -1743,6 +1764,7 @@ def main() -> None:
             "cpu_count": os.cpu_count(),
             "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
             "sf_dir": sf_dir,
+            "golden_source": golden()[1],
             "python": sys.version.split()[0],
             "sections_serialized": True,
             "provenance": os.environ.get("SPARK_GRAFT_BENCH_PROVENANCE")

@@ -3,8 +3,8 @@
 
 Differences by design (documented, not accidental):
 - the keyset pager (sources/keyset.py) only finds the page boundaries:
-  each page brings its sort keys and ids to the driver, never its
-  documents, and the first page's scan yields the A1 count;
+  one collect brings every row's sort keys and id to the driver, never
+  the documents, and its length is the A1 count;
 - every row is then tagged with its page's A17 directory name, and the
   whole export is flattened once and written by ONE partitioned TSV job
   (one part file per page, rows in sort order) into a staging directory;
@@ -17,7 +17,10 @@ Differences by design (documented, not accidental):
   hold more than ``batch_size`` rows;
 - the flatten plan is generated once for the whole export (the same
   within-run schema union as the reference's per-call discovery, but
-  paid once).
+  paid once);
+- an export runs five Spark jobs whatever its page count: the key
+  collect and the write (a shuffle map and a result job each) and the
+  flatten discovery; the audit row is written from the driver.
 """
 
 from __future__ import annotations
@@ -38,24 +41,28 @@ from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import (
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.sinks.audit import AuditLog
 from etl_pipeline_for_elasticsearch_json_document_spark.sinks.tsv import batch_tsv_path, write_tsv
-from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Page, after_predicate, paginate
+from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Page, paginate
 
 #: partition column of the one write: the A17 directory name of a row's page
 _PAGE = "_page"
 
 
 def _page_labels(pages: list[Page], sort_cols, id_col: str) -> Column:
-    """Each row's A17 directory name: that of the first page whose cursor
-    the row does not sort after — the pager's own predicate."""
+    """Each row's A17 directory name: that of its page, found by counting
+    the page cursors its key sorts after. The cursors are one sorted
+    array of structs; a struct compares field by field in ``orderBy``'s
+    ASC NULLS FIRST order with NaN last and equal to NaN, as the pager
+    sorts and cuts, so a row tied with a cursor joins that cursor's page.
+    The cursors are data in the expression, not one branch per page: the
+    optimiser folds both arrays into literals."""
     names = []
     for p in pages:
         last_id = max((r[id_col] for r in p.rows if r[id_col] is not None), default=None)
         names.append(batch_tsv_path("", last_id))  # the name only
-    label = None
-    for p, name in zip(pages[:-1], names):
-        on_or_before = ~after_predicate(sort_cols, p.cursor)
-        label = F.when(on_or_before, name) if label is None else label.when(on_or_before, name)
-    return F.lit(names[-1]) if label is None else label.otherwise(names[-1])
+    key = F.struct(*sort_cols)
+    cursors = F.array(*[F.struct(*[F.lit(v).alias(c) for c, v in zip(sort_cols, p.cursor.values)]) for p in pages])
+    passed = F.size(F.filter(cursors, lambda c: c < key))
+    return F.element_at(F.array(*map(F.lit, names)), passed + 1)
 
 
 def _publish(spark: SparkSession, fs, staging: str, output_dir: str, placed: list) -> None:

@@ -5,9 +5,12 @@ One row per job run / micro-batch with job name, id, start/end timestamps,
 SUCCESS/FAILED status, batch id, table name, and loaded record count —
 written in both the success and failure paths. Two storage tiers:
 
-- **parquet directory** (``path=...``, default): append-only files; audit
-  writes are tiny and driver-side, so a single-row append per batch is
-  fine at any scale.
+- **parquet directory** (``path=...``, default): append-only files. The
+  driver writes each row as one parquet file with pyarrow, under a
+  ``_``-prefixed name that readers skip, and renames it to
+  ``part-<uuid>.parquet`` through the Hadoop ``FileSystem`` of ``path``:
+  no Spark job, every scheme the Spark writer accepts, and no torn file
+  in a reader's listing. Files Spark wrote read back the same.
 - **JDBC** (``jdbc_url=...``): the reference's actual target — an RDBMS
   table via ``spark.write.jdbc``. Works with any driver on the cluster
   classpath; exercised for real in tests against the Derby embedded
@@ -18,10 +21,14 @@ written in both the success and failure paths. Two storage tiers:
 from __future__ import annotations
 
 import datetime
+import uuid
 from dataclasses import dataclass
 from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import TimestampType
 
 AUDIT_SCHEMA = (
     "job_name string, job_id long, executable_cmd string, start_ts timestamp, "
@@ -39,6 +46,10 @@ AUDIT_SCHEMA = (
     # rounds read as null under the explicit schema.
     "widened long, kind_changed long, volume_dropped long, volume_surged long"
 )
+
+_ARROW_TYPES = {"string": pa.string(), "long": pa.int64(), "timestamp": pa.timestamp("us", tz="UTC")}
+#: AUDIT_SCHEMA as the pyarrow schema of a driver-written audit file
+_ARROW_SCHEMA = pa.schema([(name, _ARROW_TYPES[kind]) for name, kind in map(str.split, AUDIT_SCHEMA.split(","))])
 
 #: Spark's bundled embedded-Derby driver — the zero-install JDBC target
 #: used by the tests; deployments pass their own (postgres/mssql/...).
@@ -83,32 +94,62 @@ class AuditLog:
         volume_dropped: Optional[int] = None,
         volume_surged: Optional[int] = None,
     ) -> None:
-        row = [
-            (
-                self.job_name,
-                self.job_id,
-                self.executable_cmd,
-                start_ts,
-                end_ts,
-                job_status,
-                error_desc,
-                error_log_file,
-                batch_id,
-                self.table_name,
-                record_count_loaded,
-                widened,
-                kind_changed,
-                volume_dropped,
-                volume_surged,
-            )
-        ]
-        df = self.spark.createDataFrame(row, AUDIT_SCHEMA)
+        row = (
+            self.job_name,
+            self.job_id,
+            self.executable_cmd,
+            start_ts,
+            end_ts,
+            job_status,
+            error_desc,
+            error_log_file,
+            batch_id,
+            self.table_name,
+            record_count_loaded,
+            widened,
+            kind_changed,
+            volume_dropped,
+            volume_surged,
+        )
         if self.jdbc_url:
+            df = self.spark.createDataFrame([row], AUDIT_SCHEMA)
             self._jdbc_writer_options(
                 df.coalesce(1).write.format("jdbc").mode("append")
             ).save()
         else:
-            df.write.mode("append").parquet(self.path)
+            self._append(row)
+
+    def _append(self, row: tuple) -> None:
+        """Write ``row`` as one parquet file under ``path``. Timestamps
+        convert through ``TimestampType.toInternal``, as in
+        ``createDataFrame``, so naive and aware datetimes land on the same
+        instants as in the files Spark wrote."""
+        to_micros = TimestampType().toInternal
+        table = pa.Table.from_arrays(
+            [
+                pa.array([to_micros(v) if pa.types.is_timestamp(f.type) else v], f.type)
+                for f, v in zip(_ARROW_SCHEMA, row)
+            ],
+            schema=_ARROW_SCHEMA,
+        )
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        directory = Path(self.path)
+        fs = directory.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = Path(directory, "_" + name)
+        try:
+            out = fs.create(tmp, False)
+            try:
+                out.write(buf.getvalue().to_pybytes())
+            finally:
+                out.close()
+            if not fs.rename(tmp, Path(directory, name)):
+                raise OSError(f"could not move {tmp} to {name}")
+        except Exception:
+            fs.delete(tmp, False)
+            raise
 
     def success(
         self,

@@ -2,10 +2,12 @@
 
 The reference pages Elasticsearch with a ``search_after`` cursor on
 ``(auditProcessedDateTimeUtc, claimRequestId)`` (``ElasticSearch
-ETL.py:220-267``). The batch-mode Spark analog is a composite cursor
-predicate ``(ts, id) > (cursor_ts, cursor_id)`` + ordered limit: the
-predicate pushes into the scan (partition pruning when the data is
-partitioned by the cursor key), so each page reads only the tail.
+ETL.py:220-267``), one request per page. The batch-mode Spark analog
+scans once: one collect of the key columns, sorted in one task, which
+the driver cuts into pages. A resume cursor ``start`` becomes the
+composite predicate ``(ts, id) > (cursor_ts, cursor_id)``, which pushes
+into the scan (partition pruning when the data is partitioned by the
+cursor key).
 
 The predicate follows ``orderBy``'s ``ASC NULLS FIRST`` order, so rows
 with a null sort value page like any other (a null cursor value is
@@ -13,9 +15,11 @@ followed by every non-null one), and it is never NULL itself, so its
 negation is exact: "not after the cursor" is "on or before it".
 
 Pages bring only their key columns to the driver — the cursor and
-whatever names the page — never the documents. Use streaming checkpoints
-(streaming/export_job.py) when the source is continuous; use this when
-paging a static store.
+whatever names the page — never the documents. A page ends at
+``page_size`` rows; the rows tied with its last key on every sort
+column (null with null, NaN with NaN, as Spark compares) are in no
+later page. Use streaming checkpoints (streaming/export_job.py) when
+the source is continuous; use this when paging a static store.
 """
 
 from __future__ import annotations
@@ -23,7 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Iterator, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Observation, Row
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 
@@ -38,8 +42,7 @@ class Cursor:
 @dataclass(frozen=True)
 class Page:
     """One page: its key rows in sort order, the cursor after it, and
-    ``total``, the rows the whole pagination covers (counted on the first
-    page's scan)."""
+    ``total``, the rows the whole pagination covers."""
 
     rows: list[Row]
     cursor: Cursor
@@ -64,21 +67,10 @@ def after_predicate(sort_cols: Sequence[str], cursor: Cursor) -> Column:
     return pred
 
 
-def page_after(
-    df: DataFrame,
-    sort_cols: Sequence[str],
-    cursor: Optional[Cursor],
-    page_size: int,
-    observation: Optional[Observation] = None,
-) -> DataFrame:
-    """One page strictly after ``cursor`` in ``sort_cols`` order;
-    ``observation`` counts every row after ``cursor`` on the way."""
-    out = df
-    if cursor:
-        out = out.filter(after_predicate(sort_cols, cursor))
-    if observation is not None:
-        out = out.observe(observation, F.count(F.lit(1)).alias("n"))
-    return out.orderBy(*sort_cols).limit(page_size)
+def _tied(row: Row, cursor: Cursor, sort_cols: Sequence[str]) -> bool:
+    """``row`` equals ``cursor`` on every sort column, by Spark's rules:
+    null equals null (``<=>``) and NaN equals NaN."""
+    return all(a == b or (a != a and b != b) for a, b in zip((row[c] for c in sort_cols), cursor.values))
 
 
 def paginate(
@@ -90,27 +82,24 @@ def paginate(
 ) -> Iterator[Page]:
     """Iterate the pages after ``start`` until the source is exhausted.
 
-    Each page collects only ``sort_cols`` plus ``key_cols``. The first
-    page's scan also counts the rows after ``start`` (``Page.total``);
-    later pages page ``df`` itself, so their cursor predicate still
-    pushes into the scan, and paging stops once the pages cover that
-    total — no trailing empty-page collect. The cursor advance is
-    decoupled from any sink, so an empty sink write cannot stall it
-    (fixes the reference's A18 re-fetch bug). Rows tied with a page's
-    last key on every sort column are not in any later page; a caller
-    that wants them selects "not after" that page's cursor.
+    One Spark action collects ``sort_cols`` plus ``key_cols`` of every row
+    after ``start``: a parallel scan, then one single-task sort of those
+    key columns. The driver cuts the sorted keys into pages of
+    ``page_size``; ``Page.total`` is the number of rows after ``start``.
+    The cursor advance is decoupled from any sink, so an empty sink write
+    cannot stall it (fixes the reference's A18 re-fetch bug). Rows tied
+    with a page's cursor on every sort column are not in any later page;
+    a caller that wants them selects "not after" that page's cursor.
     """
     keys = df.select(*dict.fromkeys([*sort_cols, *key_cols]))
-    counted = Observation()
-    cursor, total, seen = start, None, 0
-    while total is None or seen < total:
-        rows = page_after(keys, sort_cols, cursor, page_size, counted if total is None else None).collect()
-        if not rows:
-            return
-        if total is None:
-            total = counted.get["n"]
-        cursor = Cursor(tuple(rows[-1][c] for c in sort_cols))
-        seen += len(rows)
-        yield Page(rows, cursor, total)
-        if len(rows) < page_size:
-            return
+    if start:
+        keys = keys.filter(after_predicate(sort_cols, start))
+    rows = keys.repartition(1).sortWithinPartitions(*sort_cols).collect()
+    i = 0
+    while i < len(rows):
+        page = rows[i : i + page_size]
+        cursor = Cursor(tuple(page[-1][c] for c in sort_cols))
+        i += len(page)
+        while i < len(rows) and _tied(rows[i], cursor, sort_cols):
+            i += 1
+        yield Page(page, cursor, len(rows))

@@ -10,6 +10,7 @@ import os
 import random
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,8 +21,8 @@ from etl_pipeline_for_elasticsearch_json_document_spark.functions.columns import
     transpose_preview,
 )
 from etl_pipeline_for_elasticsearch_json_document_spark.jobs import fetch_and_export_documents
-from etl_pipeline_for_elasticsearch_json_document_spark.sinks.audit import AuditLog
-from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Cursor, paginate
+from etl_pipeline_for_elasticsearch_json_document_spark.sinks.audit import AUDIT_SCHEMA, AuditLog
+from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Cursor, after_predicate, paginate
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.tables import load_table
 
 
@@ -53,6 +54,18 @@ def test_keyset_resume_from_cursor(spark, sf_dir):
     n_after = sum(len(p.rows) for p in resumed)
     assert n_after == events.count() - 400
     assert resumed[0].total == n_after
+
+
+def test_keyset_skips_nan_ties_like_the_predicate(spark):
+    """A page ending inside a run of NaN sort values: Spark compares NaN
+    equal to NaN, so the rest of the run is tied with the cursor and the
+    next page starts where ``after_predicate`` says it does."""
+    nan = float("nan")
+    df = spark.createDataFrame([(1, nan, 1), (1, nan, 2), (1, nan, 3), (2, 0.5, 4)], "g int, x double, id long")
+    pages = list(paginate(df, ["g", "x"], 2, key_cols=("id",)))
+    assert [len(p.rows) for p in pages] == [2, 1] and pages[0].total == 4
+    after = df.filter(after_predicate(["g", "x"], pages[0].cursor)).select("id").collect()
+    assert [r["id"] for r in pages[1].rows] == [r["id"] for r in after] == [4]
 
 
 def test_batch_export_job(spark, tmpdir):
@@ -346,6 +359,55 @@ def test_audit_jdbc_tier_round_trip(spark, tmpdir):
     assert rows["b2"]["job_status"] == "FAILED"
     assert rows["b2"]["record_count_loaded"] is None
     assert "boom" in rows["b2"]["error_desc"]
+
+
+@pytest.fixture()
+def new_york_time(monkeypatch):
+    """The driver's local time zone is not UTC, so a naive datetime taken
+    as UTC would land hours away from where ``createDataFrame`` puts it."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_audit_reads_spark_and_driver_written_rows_alike(spark, tmpdir, new_york_time):
+    """An audit directory holding a row the Spark writer wrote and rows
+    the driver wrote reads back as equal values: aware and naive
+    timestamps, null QA columns and FAILED rows included. No temp file
+    is left behind."""
+    path = os.path.join(tmpdir, "audit")
+    audit = AuditLog(spark, path)
+    aware = datetime.datetime(2025, 6, 1, 11, 30, 4, 123456, tzinfo=datetime.timezone.utc)
+    naive = datetime.datetime(2025, 6, 1, 11, 30, 5, 654321)
+    calls = [
+        dict(start_ts=aware, end_ts=naive, job_status="SUCCESS", batch_id="b", record_count_loaded=3),
+        dict(start_ts=naive, end_ts=aware, job_status="FAILED", batch_id="b", error_desc="boom",
+             widened=1, kind_changed=0, volume_surged=1),
+    ]
+    fixed = dict(job_name=audit.job_name, job_id=audit.job_id, executable_cmd=audit.executable_cmd,
+                 table_name=audit.table_name)
+    names = [field.split()[0] for field in AUDIT_SCHEMA.split(",")]
+    rows = [tuple({**fixed, **call}.get(n) for n in names) for call in calls]
+    spark.createDataFrame(rows[:1], AUDIT_SCHEMA).write.mode("append").parquet(path)
+    for call in calls:
+        audit.log(**call)
+
+    def read_back(v):  # a collected timestamp is naive, in local time
+        return v.astimezone().replace(tzinfo=None) if isinstance(v, datetime.datetime) and v.tzinfo else v
+
+    want = [tuple(map(read_back, row)) for row in [rows[0], *rows]]
+    assert sorted(map(tuple, audit.read().collect()), key=repr) == sorted(want, key=repr)
+    assert not [f for f in os.listdir(path) if f.startswith("_") and f != "_SUCCESS"]
+
+
+def test_audit_path_may_be_a_file_uri(spark, tmpdir):
+    audit = AuditLog(spark, "file://" + os.path.join(tmpdir, "audit"))
+    audit.success(datetime.datetime.now(datetime.timezone.utc), batch_id="b1", record_count=7)
+    assert [(r["batch_id"], r["record_count_loaded"]) for r in audit.read().collect()] == [("b1", 7)]
+    files = [f for f in os.listdir(os.path.join(tmpdir, "audit")) if not f.startswith(".")]
+    assert len(files) == 1 and files[0].startswith("part-") and files[0].endswith(".parquet"), files
 
 
 def test_audit_requires_exactly_one_storage_tier(spark):

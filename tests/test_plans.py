@@ -83,13 +83,12 @@ def test_knn_broadcasts_queries(spark):
 
 
 def test_keyset_predicate_pushdown(spark):
-    from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Cursor, page_after
+    """The resume cursor ``paginate(start=...)`` filters by reaches the scan."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Cursor, after_predicate
 
     orders = load_table(spark, SF_DIR, "orders")
-    page = page_after(
-        orders, ["o_orderdate", "o_orderkey"], Cursor(("1997-01-01 00:00:00", 42)), 100
-    )
-    plan = plan_text(page)
+    start = Cursor(("1997-01-01 00:00:00", 42))
+    plan = plan_text(orders.filter(after_predicate(["o_orderdate", "o_orderkey"], start)))
     assert "PushedFilters:" in plan
     pushed = plan.split("PushedFilters:")[1].splitlines()[0]
     assert "o_orderdate" in pushed  # composite cursor reaches the scan

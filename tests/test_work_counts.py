@@ -10,14 +10,17 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 
 import pytest
+from pyspark.sql import Row
 
 from perfbench import gen_docs
 
 from etl_pipeline_for_elasticsearch_json_document_spark import jobs
 from etl_pipeline_for_elasticsearch_json_document_spark.operators.sketches import count_min_cells
 from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten_plan
+from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Cursor, Page
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.rollup_job import (
     _rollup_batch_processor,
 )
@@ -50,10 +53,10 @@ def _export_jobs(spark, tmp_path, batch_size: int, name: str) -> int:
 
 
 def test_export_job_count(spark, tmp_path, monkeypatch):
-    """10 documents in 2 pages: 2 key collects, 1 flatten discovery job,
-    the one write (shuffle map + result) and the audit append. Extra
-    pages add only their key collects, and the TSV write runs once per
-    export whatever the page count."""
+    """10 documents in 2 pages: the key collect (shuffle map + result),
+    1 flatten discovery job and the one write (shuffle map + result).
+    The audit row is written from the driver. The count does not depend
+    on the page count, and the TSV write runs once per export."""
     writes = []
     real = jobs.write_tsv
 
@@ -62,10 +65,35 @@ def test_export_job_count(spark, tmp_path, monkeypatch):
         return real(*args, **kwargs)
 
     monkeypatch.setattr(jobs, "write_tsv", counting_write)
-    two_pages = _export_jobs(spark, tmp_path, 5, "two-pages")
-    assert two_pages == 6
-    assert _export_jobs(spark, tmp_path, 2, "five-pages") == two_pages + 3
+    assert _export_jobs(spark, tmp_path, 5, "two-pages") == 5
+    assert _export_jobs(spark, tmp_path, 2, "five-pages") == 5
     assert len(writes) == 2
+
+
+def _label_plans(spark, n_pages: int) -> tuple[int, int]:
+    """(analysed plan string length, optimised label expression node
+    count) of the page labels for ``n_pages`` one-row pages."""
+    sort_cols = ["auditProcessedDateTimeUtc", "claimRequestId"]
+    df = spark.createDataFrame([], "auditProcessedDateTimeUtc string, claimRequestId long")
+    pages = []
+    for i in range(n_pages):
+        key = (f"2025-06-01T11:{i // 60:02d}:{i % 60:02d}Z", i)
+        pages.append(Page([Row(**dict(zip(sort_cols, key)))], Cursor(key), n_pages))
+    qe = df.withColumn("_page", jobs._page_labels(pages, sort_cols, "claimRequestId"))._jdf.queryExecution()
+    analysed = re.sub(r"#\d+L?", "", qe.analyzed().toString())  # expression ids vary by session
+    return len(analysed), qe.optimizedPlan().expressions().last().treeString().count("\n")
+
+
+def test_page_label_plan_size(spark):
+    """The page labels hold the cursors and names as two arrays, which
+    the optimiser folds into two literals: the label expression is the
+    same 18 nodes at 2 and at 200 pages. The analysed plan string prints
+    at most ``maxToStringFields`` elements of each array, so it stays
+    under 3.6k characters at 200 pages; one CASE branch per page made it
+    56.7k (0.46k at 2 pages)."""
+    (short, nodes_2), (long, nodes_200) = _label_plans(spark, 2), _label_plans(spark, 200)
+    assert nodes_2 == nodes_200 == 18
+    assert short < 700 and long < 3600, (short, long)
 
 
 def _frame(spark, tmp_path, kind: str):
