@@ -1,24 +1,30 @@
-"""Batch export job: the reference's ``fetch_and_export_documents``
-(``ElasticSearch ETL.py:201-300``) as a Spark batch pipeline.
+"""The export: the reference's ``fetch_and_export_documents``
+(``ElasticSearch ETL.py:201-300``) as a Spark batch pipeline, and the
+one staged back that it shares with every export micro-batch
+(streaming/export_job.py).
+
+Two entry points, one back:
+- the batch front (:func:`fetch_and_export_documents`) pages: the keyset
+  pager (sources/keyset.py) only finds the page boundaries (one collect
+  brings every row's sort keys and id to the driver, never the
+  documents, and its length is the A1 count), then every row is tagged
+  with its page's A17 directory name and shuffled so that each page
+  lands whole in one task;
+- a micro-batch is one page, labelled before its write and named after
+  it, from the write's own observed ``max(id)``;
+- the back (:func:`_stage_and_publish`) flattens once (the same
+  within-run schema union as the reference's per-call discovery, but
+  paid once) and writes ONE partitioned TSV job (one directory per page)
+  into a staging directory; the page directories are moved into
+  ``output_dir`` only after that write commits and its observed row
+  count matches the A1 count, so a failed export leaves no partial
+  pages; an empty write publishes nothing (A18).
 
 Differences by design (documented, not accidental):
-- the keyset pager (sources/keyset.py) only finds the page boundaries:
-  one collect brings every row's sort keys and id to the driver, never
-  the documents, and its length is the A1 count;
-- every row is then tagged with its page's A17 directory name, and the
-  whole export is flattened once and written by ONE partitioned TSV job
-  (one part file per page, rows in sort order) into a staging directory;
-  the page directories are moved into ``output_dir`` only after that
-  write commits and its row count matches the A1 count, so a failed
-  export leaves no partial pages (one write per page left the pages
-  written before a failure behind);
 - per-batch TSV naming and SUCCESS/FAILED audit rows match A16-A21; a
   row tied with a page's last sort key joins that page, which may then
   hold more than ``batch_size`` rows;
-- the flatten plan is generated once for the whole export (the same
-  within-run schema union as the reference's per-call discovery, but
-  paid once);
-- an export runs five Spark jobs whatever its page count: the key
+- a batch export runs five Spark jobs whatever its page count: the key
   collect and the write (a shuffle map and a result job each) and the
   flatten discovery; the audit row is written from the driver.
 """
@@ -29,6 +35,7 @@ import contextlib
 import datetime
 import os
 import uuid
+from typing import Callable, NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +50,7 @@ from etl_pipeline_for_elasticsearch_json_document_spark.sinks.audit import Audit
 from etl_pipeline_for_elasticsearch_json_document_spark.sinks.tsv import batch_tsv_path, write_tsv
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Page, paginate
 
-#: partition column of the one write: the A17 directory name of a row's page
+#: partition column of the one write: the label of a row's page
 _PAGE = "_page"
 
 
@@ -65,24 +72,88 @@ def _page_labels(pages: list[Page], sort_cols, id_col: str) -> Column:
     return F.element_at(F.array(*map(F.lit, names)), passed + 1)
 
 
-def _publish(spark: SparkSession, fs, staging: str, output_dir: str, placed: list) -> None:
-    """Move each committed ``_page=<name>`` directory to ``output_dir/<name>``
-    with a ``_SUCCESS`` marker, replacing a same-named directory, then
-    delete the staging directory. Hadoop ``FileSystem`` calls, so any
-    scheme the TSV writer accepts works here too."""
+def _publish(spark: SparkSession, fs, staging: str, output_dir: str, placed: list, name: Optional[str]) -> None:
+    """Move each committed ``_page=<label>`` directory to
+    ``output_dir/<label>`` (``output_dir/<name>`` when a name is given)
+    with a ``_SUCCESS`` marker, replacing a same-named directory. Hadoop
+    ``FileSystem`` calls, so any scheme the TSV writer accepts works here
+    too."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
     unescape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
     for status in fs.listStatus(Path(staging)):
-        name = status.getPath().getName()
-        if not name.startswith(_PAGE + "="):
+        label = status.getPath().getName()
+        if not label.startswith(_PAGE + "="):
             continue
-        dest = Path(output_dir, unescape(name[len(_PAGE) + 1 :]))
+        dest = Path(output_dir, name or unescape(label[len(_PAGE) + 1 :]))
         fs.delete(dest, True)
         if not fs.rename(status.getPath(), dest):
             raise OSError(f"could not move {status.getPath()} to {dest}")
         placed.append(dest)
         fs.create(Path(dest, "_SUCCESS"), True).close()
-    fs.delete(Path(staging), True)
+
+
+class Written(NamedTuple):
+    """What the back wrote: the observed row count, the observed
+    ``max(id_col)`` (None without that column) and the flattened frame."""
+
+    n: int
+    last_id: object
+    flat: DataFrame
+
+    @property
+    def columns(self) -> list[str]:
+        """The TSV header."""
+        return [c for c in self.flat.columns if c != _PAGE]
+
+
+def _stage_and_publish(
+    spark: SparkSession,
+    docs: DataFrame,
+    paged: DataFrame,
+    output_dir: str,
+    id_col: str,
+    bug_compat: bool,
+    expected: Optional[int] = None,
+    name: Optional[Callable[[object], str]] = None,
+) -> Written:
+    """The export's back. ``paged`` is ``docs`` with each row's page
+    label in ``_PAGE``: it is flattened once with the stages discovered
+    on ``docs`` and written by ONE TSV job partitioned by ``_PAGE`` into
+    ``output_dir/_staging_<uuid>``, under an Observation of the row count
+    and ``max(id_col)``. A count other than ``expected`` raises; a count
+    of 0 publishes nothing; otherwise every page directory moves into
+    ``output_dir``, under ``name(last_id)`` when given. The staging
+    directory is always removed, and a failure also removes what was
+    published before it re-raises. An empty batch parsed with its own
+    inferred schema has no column to write: its count is 0 and nothing is
+    written (documents that all lack any field still fail the write)."""
+    if not docs.columns and docs.isEmpty():
+        return Written(0, None, docs)
+    stages = flatten_stages(docs, bug_compat=bug_compat)
+    metrics = [F.count(F.lit(1)).alias("n")]
+    if id_col in docs.columns:
+        metrics.append(F.max(id_col).alias("last_id"))
+    observed = Observation()
+    flat = apply_flatten_stages(paged.observe(observed, *metrics), [*stages[:-1], [*stages[-1], _PAGE]])
+    staging = os.path.join(output_dir, f"_staging_{uuid.uuid4().hex}")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(staging).getFileSystem(spark._jsc.hadoopConfiguration())
+    placed: list = []
+    try:
+        with wide_flatten_conf(spark):  # one 600+-column projection
+            write_tsv(flat, staging, partition_by=_PAGE)
+        n, last_id = observed.get["n"], observed.get.get("last_id")
+        if expected is not None and n != expected:
+            raise RuntimeError(f"export wrote {n} rows but counted {expected} source documents")
+        if n:
+            _publish(spark, fs, staging, output_dir, placed, name(last_id) if name else None)
+        fs.delete(Path(staging), True)
+    except Exception:
+        with contextlib.suppress(Exception):
+            for p in [*placed, Path(staging)]:
+                fs.delete(p, True)
+        raise
+    return Written(n, last_id, flat)
 
 
 def fetch_and_export_documents(
@@ -100,37 +171,22 @@ def fetch_and_export_documents(
     start_ts = datetime.datetime.now(datetime.timezone.utc)
     batch_id = start_ts.strftime("%Y%m%d%H%M%S")  # A21 run-id scheme
     audit = AuditLog(spark, audit_path)
-    staging = os.path.join(output_dir, f"_staging_{uuid.uuid4().hex}")
-    fs, placed = None, []
     try:
         docs = unwrap_envelope(source)
         pages = list(paginate(docs, sort_cols, batch_size, key_cols=(id_col,)))
         total = pages[0].total if pages else 0  # A1 count
         written = 0
         if pages:  # an empty source writes nothing
-            stages = flatten_stages(docs, bug_compat=bug_compat)
             # the shuffle moves the raw documents, not the wide flattened
             # rows; each page lands whole in one task, so one part file
-            tagged = (
+            paged = (
                 docs.withColumn(_PAGE, _page_labels(pages, sort_cols, id_col))
                 .repartition(_PAGE)
                 .sortWithinPartitions(_PAGE, *sort_cols)
             )
-            flat = apply_flatten_stages(tagged, [*stages[:-1], [*stages[-1], _PAGE]])
-            counted = Observation()
-            fs = spark._jvm.org.apache.hadoop.fs.Path(staging).getFileSystem(spark._jsc.hadoopConfiguration())
-            with wide_flatten_conf(spark):  # one 600+-column projection
-                write_tsv(flat.observe(counted, F.count(F.lit(1)).alias("n")), staging, partition_by=_PAGE)
-            written = counted.get["n"]
-            if written != total:
-                raise RuntimeError(f"export wrote {written} rows but counted {total} source documents")
-            _publish(spark, fs, staging, output_dir, placed)
+            written = _stage_and_publish(spark, docs, paged, output_dir, id_col, bug_compat, expected=total).n
         audit.success(start_ts, batch_id=batch_id, record_count=total)
         return written
     except Exception as e:
-        if fs is not None:
-            with contextlib.suppress(Exception):
-                for p in [*placed, spark._jvm.org.apache.hadoop.fs.Path(staging)]:
-                    fs.delete(p, True)
         audit.failure(start_ts, batch_id=batch_id, error=e)
         raise

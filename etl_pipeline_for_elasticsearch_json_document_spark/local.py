@@ -79,8 +79,11 @@ def _doc_column_names(
             if isinstance(v, dict):
                 todo.append((v, name, depth + 1))
             elif isinstance(v, list) and v and isinstance(v[0], dict):
+                # a null element has no columns, as in the Spark flatten
                 todo.extend(
-                    (item, f"{name}{sep}{i}", depth + 1) for i, item in enumerate(v)
+                    (item, f"{name}{sep}{i}", depth + 1)
+                    for i, item in enumerate(v)
+                    if item is not None
                 )
             else:
                 # primitive, empty list, or list of primitives → one column

@@ -28,13 +28,11 @@ def batch_tsv_path(
     return os.path.join(output_dir, f"{prefix}_{last_id}_{ts}.tsv")
 
 
-def write_tsv(df: DataFrame, path: str, coalesce: int | None = None, partition_by: str | None = None) -> None:
-    """Tab-separated files with header (reference ``to_csv(sep='\\t')``).
-    ``coalesce=1`` reproduces the reference's one-file-per-batch layout for
-    small batches; leave None for parallel part files. ``partition_by``
-    writes one ``<col>=<value>`` directory per value of that column."""
-    out = df.coalesce(coalesce) if coalesce else df
-    writer = out.write.partitionBy(partition_by) if partition_by else out.write
+def write_tsv(df: DataFrame, path: str, partition_by: str | None = None) -> None:
+    """Tab-separated files with header (reference ``to_csv(sep='\\t')``),
+    one part file per task. ``partition_by`` writes one ``<col>=<value>``
+    directory per value of that column."""
+    writer = df.write.partitionBy(partition_by) if partition_by else df.write
     (
         writer.mode("overwrite")
         .option("sep", "\t")

@@ -9,9 +9,12 @@ Reference loop → Spark mapping:
 - per-batch ``json_to_tsv_in_memory`` (A4-A15) → per-micro-batch flatten
   inside ``foreachBatch`` (per-batch dynamic schema, exactly the
   reference's union-within-batch semantics)
-- per-batch TSV file naming (A16-A17)          → ``batch_tsv_path`` dirs
+- per-batch TSV file naming (A16-A17)          → the batch export's staged
+  write (``jobs._stage_and_publish``), published under the
+  ``batch_tsv_path`` name of the write's observed max id
 - SQL audit row on success/failure (A20-A21)   → AuditLog parquet appends
-- empty-batch guard (A18)                      → ``batch_df.isEmpty()``
+- empty-batch guard (A18)                      → the staged write's observed
+  count: 0 publishes no directory and logs no audit row
 
 The source here is a file stream (JSON documents dropped into a
 directory — the ES connector analog); any streaming source slots in
@@ -26,13 +29,14 @@ import os
 import sys
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_for_elasticsearch_json_document_spark import jobs
 from etl_pipeline_for_elasticsearch_json_document_spark.operators import delta_store
-from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten
+from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import unwrap_envelope
 from etl_pipeline_for_elasticsearch_json_document_spark.sinks.audit import AuditLog
-from etl_pipeline_for_elasticsearch_json_document_spark.sinks.tsv import batch_tsv_path, write_tsv
+from etl_pipeline_for_elasticsearch_json_document_spark.sinks.tsv import batch_tsv_path
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.identity import (
     start_foreach_batch,
 )
@@ -108,7 +112,7 @@ def run_export_stream(
 
 def _watch_flags(
     batch_df: DataFrame,
-    flat: DataFrame,
+    written,
     watch_dir: str,
     ckpt_id: str,
     batch_id: int,
@@ -126,9 +130,9 @@ def _watch_flags(
 
     - ``widened`` (1/0): the flatten output's column count grew ≥1.5×
       (integer-exact ``2·cur ≥ 3·prev``, the q249 rule). The count is
-      ``len(flat.columns)`` — literally the width of the TSV this batch
-      writes, so the contract gates the exact artifact (no second walk,
-      no extra scan).
+      ``len(written.columns)`` — the header of the TSV this batch wrote
+      (the staged back's ``jobs.Written``), so the contract gates the
+      exact artifact (no second walk, no extra scan).
     - ``kind_changed`` (1/0): any top-level path present in BOTH batches
       whose scalar-kind set moved (the q246 rule; new/missing paths are
       schema-union growth, not kind drift). One map-side aggregate over
@@ -153,7 +157,7 @@ def _watch_flags(
         json_schema_profile,
     )
 
-    n_cols = len(flat.columns)
+    n_cols = len(written.columns)
     jdf = batch_df.select(
         F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("j"),
         F.lit(0).alias("b"),
@@ -219,13 +223,15 @@ def _export_batch_processor(
     watch_dir: str | None = None,
 ):
     """The per-micro-batch body shared by every export stream (file-fed or
-    ES-tailed): A18 empty guard → optional source parse → flatten →
-    A16/A17 TSV naming → A20/A21 audit, with the exactly-once replay
-    ledger keyed on (epoch, checkpoint lineage). ``watch_dir`` arms the
-    per-batch width/kind contract (:func:`_watch_flags`): verdicts land
-    in the audit row's ``widened``/``kind_changed`` columns,
-    flag-and-continue — an alarmed batch still writes its TSV, and a
-    failure inside the watch itself never fails the export."""
+    ES-tailed): optional source parse → the batch export's staged back
+    (one flatten, one TSV write, publish under the A16/A17 name) → A18
+    empty guard on the write's observed count → A20/A21 audit, with the
+    exactly-once replay ledger keyed on (epoch, checkpoint lineage).
+    ``watch_dir`` arms the per-batch width/kind contract
+    (:func:`_watch_flags`): verdicts land in the audit row's
+    ``widened``/``kind_changed`` columns, flag-and-continue — an alarmed
+    batch still writes its TSV, and a failure inside the watch itself
+    never fails the export."""
 
     def _epoch_key(batch_id: int) -> str:
         return f"{batch_id}@{ckpt_id}"
@@ -233,8 +239,6 @@ def _export_batch_processor(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         start_ts = datetime.datetime.now(datetime.timezone.utc)
         try:
-            if batch_df.isEmpty():  # A18 guard (without the cursor bug)
-                return
             if exactly_once:
                 # foreachBatch is at-least-once: a batch replayed after a
                 # crash between write and checkpoint commit must not write
@@ -257,34 +261,25 @@ def _export_batch_processor(
                     return
             if parse_batch is not None:  # after the ledger: skipped
                 batch_df = parse_batch(batch_df)  # replays never pay parse
-            # The output directory is named by the batch's last cursor id
-            # (A17), which must be known before the write — that pre-pass
-            # stays, but it is a single-column max, not a full-row scan.
-            last_id = "batch"
-            if id_col in batch_df.columns:
-                last = batch_df.select(F.max(F.col(id_col)).alias("m")).first()
-                if last and last["m"] is not None:
-                    last_id = last["m"]
-            # The row count rides along the TSV write as an Observation —
-            # collected by the job that materializes the batch, replacing
-            # the separate count() scan per micro-batch.
-            obs = Observation(f"export_batch_{batch_id}")
-            observed = batch_df.observe(obs, F.count(F.lit(1)).alias("n"))
-            flat = flatten(observed, bug_compat=bug_compat)
-            # small micro-batches collapse to one TSV file; wide ones keep
-            # their partitioning (decided from partition count — no scan)
-            one_file = batch_df.rdd.getNumPartitions() <= 8
-            if exactly_once:
-                import os
 
-                path = os.path.join(
-                    output_dir,
-                    f"rta_claim_headers_epoch{batch_id:06d}_{ckpt_id}.tsv",
-                )
-            else:
-                path = batch_tsv_path(output_dir, last_id)
-            write_tsv(flat, path, coalesce=1 if one_file else None)
-            n = obs.get["n"]  # filled: the write above materialized the batch
+            def name(last_id) -> str:  # A17, from the write's observed max id
+                if exactly_once:
+                    return f"rta_claim_headers_epoch{batch_id:06d}_{ckpt_id}.tsv"
+                return batch_tsv_path("", "batch" if last_id is None else last_id)
+
+            # a micro-batch is one page, so it keeps its own partitioning
+            docs = unwrap_envelope(batch_df)
+            written = jobs._stage_and_publish(
+                batch_df.sparkSession,
+                docs,
+                docs.withColumn(jobs._PAGE, F.lit("batch")),
+                output_dir,
+                id_col,
+                bug_compat,
+                name=name,
+            )
+            if not written.n:  # A18 guard (without the cursor bug)
+                return
             # ingest-QA verdict between the write and its audit row —
             # flag-and-continue: the TSV is already written whatever the
             # flags say, the volume axis reuses the write's own observed
@@ -296,7 +291,8 @@ def _export_batch_processor(
                 try:
                     widened, kind_changed, vol_dropped, vol_surged = (
                         _watch_flags(
-                            batch_df, flat, watch_dir, ckpt_id, batch_id, n
+                            batch_df, written, watch_dir, ckpt_id, batch_id,
+                            written.n,
                         )
                     )
                 except Exception as we:
@@ -308,7 +304,7 @@ def _export_batch_processor(
             audit.success(
                 start_ts,
                 batch_id=_epoch_key(batch_id),
-                record_count=n,
+                record_count=written.n,
                 widened=widened,
                 kind_changed=kind_changed,
                 volume_dropped=vol_dropped,
@@ -319,6 +315,13 @@ def _export_batch_processor(
             raise
 
     return process_batch
+
+
+def _parse_source_json(batch_df: DataFrame) -> DataFrame:
+    """An ``es_tail`` micro-batch's ``_source`` payloads, parsed with the
+    batch's own inferred schema."""
+    strs = batch_df.select("source_json").rdd.map(lambda r: r[0])
+    return batch_df.sparkSession.read.json(strs)
 
 
 def run_es_tail_export_stream(
@@ -371,17 +374,13 @@ def run_es_tail_export_stream(
         reader = reader.option("start_after", start_after)
     src = reader.load()
 
-    def parse_batch(batch_df: DataFrame) -> DataFrame:
-        strs = batch_df.select("source_json").rdd.map(lambda r: r[0])
-        return batch_df.sparkSession.read.json(strs)
-
     audit = AuditLog(spark, audit_path)
     return start_foreach_batch(
         src,
         checkpoint_dir,
         lambda ckpt_id: _export_batch_processor(
             output_dir, audit, ckpt_id, id_col, bug_compat, exactly_once,
-            parse_batch=parse_batch, watch_dir=watch_dir,
+            parse_batch=_parse_source_json, watch_dir=watch_dir,
         ),
         trigger_available_now,
     )

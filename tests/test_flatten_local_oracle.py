@@ -29,6 +29,7 @@ CASES = {
         ],
         4,
     ),
+    "null-element": ([{"arr": [{"x": 1}, None, {"x": 3}], "id": 1}], 3),
 }
 
 

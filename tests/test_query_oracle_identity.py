@@ -31,7 +31,12 @@ def test_registry_names_match_pin():
 
 
 def test_oracle_hashes_match_pin():
+    """Every registered query has a non-empty oracle, and its hash is the
+    pinned one."""
     pinned = json.loads(PIN.read_text())
-    got = {name: _sha(q.oracle) for name, q in all_queries().items()}
+    queries = all_queries()
+    missing = sorted(n for n, q in queries.items() if not (isinstance(q.oracle, str) and q.oracle.strip()))
+    assert not missing, f"queries registered without an oracle: {missing}"
+    got = {name: _sha(q.oracle) for name, q in queries.items()}
     changed = sorted(n for n in pinned if got.get(n) != pinned[n])
     assert not changed, f"oracle SQL changed for {changed}"

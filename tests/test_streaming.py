@@ -96,6 +96,64 @@ def test_export_stream_incremental_checkpoint(spark, tmpdir):
     assert second.count() == 1
 
 
+def _micro_batch_processor(spark, tmpdir, parse_batch=None):
+    from etl_pipeline_for_elasticsearch_json_document_spark.sinks.audit import AuditLog
+    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.export_job import (
+        _export_batch_processor,
+    )
+
+    audit = AuditLog(spark, os.path.join(tmpdir, "audit"))
+    proc = _export_batch_processor(
+        os.path.join(tmpdir, "out"), audit, "lin", "claimRequestId", False, False,
+        parse_batch=parse_batch,
+    )
+    return proc, audit
+
+
+def test_export_micro_batch_failed_write_leaves_nothing(spark, tmpdir, monkeypatch):
+    """A micro-batch whose staged write fails after writing publishes no
+    batch directory, leaves no staging directory, logs one FAILED audit
+    row and raises."""
+    from etl_pipeline_for_elasticsearch_json_document_spark import jobs
+
+    real = jobs.write_tsv
+
+    def write_then_fail(*args, **kwargs):
+        real(*args, **kwargs)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(jobs, "write_tsv", write_then_fail)
+    proc, audit = _micro_batch_processor(spark, tmpdir)
+    batch = spark.createDataFrame([(i, "x") for i in range(5)], "claimRequestId long, v string")
+    with pytest.raises(OSError, match="disk full"):
+        proc(batch, 0)
+    out = os.path.join(tmpdir, "out")
+    assert glob.glob(os.path.join(out, "rta_claim_headers_*")) == []
+    assert glob.glob(os.path.join(out, "_staging_*")) == []
+    rows = audit.read().collect()
+    assert [r["job_status"] for r in rows] == ["FAILED"] and "disk full" in rows[0]["error_desc"]
+
+
+@pytest.mark.parametrize("parsed", [False, True], ids=["file-fed", "parse_batch"])
+def test_export_empty_micro_batch_writes_nothing(spark, tmpdir, parsed):
+    """An empty micro-batch (A18) writes no directory and no audit row,
+    whether it comes from a file stream or is parsed from ``es_tail``
+    payloads with its own inferred schema."""
+    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.export_job import (
+        _parse_source_json,
+    )
+
+    empty = os.path.join(tmpdir, "empty.json")
+    open(empty, "w").close()
+    schema = "source_json string" if parsed else "claimRequestId long, v string"
+    batch = spark.read.schema(schema).json(empty)
+    proc, audit = _micro_batch_processor(spark, tmpdir, _parse_source_json if parsed else None)
+    proc(batch, 0)
+    out = os.path.join(tmpdir, "out")
+    assert not os.path.exists(out) or os.listdir(out) == []
+    assert not os.path.exists(os.path.join(tmpdir, "audit"))
+
+
 def _stream_events(spark, sf_dir, tmpdir):
     """Replay the events table as a file stream (one parquet dir)."""
     src = os.path.join(tmpdir, "events_src")
@@ -367,79 +425,6 @@ def test_interval_join_stream_matches_batch(spark, sf_dir, tmpdir):
     }
     assert got == expected
     assert len(got) > 0
-
-
-def test_transform_with_state_sessionize_parity(spark, tmpdir):
-    """The transformWithState sessionizer must emit exactly the same
-    sessions as the applyInPandasWithState one on a replayed two-batch
-    scenario (closed-on-gap, timer-flushed, and late-event cases)."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState state protocol needs protobuf"
-    )
-    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.stateful import (
-        sessionize_stream,
-    )
-    from etl_pipeline_for_elasticsearch_json_document_spark.streaming.tws import sessionize_tws
-
-    # Batch sequence exercises: closed-on-gap, late merge-backward, and —
-    # critically — a session EXTENDED across batches so the old and new
-    # timer expiries differ (b2..b4 for user 1). A sessionizer that leaks
-    # the superseded timer prematurely closes user 1's session when the
-    # watermark passes the stale expiry (10:35) in b3, then splits the
-    # b4 event into a second session — caught by the n_events==5 assert.
-    b1 = [
-        {"user_id": 1, "ts": "2024-01-01 10:00:00"},
-        {"user_id": 1, "ts": "2024-01-01 10:05:00"},
-        {"user_id": 2, "ts": "2024-01-01 10:00:00"},
-        {"user_id": 2, "ts": "2024-01-01 12:00:00"},  # closes u2's first session
-    ]
-    b2 = [
-        {"user_id": 1, "ts": "2024-01-01 10:30:00"},  # extends: expiry 10:35→11:00
-        {"user_id": 2, "ts": "2024-01-01 11:50:00"},  # late, merges backward
-        {"user_id": 5, "ts": "2024-01-01 16:40:00"},  # watermark → 10:40 (> stale 10:35)
-    ]
-    b3 = [
-        {"user_id": 1, "ts": "2024-01-01 10:55:00"},  # extends again: expiry → 11:25
-    ]
-    b4 = [
-        {"user_id": 1, "ts": "2024-01-01 11:10:00"},  # merges ONLY if session still open
-        {"user_id": 6, "ts": "2024-01-03 00:00:00"},  # advances watermark, flushes all
-    ]
-
-    def run(op, name, batch, fname):
-        # Per-operator input dir: a shared dir would hand the second
-        # operator every batch file in ONE availableNow run, collapsing
-        # the per-batch watermark/timer progression under test.
-        inp = os.path.join(tmpdir, f"in_{name}")
-        os.makedirs(inp, exist_ok=True)
-        with open(os.path.join(inp, fname), "w") as f:
-            for r in batch:
-                f.write(json.dumps(r) + "\n")
-        stream = spark.readStream.schema("user_id bigint, ts timestamp").json(inp)
-        sessions = op(stream, gap_minutes=30, watermark="6 hours")
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", os.path.join(tmpdir, f"out_{name}"))
-            .option("checkpointLocation", os.path.join(tmpdir, f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600), "stream drain timed out"
-        return spark.read.parquet(os.path.join(tmpdir, f"out_{name}"))
-
-    results = {}
-    for name, op in (("apiws", sessionize_stream), ("tws", sessionize_tws)):
-        out = None
-        for i, batch in enumerate((b1, b2, b3, b4)):
-            out = run(op, name, batch, f"b{i}.json")
-        results[name] = {
-            (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-            for r in out.collect()
-        }
-    assert results["apiws"] == results["tws"], results
-    u1 = [s for s in results["tws"] if s[0] == 1]
-    assert len(u1) == 1 and u1[0][3] == 5, u1  # one unsplit 5-event session
-    assert len(results["tws"]) >= 4
 
 
 def test_stream_static_enrichment_matches_batch(spark, sf_dir, tmpdir):

@@ -1,6 +1,6 @@
-"""Counted work per call: Spark jobs run by flatten discovery and by the
-batch export, pinned as equalities so a regression reads as a failure,
-not as noise.
+"""Counted work per call: Spark jobs run by flatten discovery, by the
+batch export and by an export micro-batch, pinned as equalities so a
+regression reads as a failure, not as noise.
 
 A lower count updates the pin (and is recorded in CHANGES.md); a higher
 count fails the test.
@@ -20,7 +20,11 @@ from perfbench import gen_docs
 from etl_pipeline_for_elasticsearch_json_document_spark import jobs
 from etl_pipeline_for_elasticsearch_json_document_spark.operators.sketches import count_min_cells
 from etl_pipeline_for_elasticsearch_json_document_spark.plans.flatten import flatten_plan
+from etl_pipeline_for_elasticsearch_json_document_spark.sinks.audit import AuditLog
 from etl_pipeline_for_elasticsearch_json_document_spark.sources.keyset import Cursor, Page
+from etl_pipeline_for_elasticsearch_json_document_spark.streaming.export_job import (
+    _export_batch_processor,
+)
 from etl_pipeline_for_elasticsearch_json_document_spark.streaming.rollup_job import (
     _rollup_batch_processor,
 )
@@ -40,10 +44,29 @@ def job_group(spark, name: str):
         counted.append(len(sc.statusTracker().getJobIdsForGroup(name)))
 
 
-def _export_jobs(spark, tmp_path, batch_size: int, name: str) -> int:
+def _docs(spark, tmp_path, name: str):
+    """10 gen_docs documents read from a file; schema inference stays
+    outside any job group."""
     path = tmp_path / f"{name}.json"
     path.write_bytes(gen_docs.dumps_lines(gen_docs.make_documents(1, 10, max_lines=1)))
-    src = spark.read.json(str(path))  # schema inference stays outside the group
+    return spark.read.json(str(path))
+
+
+def _count_writes(monkeypatch) -> list:
+    """Record the path of every ``jobs.write_tsv`` call."""
+    writes = []
+    real = jobs.write_tsv
+
+    def counting_write(*args, **kwargs):
+        writes.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(jobs, "write_tsv", counting_write)
+    return writes
+
+
+def _export_jobs(spark, tmp_path, batch_size: int, name: str) -> int:
+    src = _docs(spark, tmp_path, name)
     with job_group(spark, name) as jobs_run:
         n = jobs.fetch_and_export_documents(
             spark, src, os.fspath(tmp_path / f"{name}-out"), os.fspath(tmp_path / f"{name}-audit"), batch_size=batch_size
@@ -57,17 +80,33 @@ def test_export_job_count(spark, tmp_path, monkeypatch):
     1 flatten discovery job and the one write (shuffle map + result).
     The audit row is written from the driver. The count does not depend
     on the page count, and the TSV write runs once per export."""
-    writes = []
-    real = jobs.write_tsv
-
-    def counting_write(*args, **kwargs):
-        writes.append(args[1])
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(jobs, "write_tsv", counting_write)
+    writes = _count_writes(monkeypatch)
     assert _export_jobs(spark, tmp_path, 5, "two-pages") == 5
     assert _export_jobs(spark, tmp_path, 2, "five-pages") == 5
     assert len(writes) == 2
+
+
+@pytest.mark.parametrize("exactly_once, per_batch", [(False, 2), (True, 4)])
+def test_export_micro_batch_job_count(spark, tmp_path, monkeypatch, exactly_once, per_batch):
+    """A file-fed export micro-batch runs the batch export's back: 1
+    flatten discovery job and the one write; no emptiness check and no
+    max-id pre-pass (the write's Observation gives both). With
+    ``exactly_once``, every batch after the first also runs the audit
+    ledger's 2 jobs. Each micro-batch makes one TSV write."""
+    writes = _count_writes(monkeypatch)
+    batch = _docs(spark, tmp_path, "micro-batch")
+    audit = AuditLog(spark, os.fspath(tmp_path / "audit"))
+    proc = _export_batch_processor(
+        os.fspath(tmp_path / "out"), audit, "lin", "claimRequestId", False, exactly_once
+    )
+    counts = []
+    for batch_id in range(3):
+        with job_group(spark, f"micro-batch-{exactly_once}-{batch_id}") as jobs_run:
+            proc(batch, batch_id)
+        counts.append(jobs_run[0])
+    assert counts[1:] == [per_batch, per_batch]
+    assert len(writes) == 3
+    assert [r["record_count_loaded"] for r in audit.read().collect()] == [10] * 3
 
 
 def _label_plans(spark, n_pages: int) -> tuple[int, int]:
